@@ -1,9 +1,10 @@
-"""Shared helpers for the batch-keyed state layout every incremental
-streaming module uses (``<state>/<sub>/batch=<id>`` contribution dirs,
-``v=<id>`` baseline versions).
+"""The streaming-maintainer skeleton every incremental module shares: the
+query start path (:func:`start_maintainer`) and the batch-keyed state
+layout (``<state>/<sub>/batch=<id>`` contribution dirs folded into
+``<state>/<sub>/baseline/v=<k>`` committed baselines).
 
-One definition instead of a per-module copy: a future layout change
-(object storage, different dir scheme) lands here once.
+One definition instead of a per-module copy: a future layout or trigger
+change (object storage, different dir scheme) lands here once.
 """
 
 from __future__ import annotations
@@ -12,6 +13,51 @@ import json
 import os
 import re
 import shutil
+from typing import Callable
+
+
+def trigger_args(trigger_seconds: int | None) -> dict:
+    """``DataStreamWriter.trigger`` kwargs: None drains what is available
+    and stops (``availableNow``); any int, 0 included, is a running
+    ``processingTime`` query."""
+    if trigger_seconds is None:
+        return {"availableNow": True}
+    return {"processingTime": f"{trigger_seconds} seconds"}
+
+
+def start_maintainer(
+    source,
+    apply: Callable,
+    checkpoint_dir: str,
+    trigger_seconds: int | None = None,
+    compact: Callable | None = None,
+    compact_every: int | None = None,
+    name: str | None = None,
+):
+    """Start ``source`` as a ``foreachBatch`` query running ``apply(df,
+    batch_id)`` per micro-batch, offsets checkpointed at ``checkpoint_dir``;
+    returns the StreamingQuery (caller owns its lifecycle).
+
+    ``compact(spark)`` is the retention hook: it runs after ``apply`` on
+    batch ids ``compact_every - 1``, ``2 * compact_every - 1``, ... —
+    inside ``foreachBatch``, so it is serialized with the merges by
+    construction.  Compactors fold through :func:`fold_verbatim`, whose
+    ``keep_last >= 1`` keeps every dir a crash-replay can touch live.
+    """
+
+    def _batch(df, batch_id: int) -> None:
+        apply(df, batch_id)
+        if compact is not None and compact_every and (
+            batch_id % compact_every == compact_every - 1
+        ):
+            compact(df.sparkSession)
+
+    writer = source.writeStream.foreachBatch(_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if name is not None:
+        writer = writer.queryName(name)
+    return writer.trigger(**trigger_args(trigger_seconds)).start()
 
 
 def numbered_ids(
@@ -46,8 +92,8 @@ def numbered_ids(
 # ---------------------------------------------------------------------------
 # Verbatim contribution folding: the generic retention hook for batch-keyed
 # stores whose rows need no re-aggregation (or a schema-preserving one).
-# Mirrors agg_mv.compact_agg_mv's committed-baseline scheme so every
-# maintainer inherits the same crash-safety argument:
+# Every compacting maintainer folds through it, so all share one
+# crash-safety argument:
 #   <root>/batch=<id>/...            live contribution dirs
 #   <root>/baseline/v=<k>/data/...   folded rows
 #   <root>/baseline/v=<k>/_FOLDED    JSON manifest of absorbed batch ids
@@ -172,13 +218,20 @@ def fold_verbatim(
     parts = [os.path.join(root, f"batch={i}") for i in fold]
     if base:
         parts.append(base[0])
-    # one read per path, each its own basePath: a multi-root read over
-    # partitioned contribution dirs (the ANN index's bucket=<b> layout)
-    # trips Spark's conflicting-partition-directories check otherwise
-    dfs = [spark.read.option("basePath", p).parquet(p) for p in parts]
-    merged = dfs[0]
-    for d in dfs[1:]:
-        merged = merged.unionByName(d)
+    if partition_by:
+        # one read per path, each its own basePath: a multi-root read over
+        # partitioned contribution dirs (the ANN index's bucket=<b> layout)
+        # trips Spark's conflicting-partition-directories check otherwise
+        dfs = [spark.read.option("basePath", p).parquet(p) for p in parts]
+        merged = dfs[0]
+        for d in dfs[1:]:
+            merged = merged.unionByName(d)
+    else:
+        # one scan, the plan the readers run: a re-aggregating ``agg`` over
+        # a union of per-path scans adds float partials in another order,
+        # moving a folded double sum by an ulp (agg_mv's fold tests assert
+        # bit-exact values across compaction)
+        merged = spark.read.parquet(*parts)
     if agg is not None:
         merged = agg(merged)
     broot = os.path.join(root, _BASELINE)

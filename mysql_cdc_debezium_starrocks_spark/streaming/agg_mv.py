@@ -30,19 +30,14 @@ plus ``("hist", col, lo, hi, nbins)`` for the quantile sketch (values outside
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._state import numbered_ids
+from ._state import fold_verbatim, read_fold_paths, start_maintainer
 
 _CONTRIB = "contrib"
-_BASELINE = "baseline"
-_FOLDED = "_FOLDED"
-_COMMITTED = "_COMMITTED"
 MERGEABLE = ("count", "sum", "min", "max", "avg", "ndv", "hist")
 _HIST_MAX_BINS = 512
 
@@ -110,10 +105,6 @@ def _hist_quantile(arr, total, q: float, lo: float, w: float, nbins: int):
     return F.when(total == 0, F.lit(None).cast("double")).otherwise(
         F.lit(float(lo)) + (st["idx"].cast("double") + 0.5) * F.lit(w)
     )
-
-
-def _batch_ids(state_dir: str) -> list[int]:
-    return numbered_ids(os.path.join(state_dir, _CONTRIB))
 
 
 def _partial_aggs(spec: dict) -> list:
@@ -222,19 +213,6 @@ def _refold_aggs(spec: dict) -> list:
     return out
 
 
-def _committed_baseline(state_dir: str) -> tuple[str, set[int]] | None:
-    # NUMERIC max, not lexicographic listdir order: sorted() strings put
-    # v=9 after v=10, which would resurrect an old baseline (and lose the
-    # contribs its manifest lacks) once versions reach two digits.
-    root = os.path.join(state_dir, _BASELINE)
-    ks = numbered_ids(root, prefix="v", require_marker=_COMMITTED)
-    if not ks:
-        return None
-    best = os.path.join(root, f"v={ks[-1]}")
-    with open(os.path.join(best, _FOLDED)) as f:
-        return best, set(json.load(f))
-
-
 def compact_agg_mv(
     spark: SparkSession,
     state_dir: str,
@@ -243,39 +221,16 @@ def compact_agg_mv(
     keep_last: int = 2,
 ) -> None:
     """Fold all but the newest ``keep_last`` contribution dirs (plus the old
-    baseline) into a new committed baseline of PARTIAL rows, then GC what it
-    absorbed — the rollup.py scheme: only the newest uncommitted batch can
-    replay, so un-folded tail dirs preserve replay idempotency while live
-    dirs stay bounded at keep_last + 1.
-    """
+    baseline) into a new committed baseline of PARTIAL rows — the
+    ``_state.fold_verbatim`` scheme, re-merging partials with the same
+    associative functions."""
     _check_spec(spec)
-    base = _committed_baseline(state_dir)
-    folded = base[1] if base else set()
-    live = [i for i in _batch_ids(state_dir) if i not in folded]
-    fold = live[:-keep_last] if keep_last else live
-    if not fold:
-        return
-    parts = [os.path.join(state_dir, _CONTRIB, f"batch={i}") for i in fold]
-    if base:
-        parts.append(os.path.join(base[0], "data"))
-    merged = (
-        spark.read.parquet(*parts)
-        .groupBy(*keys)
-        .agg(*_refold_aggs(spec))
-        .localCheckpoint(eager=True)  # cut lineage before FS mutation
+    fold_verbatim(
+        spark,
+        os.path.join(state_dir, _CONTRIB),
+        keep_last,
+        agg=lambda df: df.groupBy(*keys).agg(*_refold_aggs(spec)),
     )
-    root = os.path.join(state_dir, _BASELINE)
-    ks = numbered_ids(root, prefix="v")
-    new_dir = os.path.join(root, f"v={(ks[-1] + 1) if ks else 0}")
-    merged.write.mode("overwrite").parquet(os.path.join(new_dir, "data"))
-    with open(os.path.join(new_dir, _FOLDED), "w") as f:
-        json.dump(sorted(folded | set(fold)), f)
-    with open(os.path.join(new_dir, _COMMITTED), "w") as f:
-        f.write("")  # marker LAST: readers only trust marked baselines
-    for p in parts[: len(fold)]:
-        shutil.rmtree(p, ignore_errors=True)
-    for k in ks:
-        shutil.rmtree(os.path.join(root, f"v={k}"), ignore_errors=True)
 
 
 def merge_agg_mv_batch(
@@ -299,12 +254,7 @@ def read_agg_mv(
 ) -> DataFrame:
     """The view: all contributions re-merged with the associative finals."""
     _check_spec(spec)
-    base = _committed_baseline(state_dir)
-    folded = base[1] if base else set()
-    ids = [i for i in _batch_ids(state_dir) if i not in folded]
-    parts = [os.path.join(state_dir, _CONTRIB, f"batch={i}") for i in ids]
-    if base:
-        parts.append(os.path.join(base[0], "data"))
+    parts = read_fold_paths(os.path.join(state_dir, _CONTRIB))
     if not parts:
         raise FileNotFoundError(f"no agg-MV state under {state_dir}")
     contribs = spark.read.parquet(*parts)
@@ -318,8 +268,7 @@ def start_agg_mv_load(
     checkpoint_dir: str,
     keys: list[str],
     spec: dict,
-    available_now: bool = False,
-    trigger_seconds: int = 1,
+    trigger_seconds: int | None = None,
     compact_every: int | None = None,
     keep_last: int = 2,
 ):
@@ -329,22 +278,16 @@ def start_agg_mv_load(
     contribution dirs into the committed baseline (:func:`compact_agg_mv`)
     so a long-running load keeps a bounded dir count instead of accreting
     one per batch forever — the StarRocks-compaction analog
-    (docs/ARCHITECTURE.md:120-129).  Runs inside foreachBatch, serialized
-    with merges by construction; crash-mid-compaction is already safe (the
-    committed-marker-last baseline scheme).
+    (docs/ARCHITECTURE.md:120-129).
     """
     _check_spec(spec)
-
-    def _apply(df: DataFrame, bid: int) -> None:
-        merge_agg_mv_batch(df.sparkSession, state_dir, df, keys, spec, bid)
-        if compact_every and bid % compact_every == compact_every - 1:
-            compact_agg_mv(df.sparkSession, state_dir, keys, spec, keep_last)
-
-    writer = source.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_maintainer(
+        source,
+        lambda df, bid: merge_agg_mv_batch(
+            df.sparkSession, state_dir, df, keys, spec, bid
+        ),
+        checkpoint_dir,
+        trigger_seconds,
+        compact=lambda s: compact_agg_mv(s, state_dir, keys, spec, keep_last),
+        compact_every=compact_every,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

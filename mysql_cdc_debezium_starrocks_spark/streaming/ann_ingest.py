@@ -37,7 +37,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.similarity import _bucket, _dot
-from ._state import fold_verbatim, guard_folded_replay, read_fold_df
+from ._state import (
+    fold_verbatim,
+    guard_folded_replay,
+    read_fold_df,
+    start_maintainer,
+)
 
 _INDEX = "index"
 
@@ -138,8 +143,7 @@ def start_ann_ingest(
     source: DataFrame,
     state_dir: str,
     checkpoint_dir: str,
-    available_now: bool = False,
-    trigger_seconds: int = 1,
+    trigger_seconds: int | None = None,
     compact_every: int | None = None,
     keep_last: int = 2,
 ):
@@ -147,17 +151,11 @@ def start_ann_ingest(
 
     ``compact_every``: fold contribution dirs every Nth batch
     (:func:`compact_ann_ingest`) — bounded state on a long-lived stream."""
-
-    def _apply(df: DataFrame, bid: int) -> None:
-        ingest_ann_batch(df.sparkSession, state_dir, df, bid)
-        if compact_every and bid % compact_every == compact_every - 1:
-            compact_ann_ingest(df.sparkSession, state_dir, keep_last)
-
-    writer = source.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_maintainer(
+        source,
+        lambda df, bid: ingest_ann_batch(df.sparkSession, state_dir, df, bid),
+        checkpoint_dir,
+        trigger_seconds,
+        compact=lambda s: compact_ann_ingest(s, state_dir, keep_last),
+        compact_every=compact_every,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

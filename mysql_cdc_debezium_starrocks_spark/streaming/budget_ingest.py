@@ -53,7 +53,7 @@ from pyspark.sql.window import Window
 
 from ..functions import words
 from ..operators.stats import TOKEN_BUDGET
-from ._state import fold_verbatim, read_fold_paths
+from ._state import fold_verbatim, read_fold_paths, start_maintainer
 
 
 def ingest_budget_batch(
@@ -193,13 +193,10 @@ def start_budget_ingest(
     def _apply(df: DataFrame, bid: int) -> None:
         ingest_budget_batch(spark, state_dir, df, bid, budget=budget)
 
-    writer = (
-        stream.writeStream.queryName(f"budget_ingest_{os.path.basename(state_dir)}")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_apply)
+    return start_maintainer(
+        stream,
+        _apply,
+        checkpoint_dir,
+        trigger_seconds,
+        name=f"budget_ingest_{os.path.basename(state_dir)}",
     )
-    if trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

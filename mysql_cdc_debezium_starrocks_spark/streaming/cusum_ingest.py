@@ -54,6 +54,7 @@ from ._state import (
     guard_folded_replay,
     numbered_ids,
     read_fold_paths,
+    start_maintainer,
 )
 
 CUSUM_ALARM_MILLI = 5_000  # default decision threshold H = 5 sigma
@@ -228,8 +229,7 @@ def start_cusum_ingest(
     state_dir: str,
     checkpoint_dir: str,
     k_milli: int = CUSUM_K_MILLI,
-    available_now: bool = False,
-    trigger_seconds: int = 1,
+    trigger_seconds: int | None = None,
     compact_every: int | None = None,
     keep_last: int = 2,
 ):
@@ -237,17 +237,13 @@ def start_cusum_ingest(
 
     ``compact_every``: fold/prune state every Nth batch
     (:func:`compact_cusum_ingest`) — bounded state on a long-lived stream."""
-
-    def _apply(df: DataFrame, bid: int) -> None:
-        ingest_cusum_batch(df.sparkSession, state_dir, df, bid, k_milli)
-        if compact_every and bid % compact_every == compact_every - 1:
-            compact_cusum_ingest(df.sparkSession, state_dir, keep_last)
-
-    writer = source.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_maintainer(
+        source,
+        lambda df, bid: ingest_cusum_batch(
+            df.sparkSession, state_dir, df, bid, k_milli
+        ),
+        checkpoint_dir,
+        trigger_seconds,
+        compact=lambda s: compact_cusum_ingest(s, state_dir, keep_last),
+        compact_every=compact_every,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import JACCARD_MIN, signature_table
-from ._state import fold_verbatim, read_fold_paths
+from ._state import fold_verbatim, read_fold_paths, start_maintainer
 
 
 def ingest_dedup_batch(
@@ -124,8 +124,7 @@ def start_dedup_ingest(
     source: DataFrame,
     state_dir: str,
     checkpoint_dir: str,
-    available_now: bool = False,
-    trigger_seconds: int = 1,
+    trigger_seconds: int | None = None,
     compact_every: int | None = None,
     keep_last: int = 2,
 ):
@@ -133,17 +132,11 @@ def start_dedup_ingest(
 
     ``compact_every``: fold contribution dirs every Nth batch
     (:func:`compact_dedup_ingest`) — bounded state on a long-lived stream."""
-
-    def _apply(df: DataFrame, bid: int) -> None:
-        ingest_dedup_batch(df.sparkSession, state_dir, df, bid)
-        if compact_every and bid % compact_every == compact_every - 1:
-            compact_dedup_ingest(df.sparkSession, state_dir, keep_last)
-
-    writer = source.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_maintainer(
+        source,
+        lambda df, bid: ingest_dedup_batch(df.sparkSession, state_dir, df, bid),
+        checkpoint_dir,
+        trigger_seconds,
+        compact=lambda s: compact_dedup_ingest(s, state_dir, keep_last),
+        compact_every=compact_every,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -39,7 +39,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._state import numbered_ids
+from ._state import numbered_ids, start_maintainer
 
 _KEEP_SNAPSHOTS = 3
 _SUMMARY = "summary"
@@ -146,17 +146,14 @@ def start_heavy_hitters_load(
     checkpoint_dir: str,
     key_col: str = "user_id",
     m: int = 64,
-    available_now: bool = False,
-    trigger_seconds: int = 1,
+    trigger_seconds: int | None = None,
 ):
     """Wire a stream into the summary maintainer; caller owns lifecycle."""
-    writer = source.writeStream.foreachBatch(
+    return start_maintainer(
+        source,
         lambda df, bid: merge_heavy_hitters_batch(
             df.sparkSession, state_dir, df, bid, key_col=key_col, m=m
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+        ),
+        checkpoint_dir,
+        trigger_seconds,
+    )

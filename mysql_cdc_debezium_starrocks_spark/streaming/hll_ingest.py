@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketches import hll_estimate, hll_registers
-from ._state import fold_verbatim, read_fold_paths
+from ._state import fold_verbatim, read_fold_paths, start_maintainer
 
 
 def ingest_hll_batch(
@@ -99,23 +99,16 @@ def start_hll_ingest(
     checkpoint_dir: str,
     key: str = "key",
     seed: str = "hll",
-    available_now: bool = False,
-    trigger_seconds: int = 1,
+    trigger_seconds: int | None = None,
     compact_every: int | None = None,
     keep_last: int = 2,
 ):
     """Wire a keyed stream into the sketch maintainer."""
-
-    def _apply(df: DataFrame, bid: int) -> None:
-        ingest_hll_batch(state_dir, df, bid, key, seed)
-        if compact_every and bid % compact_every == compact_every - 1:
-            compact_hll_ingest(df.sparkSession, state_dir, keep_last)
-
-    writer = source.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_maintainer(
+        source,
+        lambda df, bid: ingest_hll_batch(state_dir, df, bid, key, seed),
+        checkpoint_dir,
+        trigger_seconds,
+        compact=lambda s: compact_hll_ingest(s, state_dir, keep_last),
+        compact_every=compact_every,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cdc.apply import latest_by_key
+from ._state import start_maintainer
 
 _BUCKET = "_bucket"
 
@@ -241,8 +242,7 @@ def start_join_mv_load(
     dim_envelope,
     checkpoint_dir: str,
     table_col: str = "_table",
-    available_now: bool = False,
-    trigger_seconds: int = 1,
+    trigger_seconds: int | None = None,
 ):
     """Maintain the MV directly from a multi-table CDC wire stream.
 
@@ -277,11 +277,4 @@ def start_join_mv_load(
         finally:
             df.unpersist()
 
-    writer = source.writeStream.foreachBatch(_fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return start_maintainer(source, _fold, checkpoint_dir, trigger_seconds)

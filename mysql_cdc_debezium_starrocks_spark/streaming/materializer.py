@@ -44,6 +44,7 @@ from pyspark.sql.types import StructType
 
 from ..cdc.apply import latest_by_key, parse_envelope
 from ..cdc.schemas import ORDER_EVENT_ENVELOPE
+from ._state import start_maintainer
 
 
 @dataclass
@@ -590,16 +591,9 @@ def start_cdc_load(spark: SparkSession, cfg: CdcLoadConfig):
                 else:
                     build_secondary_index(spark, cfg, icol)
 
-    writer = (
-        events.writeStream.queryName(cfg.name)
-        .option("checkpointLocation", cfg.checkpoint_dir)
-        .foreachBatch(apply_batch)
+    return start_maintainer(
+        events, apply_batch, cfg.checkpoint_dir, cfg.trigger_seconds, name=cfg.name
     )
-    if cfg.trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{cfg.trigger_seconds} seconds")
-    return writer.start()
 
 
 def register_live_view(

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions import phash32, words
 from ..operators.stats import MIX_TARGET_SHARE
-from ._state import fold_verbatim, read_fold_paths
+from ._state import fold_verbatim, read_fold_paths, start_maintainer
 
 RATE_SCALE = 1_000_000
 
@@ -158,8 +158,7 @@ def start_mix_ingest(
     source: DataFrame,
     state_dir: str,
     checkpoint_dir: str,
-    available_now: bool = False,
-    trigger_seconds: int = 1,
+    trigger_seconds: int | None = None,
     compact_every: int | None = None,
     keep_last: int = 2,
 ):
@@ -167,17 +166,11 @@ def start_mix_ingest(
 
     ``compact_every``: fold contribution dirs every Nth batch
     (:func:`compact_mix_ingest`) — bounded state on a long-lived stream."""
-
-    def _apply(df: DataFrame, bid: int) -> None:
-        ingest_mix_batch(df.sparkSession, state_dir, df, bid)
-        if compact_every and bid % compact_every == compact_every - 1:
-            compact_mix_ingest(df.sparkSession, state_dir, keep_last)
-
-    writer = source.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_maintainer(
+        source,
+        lambda df, bid: ingest_mix_batch(df.sparkSession, state_dir, df, bid),
+        checkpoint_dir,
+        trigger_seconds,
+        compact=lambda s: compact_mix_ingest(s, state_dir, keep_last),
+        compact_every=compact_every,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import PHASH_MAX_HAMMING, phash_bands, phash_of
-from ._state import fold_verbatim, read_fold_paths
+from ._state import fold_verbatim, read_fold_paths, start_maintainer
 
 
 def ingest_phash_batch(
@@ -116,8 +116,7 @@ def start_phash_ingest(
     source: DataFrame,
     state_dir: str,
     checkpoint_dir: str,
-    available_now: bool = False,
-    trigger_seconds: int = 1,
+    trigger_seconds: int | None = None,
     compact_every: int | None = None,
     keep_last: int = 2,
 ):
@@ -125,17 +124,11 @@ def start_phash_ingest(
 
     ``compact_every``: fold contribution dirs every Nth batch
     (:func:`compact_phash_ingest`) — bounded state on a long-lived stream."""
-
-    def _apply(df: DataFrame, bid: int) -> None:
-        ingest_phash_batch(df.sparkSession, state_dir, df, bid)
-        if compact_every and bid % compact_every == compact_every - 1:
-            compact_phash_ingest(df.sparkSession, state_dir, keep_last)
-
-    writer = source.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_maintainer(
+        source,
+        lambda df, bid: ingest_phash_batch(df.sparkSession, state_dir, df, bid),
+        checkpoint_dir,
+        trigger_seconds,
+        compact=lambda s: compact_phash_ingest(s, state_dir, keep_last),
+        compact_every=compact_every,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -27,16 +27,11 @@ Readers re-aggregate across contributions (``minute_view``/``daily_view``) —
 legal because every kept stat is re-aggregatable (sum-of-sums, min-of-mins,
 max-of-maxes, count-as-sum); averages are derived at read time.
 
-**Compaction.** Contribution dirs accrete one per batch; ``compact_rollup``
-folds all but the newest ``keep_last`` batches into a versioned baseline
-``baseline/v=<k>`` whose ``_FOLDED`` manifest records exactly which batch ids
-it absorbed, with a ``_COMMITTED`` marker written last.  ``read_rollup``
-takes the newest COMMITTED baseline and excludes the contribution dirs its
-manifest lists — so a crash at ANY point of compaction (before the marker:
-reader ignores the half-written baseline; after the marker but before GC:
-reader skips the now-folded dirs via the manifest) never double-counts or
-loses rows.  Folded dirs and superseded baselines are deleted best-effort
-after commit; leftovers are invisible to readers and swept by the next pass.
+**Compaction.** ``compact_rollup`` folds all but the newest ``keep_last``
+contribution dirs into a committed baseline through
+``_state.fold_verbatim``, which owns the baseline layout and its
+crash-safety argument (a crash at any point of a fold never double-counts
+or loses rows).
 
 Scale: state size is the (minute x type x live-batch) cardinality —
 time-bounded, not data-bounded.  Late data merges correctly regardless of
@@ -46,22 +41,16 @@ optional watermark on the source stream bounds how late that can happen.
 
 from __future__ import annotations
 
-import json
 import os
-
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._state import numbered_ids
+from ._state import fold_verbatim, read_fold_paths, start_maintainer
 
 _DAY = "day"
 _KEYS = (_DAY, "minute", "event_type")
 _CONTRIB = "contrib"
-_BASELINE = "baseline"
-_FOLDED = "_FOLDED"
-_COMMITTED = "_COMMITTED"
 
 
 def _minute_partials(events: DataFrame) -> DataFrame:
@@ -87,34 +76,10 @@ def _combine(parts: DataFrame) -> DataFrame:
     )
 
 
-def _contrib_ids(state_dir: str) -> list[int]:
-    return numbered_ids(os.path.join(state_dir, _CONTRIB))
-
-
-def _committed_baseline(state_dir: str) -> tuple[str, set[int]] | None:
-    """Newest baseline dir bearing the _COMMITTED marker, with its folded-id
-    set.  Uncommitted (crashed-mid-write) baselines are simply ignored."""
-    root = os.path.join(state_dir, _BASELINE)
-    for k in reversed(numbered_ids(root, prefix="v")):
-        d = os.path.join(root, f"v={k}")
-        if os.path.exists(os.path.join(d, _COMMITTED)):
-            with open(os.path.join(d, _FOLDED)) as f:
-                return d, set(json.load(f))
-    return None
-
-
 def read_rollup(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Current state: committed baseline (batch_id = -1) plus every live
     contribution dir the baseline has not folded."""
-    base = _committed_baseline(state_dir)
-    folded = base[1] if base else set()
-    paths = [
-        os.path.join(state_dir, _CONTRIB, f"batch={i}")
-        for i in _contrib_ids(state_dir)
-        if i not in folded
-    ]
-    if base:
-        paths.append(os.path.join(base[0], "data"))
+    paths = read_fold_paths(os.path.join(state_dir, _CONTRIB))
     if not paths:
         return None
     return spark.read.parquet(*paths)
@@ -138,56 +103,21 @@ def compact_rollup(
     spark: SparkSession, state_dir: str, keep_last: int = 2
 ) -> None:
     """Fold all but the newest ``keep_last`` contribution dirs (plus the old
-    baseline) into a new committed baseline, then GC what it absorbed.
+    baseline) into a new committed baseline of re-combined partials."""
 
-    Only batches the checkpoint has durably committed can still replay, and
-    Structured Streaming replays at most the newest uncommitted batch —
-    keeping the last few batch dirs un-folded preserves replay idempotency
-    while bounding live dirs at keep_last + 1.
-    """
-    if keep_last < 1:
-        # the newest contribution dir may be a mid-write partial whose
-        # batch the stream will replay; folding it would record the batch
-        # as folded while its full rows never become visible — the replay
-        # rewrite lands in a dir readers already exclude
-        raise ValueError("compact_rollup requires keep_last >= 1 for replay safety")
-    base = _committed_baseline(state_dir)
-    folded = base[1] if base else set()
-    live = [i for i in _contrib_ids(state_dir) if i not in folded]
-    fold = live[:-keep_last]
-    if not fold:
-        return
+    def recombine(parts: DataFrame) -> DataFrame:
+        return (
+            _combine(parts)
+            # pin the PERSISTED schema to the contribution schema: Spark
+            # widens sum(decimal(28,2)) to (38,2), and mixed file widths make
+            # the multi-path read depend on which file schema inference sees
+            # first
+            .withColumn("s", F.col("s").cast("decimal(28,2)"))
+            .withColumn("batch_id", F.lit(-1))
+            .repartition(F.col(_DAY))
+        )
 
-    parts = [os.path.join(state_dir, _CONTRIB, f"batch={i}") for i in fold]
-    if base:
-        parts.append(os.path.join(base[0], "data"))
-    merged = (
-        _combine(spark.read.parquet(*parts))
-        # pin the PERSISTED schema to the contribution schema: Spark widens
-        # sum(decimal(28,2)) to (38,2), and mixed file widths make the
-        # multi-path read depend on which file schema inference sees first
-        .withColumn("s", F.col("s").cast("decimal(28,2)"))
-        .withColumn("batch_id", F.lit(-1))
-        # cut lineage before any FS mutation below
-        .localCheckpoint(eager=True)
-    )
-
-    root = os.path.join(state_dir, _BASELINE)
-    ks = numbered_ids(root, prefix="v")
-    new_dir = os.path.join(root, f"v={(ks[-1] + 1) if ks else 0}")
-    merged.repartition(F.col(_DAY)).write.mode("overwrite").parquet(
-        os.path.join(new_dir, "data")
-    )
-    with open(os.path.join(new_dir, _FOLDED), "w") as f:
-        json.dump(sorted(folded | set(fold)), f)
-    with open(os.path.join(new_dir, _COMMITTED), "w") as f:
-        f.write("")  # marker LAST: readers only trust marked baselines
-
-    # best-effort GC — a crash here leaves dirs readers already ignore
-    for p in parts[: len(fold)]:
-        shutil.rmtree(p, ignore_errors=True)
-    for k in ks:
-        shutil.rmtree(os.path.join(root, f"v={k}"), ignore_errors=True)
+    fold_verbatim(spark, os.path.join(state_dir, _CONTRIB), keep_last, agg=recombine)
 
 
 def start_incremental_rollup(
@@ -195,8 +125,7 @@ def start_incremental_rollup(
     source: DataFrame,
     state_dir: str,
     checkpoint_dir: str,
-    available_now: bool = False,
-    trigger_seconds: int = 1,
+    trigger_seconds: int | None = None,
     compact_every: int | None = None,
     keep_last: int = 2,
 ):
@@ -205,22 +134,15 @@ def start_incremental_rollup(
 
     ``compact_every`` = retention hook: every Nth batch folds old
     contribution dirs into the committed baseline (:func:`compact_rollup`)
-    so live dirs stay bounded at ~keep_last+1 over an unbounded run; the
-    marker-last baseline scheme keeps a crash mid-compaction safe."""
-
-    def _apply(df: DataFrame, bid: int) -> None:
-        merge_rollup_batch(df.sparkSession, state_dir, df, bid)
-        if compact_every and bid % compact_every == compact_every - 1:
-            compact_rollup(df.sparkSession, state_dir, keep_last)
-
-    writer = source.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    so live dirs stay bounded at ~keep_last+1 over an unbounded run."""
+    return start_maintainer(
+        source,
+        lambda df, bid: merge_rollup_batch(df.sparkSession, state_dir, df, bid),
+        checkpoint_dir,
+        trigger_seconds,
+        compact=lambda s: compact_rollup(s, state_dir, keep_last),
+        compact_every=compact_every,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def minute_view(partials: DataFrame) -> DataFrame:

@@ -40,7 +40,7 @@ from pyspark.sql.window import Window
 
 from ..cdc.apply import latest_by_key, parse_envelope
 from ..cdc.schemas import ORDER_EVENT_ENVELOPE
-from ._state import numbered_ids
+from ._state import numbered_ids, start_maintainer
 
 _KEEP_SNAPSHOTS = 3
 
@@ -161,20 +161,17 @@ def start_scd2_load(
     checkpoint_dir: str,
     envelope: StructType = ORDER_EVENT_ENVELOPE,
     key: str = "order_key",
-    available_now: bool = False,
-    trigger_seconds: int = 1,
+    trigger_seconds: int | None = None,
 ):
     """Wire a CDC wire-format stream into the SCD2 maintainer."""
-    writer = source.writeStream.foreachBatch(
+    return start_maintainer(
+        source,
         lambda df, bid: merge_scd2_batch(
             df.sparkSession, state_dir, df, bid, envelope=envelope, key=key
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+        ),
+        checkpoint_dir,
+        trigger_seconds,
+    )
 
 
 def scd2_asof(history: DataFrame, seq: int) -> DataFrame:

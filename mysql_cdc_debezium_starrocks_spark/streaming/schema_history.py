@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ._state import trigger_args
+
 SCHEMA_HISTORY_EVENT = StructType(
     [
         StructField("_seq", LongType()),       # event order (Kafka offset analog)
@@ -55,11 +57,8 @@ def start_schema_history(
         .option("path", _log_path(sink_dir))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(**trigger_args(trigger_seconds))
     )
-    if trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()
 
 

@@ -34,89 +34,59 @@ from ..operators.sketches import (
     theta_merge,
     theta_sketch,
 )
-from ._state import numbered_ids
+from ._state import (
+    committed_fold,
+    fold_verbatim,
+    numbered_ids,
+    read_fold_paths,
+    start_maintainer,
+)
 
 _THETA = "theta"
 DEFAULT_K = 256
 _META = "_meta.json"
-_BASELINE = "baseline"
-_FOLDED = "_folded.json"
-_COMMITTED = "_COMMITTED"
 
 
-def _committed_baseline(state_dir: str) -> tuple[str, set[int]] | None:
-    root = os.path.join(state_dir, _BASELINE)
-    ks = numbered_ids(root, prefix="v", require_marker=_COMMITTED)
-    if not ks:
-        return None
-    best = os.path.join(root, f"v={ks[-1]}")
-    with open(os.path.join(best, _FOLDED)) as f:
-        return best, set(json.load(f))
+def _theta_root(state_dir: str) -> str:
+    return os.path.join(state_dir, _THETA)
 
 
 def compact_theta(
     spark: SparkSession, state_dir: str, keep_last: int = 2
 ) -> None:
     """Fold all but the newest ``keep_last`` sketch contributions (plus the
-    old baseline) into one committed k-row baseline, then GC what it
-    absorbed — the agg_mv/rollup retention scheme applied to sketches.
+    old baseline) into one committed k-row baseline — the
+    ``_state.fold_verbatim`` scheme applied to sketches.
 
     KMV union is hash-level distinct, so the fold is exact: the k smallest
-    distinct hashes of the folded inputs ARE the union's sketch.  The
-    marker-last baseline write keeps a crash at any point safe (readers
-    only trust ``_COMMITTED`` baselines, and un-GC'd contribution dirs
-    re-merge idempotently — duplicate hashes vanish in the distinct).
+    distinct hashes of the folded inputs ARE the union's sketch.
     """
-    import shutil
-
-    if keep_last < 1:
-        raise ValueError("compact_theta requires keep_last >= 1 for replay safety")
     meta = _read_meta(state_dir)
-    if meta is None:
-        if _batch_ids(state_dir):
-            raise ValueError(
-                f"theta state {state_dir} has contributions but no {_META}; "
-                f"backfill it before compacting"
-            )
-        return
-    base = _committed_baseline(state_dir)
-    folded = base[1] if base else set()
-    live = [i for i in _batch_ids(state_dir) if i not in folded]
-    fold = live[:-keep_last]
-    if not fold:
-        return
-    parts = [os.path.join(state_dir, _THETA, f"batch={i}") for i in fold]
-    if base:
-        parts.append(os.path.join(base[0], "data"))
-    merged = (
-        spark.read.parquet(*parts)
-        .select("h")
+    if meta is None and _batch_ids(state_dir):
+        raise ValueError(
+            f"theta state {state_dir} has contributions but no {_META}; "
+            f"backfill it before compacting"
+        )
+    # without meta there are no contributions, so the fold has nothing to
+    # reduce and never calls the agg
+    fold_verbatim(
+        spark,
+        _theta_root(state_dir),
+        keep_last,
+        agg=lambda df: df.select("h")
         .distinct()
         .orderBy("h")
         .limit(meta["k"])
-        .coalesce(1)
-        .localCheckpoint(eager=True)  # cut lineage before FS mutation
+        .coalesce(1),
     )
-    root = os.path.join(state_dir, _BASELINE)
-    ks = numbered_ids(root, prefix="v")
-    new_dir = os.path.join(root, f"v={(ks[-1] + 1) if ks else 0}")
-    merged.write.mode("overwrite").parquet(os.path.join(new_dir, "data"))
-    with open(os.path.join(new_dir, _FOLDED), "w") as f:
-        json.dump(sorted(folded | set(fold)), f)
-    with open(os.path.join(new_dir, _COMMITTED), "w") as f:
-        f.write("")  # marker LAST: readers only trust marked baselines
-    for p in parts[: len(fold)]:
-        shutil.rmtree(p, ignore_errors=True)
-    for kv in ks:
-        shutil.rmtree(os.path.join(root, f"v={kv}"), ignore_errors=True)
 
 
 def _batch_ids(state_dir: str) -> list[int]:
-    return numbered_ids(os.path.join(state_dir, _THETA))
+    return numbered_ids(_theta_root(state_dir))
 
 
 def _meta_path(state_dir: str) -> str:
-    return os.path.join(state_dir, _THETA, _META)
+    return os.path.join(_theta_root(state_dir), _META)
 
 
 def _read_meta(state_dir: str) -> dict | None:
@@ -135,7 +105,7 @@ def _ensure_meta(state_dir: str, k: int, seed: str) -> None:
     survive), and a different seed is a different hash family entirely."""
     meta = _read_meta(state_dir)
     if meta is None:
-        if _batch_ids(state_dir) or _committed_baseline(state_dir) is not None:
+        if _batch_ids(state_dir) or committed_fold(_theta_root(state_dir)):
             # pre-metadata state: we cannot know what k/seed built those
             # contributions, so stamping the next writer's values would
             # legitimize exactly the mismatch this guard exists to stop
@@ -144,7 +114,7 @@ def _ensure_meta(state_dir: str, k: int, seed: str) -> None:
                 f"{_META}; backfill it with the original maintenance "
                 f"k/seed before writing"
             )
-        os.makedirs(os.path.join(state_dir, _THETA), exist_ok=True)
+        os.makedirs(_theta_root(state_dir), exist_ok=True)
         tmp = _meta_path(state_dir) + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"k": k, "seed": seed}, f)
@@ -172,7 +142,7 @@ def update_theta_batch(
     not a key to sample).
 
     A batch id already folded into the committed baseline is REFUSED: a
-    contribution dir whose id is in ``_folded`` is unreadable by design
+    contribution dir whose id the baseline has folded is unreadable by design
     (read_theta must skip those ids so a crash mid-compaction — baseline
     committed, GC incomplete — never double-counts), so writing one would
     silently lose the batch.  Ids recycle only when a stream restarts
@@ -180,7 +150,7 @@ def update_theta_batch(
     epoch offset, and this guard turns the silent loss into an error.
     """
     _ensure_meta(state_dir, k, seed)
-    base = _committed_baseline(state_dir)
+    base = committed_fold(_theta_root(state_dir))
     if base is not None and batch_id in base[1]:
         raise ValueError(
             f"theta state {state_dir}: batch_id {batch_id} was already "
@@ -194,7 +164,7 @@ def update_theta_batch(
         "_set", col, k=k, seed=seed,
     )
     sk.select("h").coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(state_dir, _THETA, f"batch={batch_id}")
+        os.path.join(_theta_root(state_dir), f"batch={batch_id}")
     )
 
 
@@ -210,10 +180,8 @@ def read_theta(
     state's ``_meta.json``); passing a different k raises rather than
     silently mis-estimating.
     """
-    base = _committed_baseline(state_dir)
-    folded = base[1] if base else set()
-    ids = [i for i in _batch_ids(state_dir) if i not in folded]
-    if not ids and base is None:
+    parts = read_fold_paths(_theta_root(state_dir))
+    if not parts:
         raise FileNotFoundError(f"no theta sketch state under {state_dir}")
     meta = _read_meta(state_dir)
     if meta is None:
@@ -235,9 +203,6 @@ def read_theta(
                 f"theta state {state_dir} was maintained with k={state_k}; "
                 f"reading at k={k} would mis-estimate (exact-mode flip)"
             )
-    parts = [os.path.join(state_dir, _THETA, f"batch={i}") for i in ids]
-    if base is not None:
-        parts.append(os.path.join(base[0], "data"))
     rows = spark.read.parquet(*parts)
     return theta_merge(rows.select(F.lit(label).alias("_set"), "h"), "_set", k)
 
@@ -312,8 +277,7 @@ def start_theta_load(
     checkpoint_dir: str,
     col: str,
     k: int = DEFAULT_K,
-    available_now: bool = False,
-    trigger_seconds: int = 1,
+    trigger_seconds: int | None = None,
     compact_every: int | None = None,
     keep_last: int = 2,
 ):
@@ -322,17 +286,13 @@ def start_theta_load(
     ``compact_every`` = retention hook: every Nth batch folds old sketch
     contributions into the committed k-row baseline (:func:`compact_theta`)
     so dir counts stay bounded over an unbounded run."""
-
-    def _apply(df: DataFrame, bid: int) -> None:
-        update_theta_batch(df.sparkSession, state_dir, df, col, bid, k=k)
-        if compact_every and bid % compact_every == compact_every - 1:
-            compact_theta(df.sparkSession, state_dir, keep_last)
-
-    writer = source.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_maintainer(
+        source,
+        lambda df, bid: update_theta_batch(
+            df.sparkSession, state_dir, df, col, bid, k=k
+        ),
+        checkpoint_dir,
+        trigger_seconds,
+        compact=lambda s: compact_theta(s, state_dir, keep_last),
+        compact_every=compact_every,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

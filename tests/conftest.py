@@ -31,15 +31,15 @@ SLOW_MODULES = {
     # streaming/ingest integration: real micro-batch triggers + sleeps
     "test_agg_mv",
     "test_ann_ingest",
+    "test_budget_ingest",
+    "test_cusum_ingest",
     "test_heavy_hitters",
+    "test_hll_ingest",
+    "test_index_maintainer",
     "test_ingest_compaction",
     "test_join_mv",
-    "test_r5c_hll_ingest",
-    "test_r6b_cusum_ingest",
-    "test_r7_secondary_index_refresh",
-    "test_r8_budget_ingest",
-    "test_r8_index_maintainer",
     "test_retention",
+    "test_secondary_index_refresh",
     "test_sources",
     "test_streaming",
     "test_streaming_analytics",

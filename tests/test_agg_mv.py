@@ -6,7 +6,9 @@ replay idempotent, E2E under foreachBatch.
 import pytest
 from pyspark.sql import functions as F
 
+from mysql_cdc_debezium_starrocks_spark.streaming._state import numbered_ids
 from mysql_cdc_debezium_starrocks_spark.streaming.agg_mv import (
+    _CONTRIB,
     merge_agg_mv_batch,
     read_agg_mv,
     start_agg_mv_load,
@@ -116,11 +118,7 @@ def test_hist_survives_compaction_and_replay_exactly(spark, tmp_path):
     merge_agg_mv_batch(spark, state, parts[4], KEYS, HSPEC, 4)  # crash replay
     replay = sorted(map(tuple, read_agg_mv(spark, state, KEYS, HSPEC).collect()))
     assert replay == after
-    remaining = [
-        d
-        for d in os.listdir(os.path.join(state, "contrib"))
-        if d.startswith("batch=")
-    ]
+    remaining = numbered_ids(os.path.join(state, _CONTRIB))
     assert len(remaining) == 2
 
 
@@ -177,7 +175,6 @@ def test_streaming_e2e(spark, tmp_path):
     stream = spark.readStream.schema(schema).parquet(src)
     q = start_agg_mv_load(
         spark, stream, state, str(tmp_path / "ckpt"), KEYS, SPEC,
-        available_now=True,
     )
     q.awaitTermination(120)
     view = read_agg_mv(spark, state, KEYS, SPEC)
@@ -225,10 +222,7 @@ def test_compaction_preserves_view_and_bounds_dirs(spark, tmp_path):
     for k, v in exact.items():
         assert abs(ndv_after[k] - v) <= max(2, 0.05 * v)
     # folded contrib dirs removed; only keep_last remain
-    remaining = [
-        d for d in os.listdir(os.path.join(state, "contrib"))
-        if d.startswith("batch=")
-    ]
+    remaining = numbered_ids(os.path.join(state, _CONTRIB))
     assert len(remaining) == 2
     # replay of the newest (unfolded) batch stays idempotent post-compaction
     merge_agg_mv_batch(spark, state, parts[4], KEYS, SPEC, 4)

@@ -114,9 +114,7 @@ def test_streaming_e2e(spark, tmp_path):
     a.write.mode("append").parquet(src)
     b.write.mode("append").parquet(src)
     stream = spark.readStream.schema(a.schema).parquet(src)
-    q = start_ann_ingest(
-        spark, stream, state, str(tmp_path / "ckpt"), available_now=True
-    )
+    q = start_ann_ingest(spark, stream, state, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     total = spark.read.parquet(f"{SF}/embeddings.parquet").count()
     assert read_ann_index(spark, state).count() == total

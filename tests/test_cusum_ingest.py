@@ -170,9 +170,7 @@ def test_streaming_path(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(src)
     )
-    q = start_cusum_ingest(
-        spark, stream, state, str(tmp_path / "ckpt"), available_now=True
-    )
+    q = start_cusum_ingest(spark, stream, state, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     direct = str(tmp_path / "direct")

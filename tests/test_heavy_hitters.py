@@ -88,9 +88,7 @@ def test_streaming_e2e(spark, tmp_path):
     for i in range(2):
         _skewed_batch(spark, i, rows=1000).write.mode("append").parquet(src)
     stream = spark.readStream.schema("user_id long, batch_no int").parquet(src)
-    q = start_heavy_hitters_load(
-        spark, stream, state, ckpt, m=M, available_now=True
-    )
+    q = start_heavy_hitters_load(spark, stream, state, ckpt, m=M)
     q.awaitTermination(120)
     view = heavy_hitters_view(spark, state, k=5).collect()
     assert view and view[0]["n_total"] == 2000

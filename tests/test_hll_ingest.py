@@ -120,7 +120,6 @@ def test_hll_ingest_streaming_path(spark, tmp_path):
         stream,
         state,
         str(tmp_path / "ckpt"),
-        available_now=True,
         compact_every=2,
         keep_last=1,
     )

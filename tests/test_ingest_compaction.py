@@ -473,7 +473,7 @@ def test_dedup_and_ann_streaming_path_with_compaction(spark, tmp_path):
     dstate = str(tmp_path / "dstate")
     q = start_dedup_ingest(
         spark, stream, dstate, str(tmp_path / "dckpt"),
-        available_now=True, compact_every=2, keep_last=1,
+        compact_every=2, keep_last=1,
     )
     q.awaitTermination(180)
 
@@ -502,7 +502,7 @@ def test_dedup_and_ann_streaming_path_with_compaction(spark, tmp_path):
     astate = str(tmp_path / "astate")
     q = start_ann_ingest(
         spark, vstream, astate, str(tmp_path / "ackpt"),
-        available_now=True, compact_every=2, keep_last=1,
+        compact_every=2, keep_last=1,
     )
     q.awaitTermination(180)
     adirect = str(tmp_path / "adirect")

@@ -211,7 +211,7 @@ def test_cdc_wire_e2e(spark, tmp_path):
         spark, cfg, stream,
         fact_table="orders", dim_table="customers",
         fact_envelope=fact_env, dim_envelope=dim_env,
-        checkpoint_dir=str(tmp_path / "ckpt"), available_now=True,
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
 

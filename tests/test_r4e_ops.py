@@ -335,9 +335,7 @@ def test_mix_ingest_streaming_path(spark, tmp_path):
         .json(src)
     )
     state = str(tmp_path / "mix_stream")
-    q = start_mix_ingest(
-        spark, stream, state, str(tmp_path / "ckpt"), available_now=True
-    )
+    q = start_mix_ingest(spark, stream, state, str(tmp_path / "ckpt"))
     q.awaitTermination(300)
 
     ref_state = str(tmp_path / "mix_ref")

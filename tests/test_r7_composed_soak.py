@@ -357,7 +357,7 @@ def test_all_maintainers_composed_100_batch_soak(spark, tmp_path):
     # final incremental refresh catches the tail waves since the last
     # cadence hit; lookups must equal the full scan, exactly as after a
     # fresh build (refresh == rebuild is pinned row-identical by
-    # test_r7_secondary_index_refresh.py)
+    # test_secondary_index_refresh.py)
     refresh_secondary_index(spark, cfg_c, "status")
     got = sorted(
         r["order_key"]

@@ -2,7 +2,7 @@
 
 Covers the r06 verdict lead item (emb_cosine_pair_histogram's bucket count
 must scale with the corpus so pair work stays linear) and the two advisor
-findings (cusum batch-0 replay — tested in test_r6b_cusum_ingest.py — and
+findings (cusum batch-0 replay — tested in test_cusum_ingest.py — and
 zero-covariance crashes in the integer linalg kernels).
 """
 

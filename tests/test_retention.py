@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import functions as F
 
@@ -237,7 +238,12 @@ def test_gc_interval_fold_property_random_delivery_orders():
 def test_agg_mv_auto_compaction_bounds_dirs(spark, tmp_path):
     """compact_every in the agg-MV load loop: dirs stay bounded and the
     view equals the one-shot aggregate over everything ingested."""
+    from mysql_cdc_debezium_starrocks_spark.streaming._state import (
+        _BASELINE,
+        numbered_ids,
+    )
     from mysql_cdc_debezium_starrocks_spark.streaming.agg_mv import (
+        _CONTRIB,
         read_agg_mv,
         start_agg_mv_load,
     )
@@ -257,14 +263,13 @@ def test_agg_mv_auto_compaction_bounds_dirs(spark, tmp_path):
     )
     q = start_agg_mv_load(
         spark, source, state, str(tmp_path / "ck"), ["g"], spec,
-        available_now=True, compact_every=2, keep_last=1,
+        compact_every=2, keep_last=1,
     )
     q.awaitTermination(120)
-    contrib = [d for d in os.listdir(os.path.join(state, "contrib"))
-               if d.startswith("batch=")]
+    contrib_root = os.path.join(state, _CONTRIB)
+    contrib = numbered_ids(contrib_root)
     assert len(contrib) <= 3  # bounded, not one per batch (6 ingested)
-    baselines = [d for d in os.listdir(os.path.join(state, "baseline"))
-                 if d.startswith("v=")]
+    baselines = numbered_ids(os.path.join(contrib_root, _BASELINE), prefix="v")
     assert len(baselines) == 1  # old baselines GC'd
     out = {r.g: (r.n, r.total) for r in
            read_agg_mv(spark, state, ["g"], spec).collect()}
@@ -305,7 +310,13 @@ def test_theta_crash_mid_compaction_is_invisible(spark, tmp_path):
     """A baseline dir without the _COMMITTED marker (crash between data
     write and commit) is ignored by readers and safely superseded by the
     next compaction run."""
+    from mysql_cdc_debezium_starrocks_spark.streaming._state import (
+        _BASELINE,
+        _COMMITTED,
+        _FOLDED,
+    )
     from mysql_cdc_debezium_starrocks_spark.streaming.theta_stats import (
+        _THETA,
         compact_theta,
         read_theta,
         update_theta_batch,
@@ -320,15 +331,21 @@ def test_theta_crash_mid_compaction_is_invisible(spark, tmp_path):
     before = sorted(r.h for r in read_theta(spark, state).collect())
 
     # simulate the crash: a full baseline WITHOUT its commit marker
-    crash_dir = os.path.join(state, "baseline", "v=0")
+    crash_dir = os.path.join(state, _THETA, _BASELINE, "v=0")
     os.makedirs(os.path.join(crash_dir, "data"))
     spark.range(1).select(F.lit(123).cast("long").alias("h")).write.mode(
         "overwrite"
     ).parquet(os.path.join(crash_dir, "data"))
-    with open(os.path.join(crash_dir, "_folded.json"), "w") as f:
+    with open(os.path.join(crash_dir, _FOLDED), "w") as f:
         json.dump([0, 1], f)
     # no _COMMITTED marker -> reader must ignore it entirely
     assert sorted(r.h for r in read_theta(spark, state).collect()) == before
+    # control: the same dir WITH its marker is trusted, so the simulated
+    # crash sits exactly where a real fold writes its baseline
+    control = str(tmp_path / "control")
+    shutil.copytree(state, control)
+    open(os.path.join(control, _THETA, _BASELINE, "v=0", _COMMITTED), "w").close()
+    assert sorted(r.h for r in read_theta(spark, control).collect()) != before
 
     compact_theta(spark, state, keep_last=1)
     after = sorted(r.h for r in read_theta(spark, state).collect())

@@ -639,8 +639,7 @@ def test_incremental_scd2_matches_batch_derivation(spark, tmp_path):
     src = spark.readStream.schema("`_seq` LONG, value STRING").option(
         "maxFilesPerTrigger", 1
     ).json(events_dir)
-    q = start_scd2_load(spark, src, state, str(tmp_path / "ck"),
-                        available_now=True)
+    q = start_scd2_load(spark, src, state, str(tmp_path / "ck"))
     q.awaitTermination(120)
 
     view = scd2_view(spark, state)

@@ -314,7 +314,7 @@ def test_incremental_rollup_matches_batch(spark, tmp_path):
     stream = (
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).json(src)
     )
-    q = start_incremental_rollup(spark, stream, state, ckpt, available_now=True)
+    q = start_incremental_rollup(spark, stream, state, ckpt)
     q.awaitTermination(300)
 
     partials = read_rollup(spark, state)
@@ -379,42 +379,43 @@ def test_rollup_state_compacts_per_partition(spark, tmp_path):
     stream = (
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).json(src)
     )
-    q = start_incremental_rollup(
-        spark, stream, state, str(tmp_path / "ckpt"), available_now=True
-    )
+    q = start_incremental_rollup(spark, stream, state, str(tmp_path / "ckpt"))
     q.awaitTermination(300)
 
     before = sorted(
         map(tuple, daily_view(read_rollup(spark, state)).collect())
     )
-    contrib_root = os.path.join(state, "contrib")
-    assert os.listdir(contrib_root), "per-batch contribution dirs must exist"
-
-    # design property: contribution dirs accrete one-per-batch (append-only
-    # crash-safe hot path); compact_rollup folds them into a committed
-    # baseline, bounding live dirs at keep_last + baseline
+    from mysql_cdc_debezium_starrocks_spark.streaming._state import (
+        _BASELINE,
+        numbered_ids,
+    )
     from mysql_cdc_debezium_starrocks_spark.streaming.rollup import (
+        _CONTRIB,
         compact_rollup,
         merge_rollup_batch,
     )
 
-    next_id = 1 + max(
-        int(d.split("=")[1]) for d in os.listdir(contrib_root)
-    )
+    contrib_root = os.path.join(state, _CONTRIB)
+    assert numbered_ids(contrib_root), "per-batch contribution dirs must exist"
+
+    # design property: contribution dirs accrete one-per-batch (append-only
+    # crash-safe hot path); compact_rollup folds them into a committed
+    # baseline, bounding live dirs at keep_last + baseline
+    next_id = 1 + max(numbered_ids(contrib_root))
     extra = events.limit(50)
     merge_rollup_batch(spark, state, extra, batch_id=next_id)
     merge_rollup_batch(spark, state, extra, batch_id=next_id + 1)
     before = sorted(map(tuple, daily_view(read_rollup(spark, state)).collect()))
-    assert len(os.listdir(contrib_root)) >= 3
+    assert len(numbered_ids(contrib_root)) >= 3
 
     compact_rollup(spark, state, keep_last=1)
-    live = os.listdir(contrib_root)
+    live = numbered_ids(contrib_root)
     assert len(live) == 1, f"folded batches must be GC'd, left: {live}"
     folded = sorted(map(tuple, daily_view(read_rollup(spark, state)).collect()))
     assert folded == before, "compaction must not change any value"
 
     # baseline data dir is a plain leaf parquet dir -> compact_files applies
-    base_root = os.path.join(state, "baseline")
+    base_root = os.path.join(contrib_root, _BASELINE)
     (ver,) = os.listdir(base_root)
     frag = os.path.join(base_root, ver, "data")
 
@@ -490,7 +491,12 @@ def test_rollup_compaction_crash_windows_are_safe(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from mysql_cdc_debezium_starrocks_spark.streaming._state import (
+        _BASELINE,
+        _COMMITTED,
+    )
     from mysql_cdc_debezium_starrocks_spark.streaming.rollup import (
+        _CONTRIB,
         compact_rollup,
         daily_view,
         merge_rollup_batch,
@@ -513,14 +519,15 @@ def test_rollup_compaction_crash_windows_are_safe(spark, tmp_path):
     snapshot = str(tmp_path / "snap")
     shutil.copytree(state, snapshot)
     compact_rollup(spark, state, keep_last=1)
-    base_root = os.path.join(state, "baseline")
+    base_rel = os.path.join(_CONTRIB, _BASELINE)
+    base_root = os.path.join(state, base_rel)
     (ver,) = os.listdir(base_root)
     uncommitted = str(tmp_path / "uncommitted")
     shutil.copytree(snapshot, uncommitted)
     shutil.copytree(
-        os.path.join(base_root, ver), os.path.join(uncommitted, "baseline", ver)
+        os.path.join(base_root, ver), os.path.join(uncommitted, base_rel, ver)
     )
-    os.remove(os.path.join(uncommitted, "baseline", ver, "_COMMITTED"))
+    os.remove(os.path.join(uncommitted, base_rel, ver, _COMMITTED))
     got = sorted(map(tuple, daily_view(read_rollup(spark, uncommitted)).collect()))
     assert got == truth, "uncommitted baseline must be ignored"
 
@@ -528,7 +535,7 @@ def test_rollup_compaction_crash_windows_are_safe(spark, tmp_path):
     committed = str(tmp_path / "committed")
     shutil.copytree(snapshot, committed)  # all 3 contrib dirs still present
     shutil.copytree(
-        os.path.join(base_root, ver), os.path.join(committed, "baseline", ver)
+        os.path.join(base_root, ver), os.path.join(committed, base_rel, ver)
     )
     got = sorted(map(tuple, daily_view(read_rollup(spark, committed)).collect()))
     assert got == truth, "manifest must exclude folded-but-not-yet-GC'd dirs"
@@ -613,8 +620,7 @@ def test_dedup_at_ingest_finds_cross_batch_pairs(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(src)
     )
-    q = start_dedup_ingest(spark, stream, state, str(tmp_path / "ck"),
-                           available_now=True)
+    q = start_dedup_ingest(spark, stream, state, str(tmp_path / "ck"))
     q.awaitTermination(120)
 
     got = {

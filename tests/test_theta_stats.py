@@ -113,7 +113,6 @@ def test_streaming_e2e(spark, tmp_path):
     stream = spark.readStream.schema(schema).parquet(src)
     q = start_theta_load(
         spark, stream, state, str(tmp_path / "ckpt"), "o_custkey",
-        available_now=True,
     )
     q.awaitTermination(120)
     merged = sorted(
