@@ -1,0 +1,108 @@
+"""Session artifact store: the one cache for DataFrames shared across
+queries (near-dup pairs, signature tables, vocabularies, the CDC live
+table, ...), the batch form of "ingest once, query many".
+
+- An artifact is keyed by (Spark application, dataset path, kind).
+- :func:`artifact` is the one get-or-build entry.  On a miss it persists
+  ``build()`` at the default storage level, materializes it eagerly with a
+  timed noop write (``BUILD_SECONDS``) and inserts it into the LRU.
+- The LRU holds ``_CAPACITY`` entries and unpersists what it evicts or
+  replaces; a caller still holding that frame just recomputes it.
+- :func:`register` inserts a frame as-is (the ``materialize_*_artifacts``
+  parquet swaps).
+- :func:`clear` unpersists every entry and empties the store.  Spark's
+  CacheManager matches by plan, so a frame left cached would serve the
+  next rebuild; after ``clear()`` a rebuild is really cold.
+
+A miss just computes the frame, so every registry query stays
+self-contained for the oracle parity check.
+"""
+
+from __future__ import annotations
+
+import os
+import time
+
+from pyspark.sql import DataFrame, SparkSession
+
+# Entries before LRU eviction.  The cap must hold every kind one dataset
+# uses at once, or the bench's alphabetical query order evicts a kind
+# between two of its consumers and rebuilds it mid-run (seen once as
+# text_bpe_merges swinging 0.12 -> 1.0 s with no change to it).  The census
+# is 34 kinds: 5 dedup (simhash, pairs, sigs, components, mh_eval_pairs),
+# 8 ANN (ann_truth, lsh_topk, ivf_index, ivf_probes, kmeans_assign,
+# pq_codes, pq_dtab, kmeans_silhouette), 2 embedding moments, 3 BPE,
+# 2 pHash, 4 text (doc_tokens, text_quality, unigram_vocab, decontam_hits),
+# 5 stats (pmi_uni, ks_hist, vocab_ranked, kl_source_term,
+# token_budget_ranked), ntile_sorted, 2 CDC (cdc_parsed_log, cdc_live) and
+# 2 TPC-H (q11_part_value, q15_revenue).  40 leaves headroom; re-count when
+# adding a kind (grep "artifact(").
+_CAPACITY = 40
+_CACHE: dict[tuple, DataFrame] = {}
+
+# Wall seconds each artifact took to build, keyed like the store.
+# Observability only: a consumer's per-query time measures a cache read, and
+# the build cost lands in whichever query ran first; bench.py reports this
+# map in BENCH_FULL.json.  A nested build (a build() that reads another
+# artifact) charges the inner kind separately AND inside the outer total.
+BUILD_SECONDS: dict[tuple, float] = {}
+
+
+def _key(spark: SparkSession, sf_dir: str, kind: str) -> tuple:
+    return (spark.sparkContext.applicationId, os.path.abspath(sf_dir), kind)
+
+
+def _get(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame | None:
+    key = _key(spark, sf_dir, kind)
+    df = _CACHE.pop(key, None)
+    if df is not None:
+        # true LRU: refresh recency so a hot entry (the active dataset's
+        # pairs frame, hit by every curation consumer) never evicts first
+        _CACHE[key] = df
+    return df
+
+
+def _unpersist(df: DataFrame, blocking: bool = False) -> None:
+    try:
+        df.unpersist(blocking)
+    except Exception:
+        pass  # session may be gone; release is best-effort
+
+
+def register(
+    spark: SparkSession, sf_dir: str, kind: str, df: DataFrame
+) -> DataFrame:
+    """Insert ``df`` as the (session, dataset, kind) artifact, unpersisting
+    the frame it displaces and, when full, the least recently used one."""
+    key = _key(spark, sf_dir, kind)
+    displaced = _CACHE.pop(key, None)
+    if displaced is not None and displaced is not df:
+        _unpersist(displaced)
+    while len(_CACHE) >= _CAPACITY:
+        _unpersist(_CACHE.pop(next(iter(_CACHE))))
+    _CACHE[key] = df
+    return df
+
+
+def artifact(spark: SparkSession, sf_dir: str, kind: str, build) -> DataFrame:
+    """The cached (session, dataset, kind) frame, built on a miss: persist
+    ``build()``, materialize it now with a timed noop write, and register
+    it.  The eager write puts the build cost where it always landed (the
+    first consumer's call) but attributes it per kind in ``BUILD_SECONDS``."""
+    df = _get(spark, sf_dir, kind)
+    if df is None:
+        t0 = time.perf_counter()
+        df = build().persist()
+        df.write.mode("overwrite").format("noop").save()
+        BUILD_SECONDS[_key(spark, sf_dir, kind)] = round(
+            time.perf_counter() - t0, 3
+        )
+        register(spark, sf_dir, kind, df)
+    return df
+
+
+def clear() -> None:
+    """Unpersist every artifact (blocking until its storage is released)
+    and empty the store."""
+    while _CACHE:
+        _unpersist(_CACHE.popitem()[1], blocking=True)

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..cdc.apply import materialize_orders
 from ..cdc.generator import synth_order_events_json
+from ._artifacts import artifact
 
 # The oracle derives the same event log relationally: base insert, update for
 # key%5==0 (status UPDATED, +10.00 exact decimal), delete for key%7==0.
@@ -57,14 +58,10 @@ def _live(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _parsed_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized ("cdc_parsed_log") parsed wire log — the "write the
     parsed log once, scan it many" layout every log-reading query shares
-    (as-of, diff, SCD2, monitor; r08).  Also retires cdc_asof_snapshot's
-    per-invocation bare ``.persist()``, which stranded one cached copy per
-    call (the exact leak memoized_artifact exists to prevent)."""
-    from .dedup import memoized_artifact
-
+    (as-of, diff, SCD2, monitor; r08)."""
     from ..cdc.apply import parse_envelope
 
-    return memoized_artifact(
+    return artifact(
         spark,
         sf_dir,
         "cdc_parsed_log",
@@ -80,9 +77,7 @@ def _live_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     site building via the same :func:`_live` the full-path ``cdc_apply``
     runs, so the two can never diverge; ``cdc_apply`` itself stays the
     un-memoized wire-path measurement."""
-    from .dedup import memoized_artifact
-
-    return memoized_artifact(
+    return artifact(
         spark, sf_dir, "cdc_live", lambda: _live(spark, sf_dir)
     )
 
@@ -149,8 +144,7 @@ def cdc_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..cdc.schemas import TS_WIRE_FORMAT
 
     # the cutoff aggregate AND the replay both consume the parsed log; the
-    # session artifact (_parsed_log) caches it ONCE per dataset — the
-    # previous per-invocation bare .persist() stranded a copy per call
+    # session artifact (_parsed_log) caches it ONCE per dataset
     parsed = _parsed_log(spark, sf_dir)
     cut = parsed.agg(
         F.floor(F.max("_seq") * 0.6).cast("long").alias("cut")

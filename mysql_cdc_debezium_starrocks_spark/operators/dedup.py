@@ -45,6 +45,7 @@ from ..functions import (
     word_shingles_sql,
     words,
 )
+from ._artifacts import artifact, register
 
 NUM_HASHES = 12
 BANDS = 4
@@ -326,15 +327,15 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Within this repo's contract the operator stays exact; the regime and
     its knobs are the documented scale boundary (the
     ``dedup_embedding_cosine`` precedent)."""
-    df = _artifact_get(spark, sf_dir, "pairs")
-    if df is None:
-        df = _simhash_pairs_uncached(spark, sf_dir).persist()
-        _artifact_put(spark, sf_dir, "pairs", df)
-    return df
+    return artifact(
+        spark, sf_dir, "pairs", lambda: _simhash_pairs_uncached(spark, sf_dir)
+    )
 
 
 def _simhash_pairs_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sim = _simhash(spark, sf_dir).persist()  # reused by both join sides
+    # reused by both join sides; the registry's dedup_simhash plan matches
+    # it, so Spark serves that query from this copy too
+    sim = artifact(spark, sf_dir, "simhash", lambda: _simhash(spark, sf_dir))
     bands = F.array(
         *[
             F.struct(
@@ -472,68 +473,8 @@ _UNION_FIND_MAX_PAIRS = 2_000_000
 # SAME SimHash band-join pass.  Production funnels materialize that pass once
 # (the streaming side already does: ``streaming.dedup_ingest`` persists a
 # signature store and band-joins only new docs against it); the batch family
-# mirrors that here with a session-scoped artifact cache plus an optional
-# on-disk parquet form (:func:`materialize_dup_artifacts`).  Every consumer
-# keeps a standalone fallback — a cache miss just computes the pass — so each
-# registry query stays self-contained for the correctness driver.
-
-_ARTIFACT_CACHE: dict[tuple, DataFrame] = {}
-# (app, sf_dir, kind) entries before LRU eviction: must hold every live kind
-# for ONE dataset at once or the bench's alphabetical interleaving thrashes
-# the cache.  Round 8 audit: the kind census reached 25 (3 dedup + 7 ANN +
-# 2 BPE + 2 pHash + ranking/vocab/stats frames + round-7/8 additions ending
-# with token_budget_ranked), one OVER the previous cap of 24 — observed as
-# a mid-bench rebuild swinging text_bpe_merges 0.12 -> 1.0 s with zero code
-# change to it.  r08 optimization adds 6 kinds (mh_eval_pairs,
-# emb_partials, emb_int_moments, bpe_states_all, cdc_parsed_log, cdc_live)
-# and retires one (monitor_parsed, folded into cdc_parsed_log) -> census
-# 30; 40 = census + headroom so the next few additions cannot reintroduce
-# mid-bench thrash; re-audit when adding kinds (grep
-# memoized_artifact/_artifact_put).  All kinds are bounded
-# (pair/top-k/code/probe/vocab/moment tables — the corpus-scale entries,
-# ivf_index and the CDC parsed log/live table, are the ingested layouts
-# those families exist to share).
-_ARTIFACT_CACHE_MAX = 40
-
-
-def _artifact_key(spark: SparkSession, sf_dir: str, kind: str) -> tuple:
-    import os
-
-    return (spark.sparkContext.applicationId, os.path.abspath(sf_dir), kind)
-
-
-def _artifact_get(spark: SparkSession, sf_dir: str, kind: str):
-    key = _artifact_key(spark, sf_dir, kind)
-    df = _ARTIFACT_CACHE.get(key)
-    if df is not None:
-        # true LRU: refresh recency so a hot entry (the active dataset's
-        # pairs frame, hit by every curation consumer) never evicts first
-        _ARTIFACT_CACHE[key] = _ARTIFACT_CACHE.pop(key)
-    return df
-
-
-def _unpersist_quiet(df: DataFrame) -> None:
-    try:
-        df.unpersist()
-    except Exception:
-        pass  # session may be gone; eviction is best-effort
-
-
-def _artifact_put(
-    spark: SparkSession, sf_dir: str, kind: str, df: DataFrame
-) -> DataFrame:
-    key = _artifact_key(spark, sf_dir, kind)
-    displaced = _ARTIFACT_CACHE.pop(key, None)
-    if displaced is not None and displaced is not df:
-        # replacement (e.g. materialize_dup_artifacts swapping in the
-        # parquet-backed frame): release the displaced frame's executor
-        # storage — correctness-safe, any caller still holding it just
-        # recomputes on next access
-        _unpersist_quiet(displaced)
-    while len(_ARTIFACT_CACHE) >= _ARTIFACT_CACHE_MAX:
-        _unpersist_quiet(_ARTIFACT_CACHE.pop(next(iter(_ARTIFACT_CACHE))))
-    _ARTIFACT_CACHE[key] = df
-    return df
+# mirrors that here with session artifacts (``_artifacts``) plus an optional
+# on-disk parquet form (:func:`materialize_dup_artifacts`).
 
 
 def shared_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -549,44 +490,6 @@ def shared_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_simhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
 
 
-# Wall seconds spent materializing each artifact kind, keyed like the cache
-# ((app, sf_dir, kind)).  Observability only (r08 verdict #7: artifact
-# consumers' per-query bench numbers measure cache reads; the build cost was
-# paid invisibly inside some query's warm pass).  bench.py reports the map
-# in BENCH_FULL.json so artifact-build regressions are visible per round.
-# Nested builds (an artifact whose build() reads another artifact) charge
-# the inner kind separately AND inside the outer kind's total.
-ARTIFACT_BUILD_SECONDS: dict[tuple, float] = {}
-
-
-def memoized_artifact(spark: SparkSession, sf_dir: str, kind: str, build):
-    """Session-memoized persisted DataFrame: compute once per (session,
-    dataset, kind) via ``build()``, persist, and register in the LRU
-    artifact cache (which releases executor storage on eviction or
-    replacement).  Use for bounded intermediates shared across queries or
-    re-executed by the bench's repeated runs — a bare per-call
-    ``.persist()`` strands one cached copy per invocation.
-
-    The build is materialized EAGERLY (noop sink) on the cache miss: the
-    cost lands in the same place it always did (the first consumer's
-    invocation — query construction runs inside the bench's timed region),
-    but it can now be measured and attributed per kind
-    (``ARTIFACT_BUILD_SECONDS``) instead of hiding inside whichever query
-    happened to run first."""
-    df = _artifact_get(spark, sf_dir, kind)
-    if df is None:
-        import time as _time
-
-        t0 = _time.perf_counter()
-        df = build().persist()
-        df.write.mode("overwrite").format("noop").save()
-        ARTIFACT_BUILD_SECONDS[_artifact_key(spark, sf_dir, kind)] = round(
-            _time.perf_counter() - t0, 3
-        )
-        _artifact_put(spark, sf_dir, kind, df)
-    return df
-
-
 def shared_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized banded MinHash :func:`signature_table` over the
     corpus — the third shared artifact (pairs, components, signatures).
@@ -595,22 +498,24 @@ def shared_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``eval_minhash_pr`` each repeated; at 100 TB it is the signature
     table a funnel writes to storage once (the streaming twin is
     ``dedup_ingest``'s incremental store)."""
-    df = _artifact_get(spark, sf_dir, "sigs")
-    if df is None:
-        df = signature_table(load_spread(spark, sf_dir, "documents")).persist()
-        _artifact_put(spark, sf_dir, "sigs", df)
-    return df
+    return artifact(
+        spark,
+        sf_dir,
+        "sigs",
+        lambda: signature_table(load_spread(spark, sf_dir, "documents")),
+    )
 
 
 def shared_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup connected components, memoized like :func:`shared_dup_pairs`
     (the clustering itself is pair-scale; the win is sharing the pair
     generation and not re-running the union-find per consumer)."""
-    df = _artifact_get(spark, sf_dir, "components")
-    if df is None:
-        df = _components_over(spark, shared_dup_pairs(spark, sf_dir)).persist()
-        _artifact_put(spark, sf_dir, "components", df)
-    return df
+    return artifact(
+        spark,
+        sf_dir,
+        "components",
+        lambda: _components_over(spark, shared_dup_pairs(spark, sf_dir)),
+    )
 
 
 def materialize_dup_artifacts(
@@ -629,8 +534,8 @@ def materialize_dup_artifacts(
     # dedup_simhash_pairs verbatim, not just the 2-col consumers
     dedup_simhash_pairs(spark, sf_dir).write.mode("overwrite").parquet(pairs_path)
     shared_components(spark, sf_dir).write.mode("overwrite").parquet(comp_path)
-    _artifact_put(spark, sf_dir, "pairs", spark.read.parquet(pairs_path))
-    _artifact_put(spark, sf_dir, "components", spark.read.parquet(comp_path))
+    register(spark, sf_dir, "pairs", spark.read.parquet(pairs_path))
+    register(spark, sf_dir, "components", spark.read.parquet(comp_path))
     return {"pairs": pairs_path, "components": comp_path}
 
 
@@ -1120,7 +1025,7 @@ def minhash_eval_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     site so both gates grade the identical frame."""
     from functools import partial
 
-    return memoized_artifact(
+    return artifact(
         spark, sf_dir, "mh_eval_pairs", partial(_minhash_eval_pairs_build, spark, sf_dir)
     )
 

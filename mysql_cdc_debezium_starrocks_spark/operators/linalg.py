@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_spread
+from ._artifacts import artifact
 
 DIM = 64  # fixture embedding dimensionality (FIXTURES.md §C)
 
@@ -71,13 +72,11 @@ def _partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     one plan), ``emb_pca_project`` / ``emb_top_eigenvector`` (eager
     driver collects at query construction) and :func:`fit_pca` each
     re-ran per invocation (r08; the shared_dup_pairs pattern)."""
-    from .dedup import memoized_artifact
-
     def build() -> DataFrame:
         emb = load_spread(spark, sf_dir, "embeddings").select("embedding")
         return emb.mapInPandas(_cov_partials, schema=_PARTIALS_SCHEMA)
 
-    return memoized_artifact(spark, sf_dir, "emb_partials", build)
+    return artifact(spark, sf_dir, "emb_partials", build)
 
 
 def _int_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,8 +85,6 @@ def _int_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     build is a corpus-scale posexplode that ``emb_pca_project``'s
     centering pass and ``emb_outlier_zscore``'s z-moments each re-ran per
     invocation (r08)."""
-    from .dedup import memoized_artifact
-
     def build() -> DataFrame:
         emb = load_spread(spark, sf_dir, "embeddings")
         el = emb.select(
@@ -101,7 +98,7 @@ def _int_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("xq") * F.col("xq")).alias("sxx"),
         )
 
-    return memoized_artifact(spark, sf_dir, "emb_int_moments", build)
+    return artifact(spark, sf_dir, "emb_int_moments", build)
 
 
 def emb_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import cached_count, load_spread
 from ..functions import phash32, phash32_sql
+from ._artifacts import artifact
 
 FRAME_BYTES = 16
 FRAME_STRIDE = 4  # sample every 4th frame
@@ -477,11 +478,9 @@ def mm_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     image-dedup funnel materializes once.  Exactly oracled: PPM decode is
     byte-exact, so DuckDB reproduces every bit from the text chars alone.
     """
-    from .dedup import memoized_artifact
-
     # session-memoized ("image_phash"): the 8-byte-per-image index artifact
     # every pHash consumer (dupes, components) searches — one memo site
-    return memoized_artifact(
+    return artifact(
         spark, sf_dir, "image_phash",
         lambda: phash_of(_with_blob(spark, sf_dir)),
     )
@@ -538,12 +537,10 @@ def mm_phash_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup.dedup_simhash_pairs`` for why that floor is inherent to
     exact-recall banding and which knobs trade recall past it.
     """
-    from .dedup import memoized_artifact
-
     def build():
         return _phash_dupes_build(spark, sf_dir)
 
-    return memoized_artifact(spark, sf_dir, "phash_pairs", build)
+    return artifact(spark, sf_dir, "phash_pairs", build)
 
 
 def phash_bands(ph: DataFrame) -> DataFrame:

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load
+from ._artifacts import artifact
 
 
 def _dec(c: str, p: int = 12, s: int = 2):
@@ -80,13 +81,11 @@ def ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, the rest ``n div 4`` (the tie-free total order makes this
     bit-identical to the oracle's ``ntile(4) OVER``).
     """
-    from .dedup import memoized_artifact
-
     o = load(spark, sf_dir, "orders")
     # session-memoized: the range-partitioned frame must be computed once
     # (both the counts and ranked branches read the SAME partitioning) and
     # a bare per-call persist would strand one cached copy per bench run
-    sorted_o = memoized_artifact(
+    sorted_o = artifact(
         spark,
         sf_dir,
         "ntile_sorted",

@@ -40,6 +40,7 @@ from ..functions import (
     word_shingles_sql,
     words,
 )
+from ._artifacts import artifact
 
 STRATA_PCT = {"en": 50, "de": 30, "fr": 20, "es": 10, "zh": 5}
 _DEFAULT_PCT = 25
@@ -663,8 +664,6 @@ def text_pmi_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines.  Self-pairs (a == b) are window-internal repetition, not
     association, and are dropped before counting.
     """
-    from .dedup import memoized_artifact
-
     d = load_spread(spark, sf_dir, "documents")
     # materialize the token ARRAY once per row before slicing: inlining
     # words(text) into the 3 offsets' slice/zip arguments re-evaluates the
@@ -699,7 +698,7 @@ def text_pmi_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # vocab-bounded; session-memoized so the word_a and word_b joins (and
     # repeated bench runs) share ONE corpus-scale token-explode scan
-    uni = memoized_artifact(
+    uni = artifact(
         spark,
         sf_dir,
         "pmi_uni",
@@ -740,12 +739,10 @@ def stats_ks_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     products reach n_s * n_rest ~ N^2/4: fine in int64 to ~4e9 docs,
     DECIMAL(38,0) on both engines past that.
     """
-    from .dedup import memoized_artifact
-
     d = load_spread(spark, sf_dir, "documents")
     # histogram-scale; session-memoized so gv/srcs/grid (and repeated bench
     # runs) share ONE corpus scan without stranding a persist per call
-    hist = memoized_artifact(
+    hist = artifact(
         spark,
         sf_dir,
         "ks_hist",
@@ -1207,7 +1204,6 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite); coverage per checkpoint is one more partial-agg'd groupBy
     over an exploded 5-element checkpoint array.  All-integer.
     """
-    from .dedup import memoized_artifact
     from .text import doc_tokens
 
     wc = (
@@ -1221,7 +1217,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branches below MUST read the same range partitioning (recomputing it
     # re-samples the boundaries), and a bare persist would strand a copy
     # per bench run
-    ranked_src = memoized_artifact(
+    ranked_src = artifact(
         spark,
         sf_dir,
         "vocab_ranked",
@@ -1904,13 +1900,12 @@ def stats_kl_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict #5, same fix as text_perplexity).  The scoring join is
     vocab-sized, AQE-broadcastable.
     """
-    from .dedup import memoized_artifact
     from .text import doc_tokens
 
     terms = doc_tokens(spark, sf_dir).select(
         "source", F.col("word").alias("term")
     )
-    st = memoized_artifact(
+    st = artifact(
         spark,
         sf_dir,
         "kl_source_term",
@@ -2342,8 +2337,6 @@ def _token_budget_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches MUST observe the same (sampled) range boundaries, and both
     public queries share one build.
     """
-    from .dedup import memoized_artifact
-
     def build():
         d = load_spread(spark, sf_dir, "documents")
         toks = d.select(
@@ -2356,7 +2349,7 @@ def _token_budget_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
             32, "source", "pri", "doc_id"
         ).withColumn("pid", F.spark_partition_id())
 
-    ranked = memoized_artifact(spark, sf_dir, "token_budget_ranked", build)
+    ranked = artifact(spark, sf_dir, "token_budget_ranked", build)
     psums = ranked.groupBy("pid", "source").agg(
         F.sum("tk").cast("long").alias("psum")
     )

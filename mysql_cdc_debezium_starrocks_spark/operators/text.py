@@ -14,6 +14,8 @@ reduction), so it parallelizes over input splits untouched at 100 TB.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -30,6 +32,7 @@ from ..functions import (
     word_shingles_sql,
     words,
 )
+from ._artifacts import artifact
 
 _W = WORDS_SQL.format(expr="text")
 
@@ -59,8 +62,6 @@ def doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     own ``explode`` behaved; consumers needing doc-level totals that must
     include token-less docs keep their own ``documents`` aggregate.
     """
-    from .dedup import memoized_artifact
-
     def build() -> DataFrame:
         d = load_spread(spark, sf_dir, "documents")
         return d.select(
@@ -70,7 +71,7 @@ def doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(words(F.col("text"))).alias("word"),
         )
 
-    return memoized_artifact(spark, sf_dir, "doc_tokens", build)
+    return artifact(spark, sf_dir, "doc_tokens", build)
 
 
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,9 +87,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-deriving it re-scans the corpus; the artifact is one narrow row per
     doc, exactly what a production funnel materializes after scoring.
     """
-    from .dedup import memoized_artifact
-
-    return memoized_artifact(
+    return artifact(
         spark, sf_dir, "text_quality", lambda: _text_quality_build(spark, sf_dir)
     )
 
@@ -276,14 +275,12 @@ def text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     join shuffles |distinct (doc,term)| rows, with AQE free to broadcast
     the vocab side when it is small.
     """
-    from .dedup import memoized_artifact
-
     terms = doc_tokens(spark, sf_dir).select(
         "doc_id", F.col("word").alias("term")
     )
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
 
-    counts = memoized_artifact(
+    counts = artifact(
         spark,
         sf_dir,
         "unigram_vocab",
@@ -394,9 +391,7 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs only) and read by corpus_curate, corpus_dedup_funnel, and the
     CorpusPipeline facade — one gram sweep per session serves all three.
     """
-    from .dedup import memoized_artifact
-
-    return memoized_artifact(
+    return artifact(
         spark, sf_dir, "decontam_hits",
         lambda: _text_decontaminate_build(spark, sf_dir),
     )
@@ -690,17 +685,15 @@ def _bpe_artifacts(spark: SparkSession, sf_dir: str):
     invocation.  One memo site builds both halves together (a tokenizer
     train job persists exactly these two tables); each stays
     standalone-correct on a cold cache."""
-    from .dedup import _artifact_get, _artifact_put
-
-    st = _artifact_get(spark, sf_dir, "bpe_state")
-    mg = _artifact_get(spark, sf_dir, "bpe_merges")
-    if st is None or mg is None:
-        state, outs, _ = _bpe_state(spark, sf_dir)
-        out = outs[0]
-        for o in outs[1:]:
-            out = out.unionByName(o)
-        st = _artifact_put(spark, sf_dir, "bpe_state", state.persist())
-        mg = _artifact_put(spark, sf_dir, "bpe_merges", out.persist())
+    # one lazy _bpe_state plan, built only when a half misses
+    learned = functools.cache(lambda: _bpe_state(spark, sf_dir))
+    st = artifact(spark, sf_dir, "bpe_state", lambda: learned()[0])
+    mg = artifact(
+        spark,
+        sf_dir,
+        "bpe_merges",
+        lambda: functools.reduce(DataFrame.unionByName, learned()[1]),
+    )
     return st, mg
 
 
@@ -1835,8 +1828,6 @@ def eval_bpe_compression_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain per invocation; the frame is (BPE_ROUNDS+1) x |vocab| rows,
     vocab-bounded), and the sweep is one partial-agg'd groupBy(rank).
     """
-    from .dedup import memoized_artifact
-
     def build() -> DataFrame:
         _, _, states = _bpe_state(spark, sf_dir)
         out = None
@@ -1847,7 +1838,7 @@ def eval_bpe_compression_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             out = stt if out is None else out.unionByName(stt)
         return out
 
-    sts = memoized_artifact(spark, sf_dir, "bpe_states_all", build)
+    sts = artifact(spark, sf_dir, "bpe_states_all", build)
     n_sym = F.size(F.split(F.trim(F.col("s")), " "))
     rows = sts.groupBy("rank").agg(
         F.sum("cnt").cast("long").alias("total_words"),

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ._artifacts import artifact
 
 
 def _dec(c: str, p: int = 12, s: int = 2):
@@ -263,19 +264,23 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     shipped by one nation's suppliers (NATION_5 — fixture nations are
     synthetic names); keep parts whose value exceeds 0.05% of the national
     total.  The per-part aggregate feeds BOTH sides of the comparison (the
-    rows and the global total), so it is persisted — one row per part, the
-    same size discipline as q15's revenue view — and the 1-row total is
-    broadcast.
+    rows and the global total), so it is a session artifact — one row per
+    part, the same size discipline as q15's revenue view — and the 1-row
+    total is broadcast.
     """
     l = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
     de = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey).select("s_suppkey")
-    pv = (
-        l.join(de, l.l_suppkey == de.s_suppkey)
-        .groupBy(F.col("l_partkey").alias("p_partkey"))
-        .agg(F.sum(_dec("l_extendedprice")).alias("value"))
-        .persist()
+    pv = artifact(
+        spark,
+        sf_dir,
+        "q11_part_value",
+        lambda: (
+            l.join(de, l.l_suppkey == de.s_suppkey)
+            .groupBy(F.col("l_partkey").alias("p_partkey"))
+            .agg(F.sum(_dec("l_extendedprice")).alias("value"))
+        ),
     )
     total = pv.agg(F.sum("value").alias("t"))
     return (
@@ -358,9 +363,16 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
     s = load(spark, sf_dir, "supplier")
-    # persist: the grouped revenue feeds BOTH the scalar max and the
-    # join-back; without it the lineitem scan-agg runs twice
-    rev = l.groupBy("l_suppkey").agg(F.sum(_disc_price()).alias("total_revenue")).persist()
+    # session artifact: the grouped revenue feeds BOTH the scalar max and
+    # the join-back; without it the lineitem scan-agg runs twice
+    rev = artifact(
+        spark,
+        sf_dir,
+        "q15_revenue",
+        lambda: l.groupBy("l_suppkey").agg(
+            F.sum(_disc_price()).alias("total_revenue")
+        ),
+    )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     return (
         rev.join(F.broadcast(mx), rev.total_revenue == F.col("mx"))

@@ -15,6 +15,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """``min(16g, half of physical RAM)``, in megabytes."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, ram // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "mysql-cdc-debezium-starrocks-spark",
     cpus: int | str | None = None,
@@ -60,11 +66,15 @@ def get_spark(
         # tasks left ~250 MB execution memory each BEFORE the ~26 persisted
         # artifact kinds a warm session holds; once the full census was
         # cached, storage squeezed execution and the shuffle-heavy dedup
-        # band joins degraded ~2x (r09 memtest: dedup_cross_source_matrix
-        # 1.9 vs 1.0 normalized fresh-session, recovered at 16g).  On a
-        # real cluster this is ordinary executor sizing (0.5 GB/core was
-        # the outlier, not the fix); env-overridable for small hosts.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        # band joins degraded ~2x (memtest: dedup_cross_source_matrix
+        # 1.9 vs 1.0 normalized fresh-session, recovered at 16g).  The
+        # default is 16g capped at half the host's RAM, so a small host is
+        # not promised more heap than it has.  On a real cluster this is
+        # ordinary executor sizing; SPARK_DRIVER_MEMORY overrides it.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
+        )
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

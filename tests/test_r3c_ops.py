@@ -157,36 +157,6 @@ def test_bpe_merge_application_handles_runs(spark, tmp_path):
     assert all(not o.collect() for o in outs[3:])
 
 
-def test_artifact_cache_is_lru_and_releases_displaced(spark):
-    from pyspark.sql import Row
-
-    from mysql_cdc_debezium_starrocks_spark.operators import dedup
-
-    cap = dedup._ARTIFACT_CACHE_MAX
-    saved = dict(dedup._ARTIFACT_CACHE)
-    dedup._ARTIFACT_CACHE.clear()
-    try:
-        dfs = {
-            i: spark.createDataFrame([Row(x=i)]).persist() for i in range(cap + 1)
-        }
-        for i in range(cap):
-            dedup._artifact_put(spark, f"/d{i}", "pairs", dfs[i])
-        # touching the oldest entry must refresh its recency...
-        assert dedup._artifact_get(spark, "/d0", "pairs") is dfs[0]
-        dedup._artifact_put(spark, f"/d{cap}", "pairs", dfs[cap])
-        # ...so the eviction takes /d1 (true LRU), not /d0 (FIFO)
-        assert dedup._artifact_get(spark, "/d0", "pairs") is dfs[0]
-        assert dedup._artifact_get(spark, "/d1", "pairs") is None
-        # replacement unpersists the displaced frame
-        repl = spark.createDataFrame([Row(x=100)])
-        dedup._artifact_put(spark, f"/d{cap}", "pairs", repl)
-        assert not dfs[cap].is_cached
-        assert dedup._artifact_get(spark, f"/d{cap}", "pairs") is repl
-    finally:
-        dedup._ARTIFACT_CACHE.clear()
-        dedup._ARTIFACT_CACHE.update(saved)
-
-
 def test_ann_recall_eval_invariants(spark):
     from mysql_cdc_debezium_starrocks_spark.operators.similarity import (
         IVF_TOPK,

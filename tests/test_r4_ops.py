@@ -124,7 +124,7 @@ def test_materialize_ann_artifacts_roundtrip(spark, tmp_path):
     identical to the freshly built artifacts (search-the-materialized-form
     contract), and the registered artifacts must actually be the parquet
     frames."""
-    from mysql_cdc_debezium_starrocks_spark.operators import dedup
+    from mysql_cdc_debezium_starrocks_spark.operators._artifacts import clear
     from mysql_cdc_debezium_starrocks_spark.operators.similarity import (
         ann_ivf_topk,
         ann_ivfpq_search,
@@ -153,7 +153,7 @@ def test_materialize_ann_artifacts_roundtrip(spark, tmp_path):
     )
     # and a cold session-cache still resolves through parquet contents:
     # clear the memo, re-materialize nothing, verify a fresh build matches
-    dedup._ARTIFACT_CACHE.clear()
+    clear()
     assert (
         sorted(tuple(r) for r in ann_ivf_topk(spark, SF_SMOKE).collect())
         == fresh_ivf

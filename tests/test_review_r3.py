@@ -115,8 +115,9 @@ def test_dup_pair_artifact_shared_across_consumers(spark):
     dataset): the memo returns the same persisted frame, and the
     parquet-materialized form serves identical rows (VERDICT r02 next #1)."""
     from mysql_cdc_debezium_starrocks_spark.operators import dedup
+    from mysql_cdc_debezium_starrocks_spark.operators._artifacts import clear
 
-    dedup._ARTIFACT_CACHE.clear()
+    clear()
     p1 = dedup.dedup_simhash_pairs(spark, SF)
     p2 = dedup.dedup_simhash_pairs(spark, SF)
     assert p1 is p2  # memo hit, not a recomputation
@@ -131,8 +132,9 @@ def test_dup_pair_artifact_materialized_roundtrip(spark, tmp_path):
     """materialize_dup_artifacts writes the pair/component parquet and
     re-registers the parquet-backed frames; consumers read identical data."""
     from mysql_cdc_debezium_starrocks_spark.operators import dedup
+    from mysql_cdc_debezium_starrocks_spark.operators._artifacts import clear
 
-    dedup._ARTIFACT_CACHE.clear()
+    clear()
     computed_pairs = sorted(
         (r.doc_a, r.doc_b, r.hamming)
         for r in dedup.dedup_simhash_pairs(spark, SF).collect()
@@ -152,4 +154,4 @@ def test_dup_pair_artifact_materialized_roundtrip(spark, tmp_path):
         (r.doc_id, r.component_id)
         for r in dedup.dedup_components(spark, SF).collect()
     ) == computed_comp
-    dedup._ARTIFACT_CACHE.clear()
+    clear()

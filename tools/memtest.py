@@ -1,8 +1,8 @@
-"""Reproduce the full-session storage-pressure effect (r09): warm EVERY
+"""Reproduce the full-session storage-pressure effect: warm EVERY
 registry query once (building all session artifacts, as bench.py's warm
 pass does), then time the degraded family with bench methodology.
 
-Usage: SPARK_DRIVER_MEMORY=8g python tools/memtest_r09.py q1 q2 ...
+Usage: SPARK_DRIVER_MEMORY=8g python tools/memtest.py q1 q2 ...
 """
 from __future__ import annotations
 
@@ -34,7 +34,7 @@ def main() -> None:
         print(f"{n}: {out[n]}", file=sys.stderr, flush=True)
     p1 = bench._median([bench._exec(queries[bench.PROBE_QUERY], spark, staged, settle=True) for _ in range(3)])
     drift = bench._median([p0, p1]) / bench.CONTROL_ANCHORS[bench.PROBE_QUERY]
-    print(json.dumps({"mem": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+    print(json.dumps({"mem": spark.sparkContext.getConf().get("spark.driver.memory"),
                       "timings": out,
                       "normalized": {n: round(v / drift, 3) for n, v in out.items()},
                       "drift": round(drift, 3)}))

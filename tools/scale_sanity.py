@@ -383,12 +383,14 @@ def _time(fn, spark, d: str) -> float:
     before EACH run: memoized shared artifacts (dedup pairs/signatures, the
     round-4 ANN index family) would otherwise make the timed run a cache
     read — the ratio must charge every query its full build, the
-    scale-relevant part.  No-op for queries that don't memoize."""
-    from mysql_cdc_debezium_starrocks_spark.operators import dedup
+    scale-relevant part.  ``clear()`` also releases Spark's cached copies,
+    which a rebuild with a matching plan would otherwise read.  No-op for
+    queries that don't memoize."""
+    from mysql_cdc_debezium_starrocks_spark.operators._artifacts import clear
 
-    dedup._ARTIFACT_CACHE.clear()
+    clear()
     fn(spark, d).write.mode("overwrite").format("noop").save()  # warm
-    dedup._ARTIFACT_CACHE.clear()
+    clear()
     t0 = time.perf_counter()
     fn(spark, d).write.mode("overwrite").format("noop").save()
     return time.perf_counter() - t0
@@ -428,8 +430,7 @@ def main() -> None:
     # DISTRIBUTED tier (fixtures cannot reach the 2M-pair switch naturally,
     # so the threshold is dropped to 0 — same code path the switch takes)
     from mysql_cdc_debezium_starrocks_spark.operators import dedup
-
-    _time_fresh = _time  # cache-clearing is now _time's default behavior
+    from mysql_cdc_debezium_starrocks_spark.operators._artifacts import clear
 
     for tier, threshold in (("unionfind", None), ("distributed", 0)):
         saved = dedup._UNION_FIND_MAX_PAIRS
@@ -447,8 +448,8 @@ def main() -> None:
                     f"mysql_cdc_debezium_starrocks_spark.{mod}"
                 )
                 fn = getattr(m, name)
-                t1 = _time_fresh(fn, spark, sf_dir)
-                tn = _time_fresh(fn, spark, out)
+                t1 = _time(fn, spark, sf_dir)
+                tn = _time(fn, spark, out)
                 print(
                     f"| {name} [{tier}] | {t1:.2f} | {tn:.2f} | "
                     f"{tn / t1:.1f}x |",
@@ -456,7 +457,7 @@ def main() -> None:
                 )
         finally:
             dedup._UNION_FIND_MAX_PAIRS = saved
-            dedup._ARTIFACT_CACHE.clear()
+            clear()
 
     # pair-regime sweep: synthesized vector counts where pair work DOMINATES
     # (quadratic growth cannot hide under fixed costs — r06 "missing #1")
