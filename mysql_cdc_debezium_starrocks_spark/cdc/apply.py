@@ -71,6 +71,15 @@ def latest_by_key(df: DataFrame, key: str, seq_col: str = "_seq") -> DataFrame:
     return out.select(key, *[F.col(f"_latest.{c}").alias(c) for c in value_cols])
 
 
+def not_deleted(deleted_col: str = "__deleted") -> Column:
+    """The live-row predicate: true unless ``deleted_col`` is ``'true'``.
+
+    A NULL marker is live (inserts from producers that never set it).
+    Every reader of tombstone-retaining state filters with this.
+    """
+    return F.col(deleted_col).isNull() | (F.col(deleted_col) != F.lit("true"))
+
+
 def apply_cdc_log(
     events: DataFrame,
     key: str,
@@ -88,10 +97,7 @@ def apply_cdc_log(
     streaming path additionally quarantines them (materializer dead-letter).
     """
     latest = latest_by_key(events.filter(F.col(key).isNotNull()), key, seq_col)
-    live = latest.filter(
-        F.col(deleted_col).isNull() | (F.col(deleted_col) != F.lit("true"))
-    )
-    return live.drop(seq_col, deleted_col)
+    return latest.filter(not_deleted(deleted_col)).drop(seq_col, deleted_col)
 
 
 def materialize_orders(events_json: DataFrame) -> DataFrame:

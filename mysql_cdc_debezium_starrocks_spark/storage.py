@@ -16,12 +16,151 @@ a disproportionate share of rows (hot key), AQE's skew splitting handles
 sort-merge spills, but a broadcast-incompatible hot key can still pin one
 task.  Salting splits each hot key into ``salts`` sub-keys by replicating the
 small side — turning one straggler task into ``salts`` parallel ones.
+
+The streaming states (CDC table, join MV, secondary index) persist that
+hash layout as ``_bucket=i`` directories; the helpers below define it, its
+keyed upsert and the crash-safe directory swap once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import json
+import os
+import shutil
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .cdc.apply import latest_by_key
+
+BUCKET_COL = "_bucket"
+
+
+def bucket_of(col: str | Column, buckets: int) -> Column:
+    """PK bucket ``pmod(hash(col), n)`` of a column name or a literal.
+    ``hash`` is type-sensitive: a literal must carry the key's exact type."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.pmod(F.hash(c), F.lit(buckets)).cast("int")
+
+
+def read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet dir at ``path``, or ``None`` when it does not exist.
+
+    An existence check, NOT a caught read error: a transient failure read
+    as "no state" would let the next bucket overwrite rebuild the touched
+    buckets from one batch — silent loss of every key in them.  Read errors
+    propagate and pause the load (Routine Load's error-pause analog, T8).
+    """
+    if not os.path.isdir(path):
+        return None
+    return spark.read.parquet(path)
+
+
+def upsert_buckets(
+    current: DataFrame | None,
+    delta: DataFrame,
+    touched: list[int],
+    key: str,
+    bucket_key: str,
+    buckets: int,
+    seq_col: str = "_seq",
+) -> DataFrame:
+    """Last-write-wins merge of ``delta`` into the ``touched`` buckets of
+    ``current`` (partition-pruned read), re-bucketed on ``bucket_key``:
+    the new content of exactly those buckets, for :func:`overwrite_buckets`.
+    """
+    merged = delta
+    if current is not None:
+        merged = current.filter(F.col(BUCKET_COL).isin(touched)).unionByName(
+            delta, allowMissingColumns=True
+        )
+    return latest_by_key(merged, key, seq_col).withColumn(
+        BUCKET_COL, bucket_of(bucket_key, buckets)
+    )
+
+
+def overwrite_buckets(df: DataFrame, path: str, bucket_col: str = BUCKET_COL) -> None:
+    """Replace only the bucket dirs present in ``df`` (dynamic partition
+    overwrite); every other bucket stays byte-identical."""
+    (
+        df.repartition(F.col(bucket_col))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(bucket_col)
+        .parquet(path)
+    )
+
+
+def read_json(path: str):
+    """The JSON document at ``path``, or ``None`` when the file is missing."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def write_json_atomic(path: str, obj) -> None:
+    """JSON-dump ``obj`` to ``path`` through a tmp file and ``os.replace``:
+    readers see the old document or the new one, never a torn one."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    with open(path + ".tmp", "w") as f:
+        json.dump(obj, f)
+    os.replace(path + ".tmp", path)
+
+
+def pin_layout(
+    path: str,
+    want: dict,
+    has_data: Callable[[], bool],
+    unpinned: str,
+    mismatch: Callable[[dict], str],
+) -> None:
+    """Record layout ``want`` in JSON file ``path`` on first write; later
+    writes must match (else ``ValueError(mismatch(recorded))``).  Data
+    without a record raises ``ValueError(unpinned)``: stamping the writer's
+    values would legitimize exactly the mismatch this guard exists to stop.
+    """
+    have = read_json(path)
+    if have is None:
+        if has_data():
+            raise ValueError(unpinned)
+        write_json_atomic(path, want)
+    elif have != want:
+        raise ValueError(mismatch(have))
+
+
+def _swap_dirs(path: str, tag: str) -> tuple[str, str, str]:
+    path = path.rstrip("/")
+    return path, f"{path}._{tag}_tmp", f"{path}._{tag}_old"
+
+
+def repair_swap(path: str, tag: str) -> None:
+    """Complete or roll back a :func:`swap_in` a crash interrupted: with
+    ``path`` gone, finish the swap when the tmp dir was fully written
+    (``_SUCCESS`` present), else restore the old dir."""
+    path, tmp, old = _swap_dirs(path, tag)
+    if os.path.isdir(path) or not os.path.isdir(old):
+        return
+    if os.path.exists(os.path.join(tmp, "_SUCCESS")):
+        os.rename(tmp, path)
+        shutil.rmtree(old, ignore_errors=True)
+    else:
+        os.rename(old, path)
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def swap_in(path: str, tag: str, write: Callable[[str], None]) -> None:
+    """Replace dir ``path`` with what ``write(tmp)`` streams to a sibling
+    tmp dir, by two renames (not atomic: see :func:`repair_swap`)."""
+    path, tmp, old = _swap_dirs(path, tag)
+    shutil.rmtree(tmp, ignore_errors=True)
+    write(tmp)
+    shutil.rmtree(old, ignore_errors=True)
+    os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def write_bucketed(
@@ -134,20 +273,8 @@ def compact_files(
     ``_SUCCESS`` present — else restore the old dir), so a crash at any
     point leaves a recoverable dataset rather than a missing one.
     """
-    import os
-    import shutil
-
-    tmp = path.rstrip("/") + "._compact_tmp"
-    old = path.rstrip("/") + "._compact_old"
-
     # repair an interrupted previous swap before touching anything
-    if not os.path.isdir(path) and os.path.isdir(old):
-        if os.path.isdir(tmp) and os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            os.rename(tmp, path)  # finish the swap: tmp was fully written
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(old, path)  # roll back: tmp was incomplete
-            shutil.rmtree(tmp, ignore_errors=True)
+    repair_swap(path, "compact")
 
     part_dirs = [
         d
@@ -172,12 +299,11 @@ def compact_files(
     if n_after >= n_before:
         return n_before, n_before
 
-    shutil.rmtree(tmp, ignore_errors=True)
-    spark.read.parquet(path).coalesce(int(n_after)).write.parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_in(
+        path,
+        "compact",
+        lambda tmp: spark.read.parquet(path).coalesce(int(n_after)).write.parquet(tmp),
+    )
     return n_before, int(n_after)
 
 
@@ -303,8 +429,6 @@ def write_clustered(
 
 def clustered_file_ranges(path: str, column: str) -> list[tuple[str, object, object]]:
     """Per-file [min,max] of ``column`` from parquet footers (no data IO)."""
-    import os
-
     import pyarrow.parquet as pq
 
     out = []
@@ -360,9 +484,6 @@ def enforce_retention(
     ``2024-01-31`` order correctly as-is.  A value equal to ``keep_from``
     is KEPT (half-open window).
     """
-    import os
-    import shutil
-
     prefix = f"{partition_col}="
     dropped = []
     for d in sorted(os.listdir(path)):

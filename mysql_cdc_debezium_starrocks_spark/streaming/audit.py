@@ -22,7 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cdc.apply import apply_cdc_log, parse_envelope
-from .materializer import CdcLoadConfig, _bucket_of, read_state
+from ..storage import bucket_of
+from .materializer import CdcLoadConfig, read_state
 
 
 def audit_state(
@@ -46,7 +47,7 @@ def audit_state(
     actual = read_state(spark, cfg)
 
     if buckets is not None:
-        b = _bucket_of(cfg.key, cfg.buckets)
+        b = bucket_of(cfg.key, cfg.buckets)
         expected = expected.filter(b.isin(buckets))
         if actual is not None:
             actual = actual.filter(b.isin(buckets))

@@ -39,10 +39,15 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cdc.apply import latest_by_key
+from ..cdc.apply import latest_by_key, not_deleted
+from ..storage import (
+    BUCKET_COL,
+    bucket_of,
+    overwrite_buckets,
+    read_if_exists,
+    upsert_buckets,
+)
 from ._state import start_maintainer
-
-_BUCKET = "_bucket"
 
 
 @dataclass
@@ -70,11 +75,7 @@ class JoinMVConfig:
         return os.path.join(self.state_dir, "dim")
 
 
-def _bucket_expr(col: str, buckets: int):
-    return F.pmod(F.hash(F.col(col)), F.lit(buckets)).cast("int")
-
-
-def _touched_buckets(df: DataFrame, key_col: str) -> list[int]:
+def _touched_buckets(df: DataFrame, key_col: str, buckets: int) -> list[int]:
     """Distinct buckets of a delta, refusing null routing keys in one job.
 
     A fact delete without its FK (or a dim row without its PK) would bucket
@@ -82,35 +83,16 @@ def _touched_buckets(df: DataFrame, key_col: str) -> list[int]:
     class of bug as the reference's never-mapped __deleted column, so it is
     an error here, not a quiet misroute.
     """
-    probe = F.when(F.col(key_col).isNull(), F.lit(-1)).otherwise(F.col(_BUCKET))
-    rows = df.select(probe.alias("b")).distinct().collect()
-    buckets = [r["b"] for r in rows]
-    if -1 in buckets:
+    probe = F.when(F.col(key_col).isNull(), F.lit(-1)).otherwise(
+        bucket_of(key_col, buckets)
+    )
+    touched = [r["b"] for r in df.select(probe.alias("b")).distinct().collect()]
+    if -1 in touched:
         raise ValueError(
             f"delta rows with NULL {key_col!r}: every delta row (deletes "
             f"included) must carry its routing key"
         )
-    return buckets
-
-
-def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    # explicit existence check, NOT a catch-all: a transient read error
-    # treated as "no state" would let the next dynamic overwrite replace
-    # touched buckets with only the delta's rows — silent permanent loss
-    # (same contract as materializer._read_state_raw)
-    if not os.path.isdir(path):
-        return None
-    return spark.read.parquet(path)
-
-
-def _overwrite_buckets(df: DataFrame, path: str) -> None:
-    (
-        df.repartition(F.col(_BUCKET))
-        .write.mode("overwrite")
-        .partitionBy(_BUCKET)
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-    )
+    return touched
 
 
 def _enrich(fact: DataFrame, dim: DataFrame | None, cfg: JoinMVConfig) -> DataFrame:
@@ -130,9 +112,9 @@ def _enrich(fact: DataFrame, dim: DataFrame | None, cfg: JoinMVConfig) -> DataFr
         for c, t in zip(cfg.dim_cols, cfg.dim_types):
             out = out.withColumn(c, F.lit(None).cast(t))
         return out
-    live = dim.filter(
-        F.col(cfg.deleted_col).isNull() | (F.col(cfg.deleted_col) != "true")
-    ).select(F.col(cfg.dim_key).alias("_dk"), *[F.col(c) for c in cfg.dim_cols])
+    live = dim.filter(not_deleted(cfg.deleted_col)).select(
+        F.col(cfg.dim_key).alias("_dk"), *[F.col(c) for c in cfg.dim_cols]
+    )
     return fact.join(
         live, fact[cfg.fk] == live["_dk"], "left"
     ).drop("_dk")
@@ -150,43 +132,32 @@ def merge_join_mv_batch(
     propagation, then fact enrichment against the NEW dim state — so a fact
     row and its dim row arriving in the same batch join correctly.
     """
-    dim_state = _read_or_none(spark, cfg.dim_path)
+    dim_state = read_if_exists(spark, cfg.dim_path)
 
     if dim_delta is not None:
-        delta = dim_delta.withColumn(_BUCKET, _bucket_expr(cfg.dim_key, cfg.buckets))
-        touched = _touched_buckets(delta, cfg.dim_key)
-        merged = delta
-        if dim_state is not None:
-            cur = dim_state.withColumn(
-                _BUCKET, _bucket_expr(cfg.dim_key, cfg.buckets)
-            ).filter(F.col(_BUCKET).isin(touched))
-            merged = cur.unionByName(delta, allowMissingColumns=True)
-        merged = latest_by_key(merged, cfg.dim_key, cfg.seq_col).withColumn(
-            _BUCKET, _bucket_expr(cfg.dim_key, cfg.buckets)
+        touched = _touched_buckets(dim_delta, cfg.dim_key, cfg.buckets)
+        merged = upsert_buckets(
+            dim_state, dim_delta, touched,
+            cfg.dim_key, cfg.dim_key, cfg.buckets, cfg.seq_col,
         )
         merged = merged.localCheckpoint(eager=True)  # reads files we overwrite
-        _overwrite_buckets(merged, cfg.dim_path)
-        dim_state = _read_or_none(spark, cfg.dim_path)
+        overwrite_buckets(merged, cfg.dim_path)
+        dim_state = read_if_exists(spark, cfg.dim_path)
 
         # propagate: rewrite enrichment in ONLY the view buckets whose FK
-        # hash matches a changed dim key (view is bucketed by FK)
-        mv = _read_or_none(spark, cfg.mv_path)
+        # hash matches a changed dim key (view is bucketed by FK in the dim
+        # key's hash space, so those are the buckets the dim delta touched,
+        # and their dim rows live in the same dim buckets)
+        mv = read_if_exists(spark, cfg.mv_path)
         if mv is not None:
-            keys = dim_delta.select(F.col(cfg.dim_key).alias("_ck")).distinct()
-            kb = [
-                r["b"]
-                for r in keys.select(
-                    _bucket_expr("_ck", cfg.buckets).alias("b")
-                ).distinct().collect()
-            ]
-            aff = mv.filter(F.col(_BUCKET).isin(kb))
+            aff = mv.filter(F.col(BUCKET_COL).isin(touched))
             redone = _enrich(
                 aff.drop(*[c for c in cfg.dim_cols if c in aff.columns]),
-                dim_state,
+                dim_state.filter(F.col(BUCKET_COL).isin(touched)),
                 cfg,
-            ).withColumn(_BUCKET, _bucket_expr(cfg.fk, cfg.buckets))
+            ).withColumn(BUCKET_COL, bucket_of(cfg.fk, cfg.buckets))
             redone = redone.localCheckpoint(eager=True)
-            _overwrite_buckets(redone, cfg.mv_path)
+            overwrite_buckets(redone, cfg.mv_path)
 
     if fact_delta is not None:
         # a NULL fact PK cannot be LWW-merged (all NULL keys collapse into
@@ -196,40 +167,32 @@ def merge_join_mv_batch(
                 f"fact delta rows with NULL {cfg.fact_key!r}: the view key "
                 f"must be present on every row (deletes included)"
             )
-        latest = latest_by_key(fact_delta, cfg.fact_key, cfg.seq_col).withColumn(
-            _BUCKET, _bucket_expr(cfg.fk, cfg.buckets)
-        )
-        touched = _touched_buckets(latest, cfg.fk)
+        latest = latest_by_key(fact_delta, cfg.fact_key, cfg.seq_col)
+        touched = _touched_buckets(latest, cfg.fk, cfg.buckets)
         # the dim side shares the bucket hash space (same expr over dim_key
         # as over fk), so the enrichment join only needs the dim buckets
         # this delta touches — partition-pruned read, O(touched), not O(dim)
         dim_side = (
-            dim_state.filter(F.col(_BUCKET).isin(touched))
+            dim_state.filter(F.col(BUCKET_COL).isin(touched))
             if dim_state is not None
             else None
         )
-        enriched = _enrich(latest.drop(_BUCKET), dim_side, cfg).withColumn(
-            _BUCKET, _bucket_expr(cfg.fk, cfg.buckets)
+        enriched = upsert_buckets(
+            read_if_exists(spark, cfg.mv_path),
+            _enrich(latest, dim_side, cfg),
+            touched,
+            cfg.fact_key, cfg.fk, cfg.buckets, cfg.seq_col,
         )
-        mv = _read_or_none(spark, cfg.mv_path)
-        if mv is not None:
-            cur = mv.filter(F.col(_BUCKET).isin(touched))
-            merged = cur.unionByName(enriched, allowMissingColumns=True)
-            enriched = latest_by_key(merged, cfg.fact_key, cfg.seq_col).withColumn(
-                _BUCKET, _bucket_expr(cfg.fk, cfg.buckets)
-            )
         enriched = enriched.localCheckpoint(eager=True)
-        _overwrite_buckets(enriched, cfg.mv_path)
+        overwrite_buckets(enriched, cfg.mv_path)
 
 
 def read_join_mv(spark: SparkSession, cfg: JoinMVConfig) -> DataFrame:
     """The live view: fact tombstones filtered, bucket column dropped."""
-    mv = _read_or_none(spark, cfg.mv_path)
+    mv = read_if_exists(spark, cfg.mv_path)
     if mv is None:
         raise FileNotFoundError(f"no MV state under {cfg.mv_path}")
-    return mv.filter(
-        F.col(cfg.deleted_col).isNull() | (F.col(cfg.deleted_col) != "true")
-    ).drop(_BUCKET)
+    return mv.filter(not_deleted(cfg.deleted_col)).drop(BUCKET_COL)
 
 
 def start_join_mv_load(

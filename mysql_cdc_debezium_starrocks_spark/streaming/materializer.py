@@ -42,8 +42,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..cdc.apply import latest_by_key, parse_envelope
+from ..cdc.apply import latest_by_key, not_deleted, parse_envelope
 from ..cdc.schemas import ORDER_EVENT_ENVELOPE
+from ..storage import (
+    BUCKET_COL,
+    bucket_of,
+    overwrite_buckets,
+    pin_layout,
+    read_if_exists,
+    read_json,
+    repair_swap,
+    swap_in,
+    upsert_buckets,
+    write_json_atomic,
+)
 from ._state import start_maintainer
 
 
@@ -96,32 +108,17 @@ class CdcLoadConfig:
     index_refresh_every: int | None = None
 
 
-_BUCKET_COL = "_bucket"
-
-
 def _state_path(cfg: CdcLoadConfig) -> str:
     return os.path.join(cfg.state_dir, "current")
 
 
-def _bucket_of(key: str, buckets: int):
-    return F.pmod(F.hash(F.col(key)), F.lit(buckets)).cast("int")
-
-
-def _read_state_raw(spark: SparkSession, cfg: CdcLoadConfig) -> DataFrame:
-    """State with its ``_bucket`` partition column (internal).
-
-    'No state yet' is decided by an explicit existence check, NOT by
-    catching read errors: a catch-all here would turn any transient read
-    failure (permissions, corrupt footer, listing race) into "state is
-    empty", and the next merge would rebuild the touched buckets from one
-    batch — silent loss of every previously merged key in them.  Real
-    read errors propagate and pause the load (Routine Load's error-pause
-    analog, T8).
-    """
-    _repair_gc_swap(cfg)  # an interrupted gc swap must never read as empty
-    if not os.path.isdir(_state_path(cfg)):
-        return None  # no state yet
-    return spark.read.parquet(_state_path(cfg))
+def _read_state_raw(spark: SparkSession, cfg: CdcLoadConfig) -> DataFrame | None:
+    """State with its ``_bucket`` partition column (internal); ``None``
+    when there is none yet (``storage.read_if_exists``: read errors
+    propagate).  An interrupted gc swap is repaired first, so it can never
+    read as empty."""
+    repair_swap(_state_path(cfg), "gc")
+    return read_if_exists(spark, _state_path(cfg))
 
 
 def read_state(spark: SparkSession, cfg: CdcLoadConfig) -> DataFrame:
@@ -139,10 +136,7 @@ def read_state(spark: SparkSession, cfg: CdcLoadConfig) -> DataFrame:
     raw = _read_state_raw(spark, cfg)
     if raw is None:
         return None
-    return raw.filter(
-        F.col(cfg.deleted_col).isNull()
-        | (F.col(cfg.deleted_col) != F.lit("true"))
-    ).drop(_BUCKET_COL)
+    return raw.filter(not_deleted(cfg.deleted_col)).drop(BUCKET_COL)
 
 
 def _ensure_state_meta(cfg: CdcLoadConfig) -> None:
@@ -154,34 +148,20 @@ def _ensure_state_meta(cfg: CdcLoadConfig) -> None:
     (duplicate PKs) and point lookups miss.  Changing buckets requires a
     rewrite (gc/compact into a new state dir), not a config flip.
     """
-    import json
-
-    path = os.path.join(cfg.state_dir, "_meta.json")
     want = {"buckets": cfg.buckets, "key": cfg.key}
-    try:
-        with open(path) as f:
-            have = json.load(f)
-    except FileNotFoundError:
-        if os.path.isdir(_state_path(cfg)):
-            # pre-metadata state: we cannot know what (buckets, key) built
-            # it, so stamping the next writer's values would legitimize
-            # exactly the layout mismatch this guard exists to stop
-            raise ValueError(
-                f"CDC state {cfg.state_dir} has data but no _meta.json; "
-                f"backfill it with the original (buckets, key) before "
-                f"merging"
-            )
-        os.makedirs(cfg.state_dir, exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(want, f)
-        os.replace(tmp, path)
-        return
-    if have != want:
-        raise ValueError(
+    pin_layout(
+        os.path.join(cfg.state_dir, "_meta.json"),
+        want,
+        has_data=lambda: os.path.isdir(_state_path(cfg)),
+        unpinned=(
+            f"CDC state {cfg.state_dir} has data but no _meta.json; "
+            f"backfill it with the original (buckets, key) before merging"
+        ),
+        mismatch=lambda have: (
             f"CDC state {cfg.state_dir} was materialized with {have}; "
             f"refusing to merge with {want} — rewrite the state to re-bucket"
-        )
+        ),
+    )
 
 
 def merge_batch(
@@ -238,10 +218,10 @@ def merge_batch(
         # malformed-row probe (T8, reference: docs/TROUBLESHOOTING.md:54-67)
         # rides the same aggregation instead of its own isEmpty() action.
         probe_bucket = F.when(F.col(cfg.key).isNull(), F.lit(-1)).otherwise(
-            _bucket_of(cfg.key, cfg.buckets)
+            bucket_of(cfg.key, cfg.buckets)
         )
         bucket_stats = (
-            parsed.groupBy(probe_bucket.alias(_BUCKET_COL))
+            parsed.groupBy(probe_bucket.alias(BUCKET_COL))
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.min(F.col(cfg.seq_col)).alias("mn"),
@@ -249,7 +229,7 @@ def merge_batch(
             )
             .collect()
         )
-        if any(r[_BUCKET_COL] == -1 for r in bucket_stats):
+        if any(r[BUCKET_COL] == -1 for r in bucket_stats):
             # quarantine malformed rows and continue — non-blocking analog
             # of Routine Load's parse-error pause; batch-keyed dirs make
             # replay idempotent (overwrite), matching the state merge
@@ -262,12 +242,8 @@ def merge_batch(
                 bad.write.mode("append").parquet(
                     os.path.join(cfg.state_dir, "_dead_letter")
                 )
-        good = parsed.filter(F.col(cfg.key).isNotNull())
-        latest = latest_by_key(good, cfg.key, cfg.seq_col).withColumn(
-            _BUCKET_COL, _bucket_of(cfg.key, cfg.buckets)
-        )
-        good_stats = [r for r in bucket_stats if r[_BUCKET_COL] >= 0]
-        affected = sorted(r[_BUCKET_COL] for r in good_stats)
+        good_stats = [r for r in bucket_stats if r[BUCKET_COL] >= 0]
+        affected = sorted(r[BUCKET_COL] for r in good_stats)
         # the sequence span covers DEAD-LETTER rows too: quarantined events
         # are durably handled (batch-keyed dir above) and can never merge
         # into state later, so the retention watermark may sweep past their
@@ -285,22 +261,12 @@ def merge_batch(
         if not affected:
             return stats
 
-        current = _read_state_raw(spark, cfg)
-        if current is not None:
-            # partition-pruned read: only the touched bucket directories
-            cur_aff = current.filter(F.col(_BUCKET_COL).isin(affected))
-            merged = cur_aff.unionByName(latest, allowMissingColumns=True)
-            latest = latest_by_key(merged, cfg.key, cfg.seq_col).withColumn(
-                _BUCKET_COL, _bucket_of(cfg.key, cfg.buckets)
-            )
-
-        (
-            latest.repartition(F.col(_BUCKET_COL))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(_BUCKET_COL)
-            .parquet(_state_path(cfg))
+        good = parsed.filter(F.col(cfg.key).isNotNull())
+        merged = upsert_buckets(
+            _read_state_raw(spark, cfg), latest_by_key(good, cfg.key, cfg.seq_col),
+            affected, cfg.key, cfg.key, cfg.buckets, cfg.seq_col,
         )
+        overwrite_buckets(merged, _state_path(cfg))
         return stats
     finally:
         parsed.unpersist()
@@ -319,50 +285,26 @@ def gc_tombstones(
     not per batch.  Scale-safe: the filtered state streams to a sibling tmp
     directory (never through driver/executor memory), then swaps in.
 
-    **Crash recovery** (same complete-or-rollback scheme as
-    ``storage.compact_files``): the two-rename swap is not atomic, so every
-    call — and every state read — first repairs an interrupted swap:
-    if the state dir is gone, finish the swap when the tmp dir completed
-    (``_SUCCESS`` present), else restore the old dir.  Must not run
-    concurrently with an active merge.
+    **Crash recovery** (``storage.swap_in``, the scheme
+    ``storage.compact_files`` uses too): the two-rename swap is not atomic,
+    so every state read first repairs an interrupted swap
+    (``storage.repair_swap``).  Must not run concurrently with an active
+    merge.
     """
-    import shutil
-
-    _repair_gc_swap(cfg)
     current = _read_state_raw(spark, cfg)
     if current is None:
         return
     kept = current.filter(
-        F.col(cfg.deleted_col).isNull()
-        | (F.col(cfg.deleted_col) != F.lit("true"))
+        not_deleted(cfg.deleted_col)
         | (F.col(cfg.seq_col) >= F.lit(int(before_seq)))
     )
-    final = _state_path(cfg)
-    tmp = final + "._gc_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    kept.repartition(F.col(_BUCKET_COL)).write.partitionBy(_BUCKET_COL).parquet(tmp)
-    old = final + "._gc_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(final, old)
-    os.rename(tmp, final)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _repair_gc_swap(cfg: CdcLoadConfig) -> None:
-    """Complete or roll back a gc_tombstones swap interrupted by a crash."""
-    import shutil
-
-    final = _state_path(cfg)
-    tmp, old = final + "._gc_tmp", final + "._gc_old"
-    if os.path.isdir(final):
-        return
-    if os.path.isdir(old):
-        if os.path.isdir(tmp) and os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            os.rename(tmp, final)  # tmp was fully written: finish the swap
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(old, final)  # tmp incomplete: restore the old state
-            shutil.rmtree(tmp, ignore_errors=True)
+    swap_in(
+        _state_path(cfg),
+        "gc",
+        lambda tmp: kept.repartition(F.col(BUCKET_COL))
+        .write.partitionBy(BUCKET_COL)
+        .parquet(tmp),
+    )
 
 
 _GC_HORIZON = "_gc_horizon.json"
@@ -384,15 +326,14 @@ def _read_gc_horizon(cfg: CdcLoadConfig) -> dict | None:
     makes any delivery order safe: out-of-order spans sit in ``intervals``
     as pending gaps and fold in the moment the gap closes.
     """
-    import json
-
     try:
-        with open(os.path.join(cfg.state_dir, _GC_HORIZON)) as f:
-            h = json.load(f)
-    except (FileNotFoundError, ValueError):
+        h = read_json(os.path.join(cfg.state_dir, _GC_HORIZON))
+    except ValueError:
         return None
-    if "intervals" not in h:  # pre-watermark scalar format: discard — its
-        return None           # max_seq horizon is exactly the unsafe value
+    if h is None or "intervals" not in h:
+        # a pre-watermark scalar ledger is discarded: its max_seq horizon
+        # is exactly the unsafe value
+        return None
     return h
 
 
@@ -431,8 +372,6 @@ def _write_gc_horizon(
     whose start seq shifts (partially filled) counts as a new, younger gap:
     conservative, since the refreshed gap evidently still had traffic.
     """
-    import json
-
     prior = _read_gc_horizon(cfg)
     intervals = _fold_interval(
         prior["intervals"] if prior else [], min_seq, max_seq
@@ -442,18 +381,10 @@ def _write_gc_horizon(
         str(intervals[i][1] + 1): int(seen.get(str(intervals[i][1] + 1), batch_id))
         for i in range(len(intervals) - 1)
     }
-    path = os.path.join(cfg.state_dir, _GC_HORIZON)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "batch_id": int(batch_id),
-                "intervals": intervals,
-                "gap_seen": gap_seen,
-            },
-            f,
-        )
-    os.replace(tmp, path)
+    write_json_atomic(
+        os.path.join(cfg.state_dir, _GC_HORIZON),
+        {"batch_id": int(batch_id), "intervals": intervals, "gap_seen": gap_seen},
+    )
 
 
 def gc_ledger_stats(cfg: CdcLoadConfig) -> dict | None:
@@ -547,13 +478,16 @@ def start_cdc_load(spark: SparkSession, cfg: CdcLoadConfig):
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # snapshot the ledger BEFORE merging this batch: the sweep horizon
         # must come only from batches already durably committed (a replay of
         # THIS batch would re-deliver sequences the ledger now covers)
         horizon = _read_gc_horizon(cfg)
         stats = merge_batch(spark, cfg, batch_df, batch_id=batch_id)
+        if stats is None:
+            # no parseable event (an empty batch, or only null-value
+            # tombstones): nothing merged, so no sweep or index refresh is
+            # due — skipping one is always safe
+            return
         every = cfg.gc_every_batches
         if (
             every
@@ -568,7 +502,7 @@ def start_cdc_load(spark: SparkSession, cfg: CdcLoadConfig):
             )
             if wm is not None:
                 gc_tombstones(spark, cfg, before_seq=wm + 1)
-        if stats is not None and stats["min_seq"] is not None:
+        if stats["min_seq"] is not None:
             _write_gc_horizon(
                 cfg, batch_id, stats["min_seq"], stats["max_seq"]
             )
@@ -667,15 +601,11 @@ def point_lookup(spark: SparkSession, cfg: CdcLoadConfig, key_value) -> DataFram
     # hash() is type-sensitive: the literal must carry the key column's exact
     # type or it lands in a different bucket than the merge put it in
     k = F.lit(key_value).cast(dict(raw.dtypes)[cfg.key])
-    b = F.pmod(F.hash(k), F.lit(cfg.buckets)).cast("int")
     return (
-        raw.filter(F.col(_BUCKET_COL) == b)
+        raw.filter(F.col(BUCKET_COL) == bucket_of(k, cfg.buckets))
         .filter(F.col(cfg.key) == k)
         # stored delete tombstones are not live rows: without this filter a
         # deleted key would "exist" to point readers until gc_tombstones
-        .filter(
-            F.col(cfg.deleted_col).isNull()
-            | (F.col(cfg.deleted_col) != F.lit("true"))
-        )
-        .drop(_BUCKET_COL)
+        .filter(not_deleted(cfg.deleted_col))
+        .drop(BUCKET_COL)
     )

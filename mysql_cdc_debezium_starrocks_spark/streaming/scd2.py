@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
-from ..cdc.apply import latest_by_key, parse_envelope
+from ..cdc.apply import latest_by_key, not_deleted, parse_envelope
 from ..cdc.schemas import ORDER_EVENT_ENVELOPE
 from ._state import numbered_ids, start_maintainer
 
@@ -80,10 +80,8 @@ def merge_scd2_batch(
         b = parsed.withColumn("valid_from_seq", F.col(seq_col)).withColumn(
             "valid_to_seq", F.lead(seq_col).over(w)
         )
-        not_deleted = F.col(deleted_col).isNull() | (
-            F.col(deleted_col) != F.lit("true")
-        )
-        intra_closed = b.filter(F.col("valid_to_seq").isNotNull() & not_deleted)
+        live = not_deleted(deleted_col)
+        intra_closed = b.filter(F.col("valid_to_seq").isNotNull() & live)
 
         firsts = parsed.groupBy(key).agg(F.min(seq_col).alias("_first"))
         closed = intra_closed
@@ -100,7 +98,7 @@ def merge_scd2_batch(
 
         last_ev = latest_by_key(parsed, key, seq_col)
         new_open = (
-            last_ev.filter(not_deleted)
+            last_ev.filter(live)
             .withColumn("valid_from_seq", F.col(seq_col))
             .withColumn("valid_to_seq", F.lit(None).cast("long"))
         )

@@ -26,7 +26,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .materializer import CdcLoadConfig, _BUCKET_COL, _read_state_raw
+from ..cdc.apply import not_deleted
+from ..storage import (
+    BUCKET_COL,
+    bucket_of,
+    overwrite_buckets,
+    read_json,
+    write_json_atomic,
+)
+from .materializer import CdcLoadConfig, _read_state_raw, _state_path
 
 _IBUCKET = "_ibucket"
 
@@ -57,8 +65,8 @@ def build_secondary_index(
     idx = raw.select(
         F.col(col),
         F.col(cfg.key),
-        F.col(_BUCKET_COL).alias("pk_bucket"),
-    ).withColumn(_IBUCKET, F.pmod(F.hash(F.col(col)), F.lit(n)).cast("int"))
+        F.col(BUCKET_COL).alias("pk_bucket"),
+    ).withColumn(_IBUCKET, bucket_of(col, n))
     out = _index_dir(cfg, col)
     (
         idx.repartition(F.col(_IBUCKET))
@@ -66,13 +74,12 @@ def build_secondary_index(
         .partitionBy(_IBUCKET)
         .parquet(out)
     )
-    tmp = os.path.join(out, "_meta.json.tmp")
-    with open(tmp, "w") as f:
-        # state_fp: per-pk-bucket fingerprints of the state this index was
-        # built from — refresh_secondary_index diffs them to re-project
-        # only the buckets that changed since
-        json.dump({"buckets": n, "state_fp": fps}, f)
-    os.replace(tmp, os.path.join(out, "_meta.json"))
+    # state_fp: per-pk-bucket fingerprints of the state this index was
+    # built from — refresh_secondary_index diffs them to re-project only
+    # the buckets that changed since
+    write_json_atomic(
+        os.path.join(out, "_meta.json"), {"buckets": n, "state_fp": fps}
+    )
     return out
 
 
@@ -92,31 +99,23 @@ def lookup_by_index(
     idx_path = _index_dir(cfg, col)
     idx = spark.read.parquet(idx_path)
     v = F.lit(value).cast(dict(idx.dtypes)[col])
-    try:
-        with open(os.path.join(idx_path, "_meta.json")) as f:
-            n = json.load(f)["buckets"]
-    except FileNotFoundError:
-        # index built before _meta.json existed: the bucket modulus is
-        # unknown (max(_IBUCKET)+1 under-counts when high buckets are
-        # empty), so skip index-side bucket pruning — a full index scan is
-        # still correct and still prunes the STATE buckets below
-        n = None
+    meta = read_json(os.path.join(idx_path, "_meta.json"))
     hits = idx.filter(F.col(col) == v)
-    if n is not None:
-        ib = F.pmod(F.hash(v), F.lit(n)).cast("int")
-        hits = hits.filter(F.col(_IBUCKET) == ib)
+    # an index built before _meta.json existed has no recorded modulus
+    # (max(_IBUCKET)+1 under-counts when high buckets are empty), so it
+    # skips index-side bucket pruning — a full index scan is still correct
+    # and still prunes the STATE buckets below
+    if meta is not None:
+        hits = hits.filter(F.col(_IBUCKET) == bucket_of(v, meta["buckets"]))
     pk_buckets = [
         r["pk_bucket"] for r in hits.select("pk_bucket").distinct().collect()
     ]
     raw = _read_state_raw(spark, cfg)
     live = (
-        raw.filter(F.col(_BUCKET_COL).isin(pk_buckets))
-        .filter(
-            F.col(cfg.deleted_col).isNull()
-            | (F.col(cfg.deleted_col) != F.lit("true"))
-        )
+        raw.filter(F.col(BUCKET_COL).isin(pk_buckets))
+        .filter(not_deleted(cfg.deleted_col))
         .join(hits.select(cfg.key), cfg.key, "left_semi")
-        .drop(_BUCKET_COL)
+        .drop(BUCKET_COL)
     )
     return live.filter(F.col(col) == v) if verify else live
 
@@ -130,14 +129,12 @@ def _state_fingerprints(cfg: CdcLoadConfig) -> dict[str, str]:
     no mtime trust, no file reads."""
     import hashlib
 
-    from .materializer import _state_path
-
     root = _state_path(cfg)
     out: dict[str, str] = {}
     if not os.path.isdir(root):
         return out
     for d in os.listdir(root):
-        if not d.startswith(f"{_BUCKET_COL}="):
+        if not d.startswith(f"{BUCKET_COL}="):
             continue
         names = sorted(
             f
@@ -162,8 +159,9 @@ def refresh_secondary_index(
     scan of just the changed state buckets — never the full wide state,
     which is what ``build_secondary_index`` re-reads.  At 100 TB a merge
     touches a handful of pk buckets per batch; the refresh cost follows
-    the batch, not the table.  Same read-then-dynamic-overwrite shape as
-    the materializer's own merge (materializer.py merge_batch).
+    the batch, not the table.  The write is the same dynamic bucket
+    overwrite every bucketed upsert ends in (``storage.overwrite_buckets``,
+    after ``storage.upsert_buckets``).
 
     Returns the number of changed pk buckets (0 = verified no-op, nothing
     written; -1 = legacy index without fingerprints, full rebuild ran).
@@ -192,11 +190,11 @@ def refresh_secondary_index(
 
     fresh = (
         _read_state_raw(spark, cfg)
-        .filter(F.col(_BUCKET_COL).isin(changed_i))
+        .filter(F.col(BUCKET_COL).isin(changed_i))
         .select(
-            F.col(col), F.col(cfg.key), F.col(_BUCKET_COL).alias("pk_bucket")
+            F.col(col), F.col(cfg.key), F.col(BUCKET_COL).alias("pk_bucket")
         )
-        .withColumn(_IBUCKET, F.pmod(F.hash(F.col(col)), F.lit(n)).cast("int"))
+        .withColumn(_IBUCKET, bucket_of(col, n))
         .persist()
     )
     try:
@@ -246,19 +244,10 @@ def refresh_secondary_index(
                         os.path.join(idx_path, f"{_IBUCKET}={ib}"),
                         ignore_errors=True,
                     )
-            (
-                replacement.repartition(F.col(_IBUCKET))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(_IBUCKET)
-                .parquet(idx_path)
-            )
+            overwrite_buckets(replacement, idx_path, _IBUCKET)
             replacement.unpersist()
     finally:
         fresh.unpersist()
     meta["state_fp"] = new_fp
-    tmp = os.path.join(idx_path, "_meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(idx_path, "_meta.json"))
+    write_json_atomic(os.path.join(idx_path, "_meta.json"), meta)
     return len(changed)

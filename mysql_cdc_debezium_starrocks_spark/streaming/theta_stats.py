@@ -22,7 +22,6 @@ monitor ever touches the fact table again.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +33,7 @@ from ..operators.sketches import (
     theta_merge,
     theta_sketch,
 )
+from ..storage import pin_layout, read_json
 from ._state import (
     committed_fold,
     fold_verbatim,
@@ -90,11 +90,7 @@ def _meta_path(state_dir: str) -> str:
 
 
 def _read_meta(state_dir: str) -> dict | None:
-    try:
-        with open(_meta_path(state_dir)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
+    return read_json(_meta_path(state_dir))
 
 
 def _ensure_meta(state_dir: str, k: int, seed: str) -> None:
@@ -103,27 +99,21 @@ def _ensure_meta(state_dir: str, k: int, seed: str) -> None:
     k-row contributions then selecting k' > k smallest hashes silently
     flips a big set into bogus 'exact mode' (fewer than k' distinct hashes
     survive), and a different seed is a different hash family entirely."""
-    meta = _read_meta(state_dir)
-    if meta is None:
-        if _batch_ids(state_dir) or committed_fold(_theta_root(state_dir)):
-            # pre-metadata state: we cannot know what k/seed built those
-            # contributions, so stamping the next writer's values would
-            # legitimize exactly the mismatch this guard exists to stop
-            raise ValueError(
-                f"theta state {state_dir} has contributions but no "
-                f"{_META}; backfill it with the original maintenance "
-                f"k/seed before writing"
-            )
-        os.makedirs(_theta_root(state_dir), exist_ok=True)
-        tmp = _meta_path(state_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"k": k, "seed": seed}, f)
-        os.replace(tmp, _meta_path(state_dir))
-    elif meta["k"] != k or meta["seed"] != seed:
-        raise ValueError(
+    pin_layout(
+        _meta_path(state_dir),
+        {"k": k, "seed": seed},
+        has_data=lambda: bool(
+            _batch_ids(state_dir) or committed_fold(_theta_root(state_dir))
+        ),
+        unpinned=(
+            f"theta state {state_dir} has contributions but no {_META}; "
+            f"backfill it with the original maintenance k/seed before writing"
+        ),
+        mismatch=lambda meta: (
             f"theta state {state_dir} was maintained with k={meta['k']} "
             f"seed={meta['seed']!r}; refusing write with k={k} seed={seed!r}"
-        )
+        ),
+    )
 
 
 def update_theta_batch(

@@ -59,5 +59,5 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", cpus=8, shuffle_partitions=8)
+    s = get_spark("pytest")
     yield s

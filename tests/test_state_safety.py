@@ -1,6 +1,7 @@
 """Materializer/storage state-safety regressions (round-2 review findings):
 tombstone-free point lookups, bucket-layout metadata enforcement, gc-swap
-crash repair, z-order wide-range scaling, deterministic shard export.
+crash repair, partition-pruned join-MV dim propagation, z-order wide-range
+scaling, deterministic shard export.
 """
 
 import json
@@ -112,6 +113,69 @@ def test_transient_read_error_is_not_empty_state(spark, tmp_path):
             (9, {"order_key": 1, "cust_key": 11, "status": "z",
                  "total_price": "9.00", "__deleted": "false"}),
         ]))
+
+
+def test_join_mv_dim_delta_reads_only_touched_buckets(spark, tmp_path):
+    """A one-key dim delta must scan only its bucket of the dim state and
+    of the view: every parquet scan over ``<state>/dim`` and ``<state>/mv``
+    carries a ``_bucket`` partition filter (a filter on a recomputed
+    bucket column prunes nothing)."""
+    import re
+
+    from mysql_cdc_debezium_starrocks_spark.streaming.join_mv import (
+        JoinMVConfig,
+        merge_join_mv_batch,
+    )
+
+    cfg = JoinMVConfig(
+        state_dir=str(tmp_path / "jmv"),
+        fact_key="order_key",
+        fk="cust_key",
+        dim_key="cust_key",
+        dim_cols=("c_name",),
+        buckets=8,
+    )
+
+    def dim(rows):
+        return spark.createDataFrame(
+            rows, "cust_key long, c_name string, _seq long, __deleted string"
+        )
+
+    merge_join_mv_batch(
+        spark, cfg, dim_delta=dim([(k, f"n{k}", 1, "false") for k in range(20)])
+    )
+    merge_join_mv_batch(spark, cfg, fact_delta=spark.createDataFrame(
+        [(o, o % 20, o, 2, "false") for o in range(60)],
+        "order_key long, cust_key long, amount long, _seq long, __deleted string",
+    ))
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def recent():  # newest executions, ascending id (the store evicts old ones)
+        n = store.executionsCount()
+        execs = store.executionsList(max(0, n - 50), 50)
+        return [execs.apply(i) for i in range(execs.size())]
+
+    last = max((e.executionId() for e in recent()), default=-1)
+    merge_join_mv_batch(spark, cfg, dim_delta=dim([(3, "x", 5, "false")]))
+    new = [e for e in recent() if e.executionId() > last]
+
+    scanned = {"dim": 0, "mv": 0}
+    for e in new:
+        plan = e.physicalPlanDescription()
+        for block in re.split(r"\n(?=\(\d+\) )", plan):
+            if not block.startswith("(") or "Scan parquet" not in block.split("\n")[0]:
+                continue
+            loc = re.search(r"Location: .*\[(.*)\]", block)
+            side = loc and os.path.basename(loc.group(1).rstrip("/"))
+            if side not in scanned:
+                continue
+            scanned[side] += 1
+            pf = re.search(r"PartitionFilters: \[(.*)\]", block)
+            assert pf and "_bucket" in pf.group(1), (
+                f"unpruned scan of {side} state:\n{block}"
+            )
+    assert scanned["dim"] >= 2 and scanned["mv"] >= 1, scanned
 
 
 def test_zorder_survives_wide_value_ranges(spark, tmp_path):

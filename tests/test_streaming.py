@@ -335,13 +335,13 @@ def test_incremental_merge_touches_only_affected_buckets(spark, tmp_path):
 
     after = {p: os.stat(p).st_mtime_ns for p in glob.glob(state_glob)}
     from pyspark.sql import functions as F  # noqa: F811
-    from mysql_cdc_debezium_starrocks_spark.streaming.materializer import _bucket_of
+    from mysql_cdc_debezium_starrocks_spark.storage import bucket_of
 
     [touched] = [
         r[0]
         for r in spark.range(1)
         .select(F.lit(7).alias("order_key"))
-        .select(_bucket_of("order_key", 4))
+        .select(bucket_of("order_key", 4))
         .collect()
     ]
     untouched_before = {p: t for p, t in before.items() if f"_bucket={touched}/" not in p}
