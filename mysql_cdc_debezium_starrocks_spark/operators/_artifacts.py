@@ -13,6 +13,11 @@ table, ...), the batch form of "ingest once, query many".
 - :func:`clear` unpersists every entry and empties the store.  Spark's
   CacheManager matches by plan, so a frame left cached would serve the
   next rebuild; after ``clear()`` a rebuild is really cold.
+- One re-entrant lock serializes the store: concurrent first users of a
+  kind build it once.  Without it two threads both miss and persist the
+  same plan, which Spark caches once, and registering the second frame
+  unpersists the first, dropping the shared cache entry.  Re-entrant
+  because a ``build()`` may read another kind.
 
 A miss just computes the frame, so every registry query stays
 self-contained for the oracle parity check.
@@ -21,6 +26,7 @@ self-contained for the oracle parity check.
 from __future__ import annotations
 
 import os
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 # adding a kind (grep "artifact(").
 _CAPACITY = 40
 _CACHE: dict[tuple, DataFrame] = {}
+_LOCK = threading.RLock()
 
 # Wall seconds each artifact took to build, keyed like the store.
 # Observability only: a consumer's per-query time measures a cache read, and
@@ -75,12 +82,13 @@ def register(
     """Insert ``df`` as the (session, dataset, kind) artifact, unpersisting
     the frame it displaces and, when full, the least recently used one."""
     key = _key(spark, sf_dir, kind)
-    displaced = _CACHE.pop(key, None)
-    if displaced is not None and displaced is not df:
-        _unpersist(displaced)
-    while len(_CACHE) >= _CAPACITY:
-        _unpersist(_CACHE.pop(next(iter(_CACHE))))
-    _CACHE[key] = df
+    with _LOCK:
+        displaced = _CACHE.pop(key, None)
+        if displaced is not None and displaced is not df:
+            _unpersist(displaced)
+        while len(_CACHE) >= _CAPACITY:
+            _unpersist(_CACHE.pop(next(iter(_CACHE))))
+        _CACHE[key] = df
     return df
 
 
@@ -89,20 +97,22 @@ def artifact(spark: SparkSession, sf_dir: str, kind: str, build) -> DataFrame:
     ``build()``, materialize it now with a timed noop write, and register
     it.  The eager write puts the build cost where it always landed (the
     first consumer's call) but attributes it per kind in ``BUILD_SECONDS``."""
-    df = _get(spark, sf_dir, kind)
-    if df is None:
-        t0 = time.perf_counter()
-        df = build().persist()
-        df.write.mode("overwrite").format("noop").save()
-        BUILD_SECONDS[_key(spark, sf_dir, kind)] = round(
-            time.perf_counter() - t0, 3
-        )
-        register(spark, sf_dir, kind, df)
+    with _LOCK:
+        df = _get(spark, sf_dir, kind)
+        if df is None:
+            t0 = time.perf_counter()
+            df = build().persist()
+            df.write.mode("overwrite").format("noop").save()
+            BUILD_SECONDS[_key(spark, sf_dir, kind)] = round(
+                time.perf_counter() - t0, 3
+            )
+            register(spark, sf_dir, kind, df)
     return df
 
 
 def clear() -> None:
     """Unpersist every artifact (blocking until its storage is released)
     and empty the store."""
-    while _CACHE:
-        _unpersist(_CACHE.popitem()[1], blocking=True)
+    with _LOCK:
+        while _CACHE:
+            _unpersist(_CACHE.popitem()[1], blocking=True)

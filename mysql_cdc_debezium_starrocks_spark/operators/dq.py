@@ -65,6 +65,12 @@ def dq_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     a shuffle of the whole fact stream), while here the post-aggregation
     join moves only (key, count) pairs, and the fact table is still read
     exactly once.
+
+    Every relationship emits exactly one row, an empty child table
+    included: its counts are 0 and its ``orphan_ppm`` is NULL (a rate over
+    zero rows is undefined, and under ANSI the division would raise).  The
+    per-relationship aggregate is left-joined onto the static relationship
+    list for that, since an aggregate over no rows has no groups.
     """
     by_child: dict[str, list] = {}
     for rel, child_t, fk, parent_t, pk in _FK_RELS:
@@ -110,19 +116,17 @@ def dq_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_orphan"),
             F.count(F.when(orphan, F.lit(1))).cast("long").alias("n_orphan_keys"),
         )
-        rel_label = F.col("_rid").cast("string")
-        for i, (rel, *_rest) in enumerate(rels):
-            rel_label = F.when(F.col("_rid") == i, F.lit(rel)).otherwise(
-                rel_label
-            )
+        labels = spark.createDataFrame(
+            [(i, rel) for i, (rel, *_rest) in enumerate(rels)],
+            "_rid int, rel string",
+        )
+        counts = ["n_child", "n_null_fk", "n_orphan", "n_orphan_keys"]
         outs.append(
-            agg.select(
-                rel_label.alias("rel"),
-                "n_child",
-                "n_null_fk",
-                "n_orphan",
-                "n_orphan_keys",
-                F.expr("n_orphan * 1000000 div n_child")
+            labels.join(agg, "_rid", "left").select(
+                "rel",
+                *[F.coalesce(F.col(c), F.lit(0).cast("long")).alias(c)
+                  for c in counts],
+                F.expr("n_orphan * 1000000 div nullif(n_child, 0)")
                 .cast("long")
                 .alias("orphan_ppm"),
             )
@@ -137,13 +141,14 @@ def _rel_sql(rel: str, child_t: str, fk: str, parent_t: str, pk: str) -> str:
     return f"""
     SELECT '{rel}' AS rel,
            count(*) AS n_child,
-           sum(CASE WHEN c.{fk} IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_null_fk,
-           sum(CASE WHEN c.{fk} IS NOT NULL AND p.pk IS NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_orphan,
+           coalesce(sum(CASE WHEN c.{fk} IS NULL THEN 1 ELSE 0 END), 0)::BIGINT
+             AS n_null_fk,
+           coalesce(sum(CASE WHEN c.{fk} IS NOT NULL AND p.pk IS NULL
+                             THEN 1 ELSE 0 END), 0)::BIGINT AS n_orphan,
            count(DISTINCT CASE WHEN c.{fk} IS NOT NULL AND p.pk IS NULL
                                THEN c.{fk} END)::BIGINT AS n_orphan_keys,
            ((sum(CASE WHEN c.{fk} IS NOT NULL AND p.pk IS NULL THEN 1 ELSE 0 END)
-             * 1000000) // count(*))::BIGINT AS orphan_ppm
+             * 1000000) // nullif(count(*), 0))::BIGINT AS orphan_ppm
     FROM {child_t} c
     LEFT JOIN (SELECT DISTINCT {pk} AS pk FROM {parent_t}) p ON c.{fk} = p.pk"""
 

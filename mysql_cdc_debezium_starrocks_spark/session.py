@@ -66,8 +66,9 @@ def get_spark(
         # tasks left ~250 MB execution memory each BEFORE the ~26 persisted
         # artifact kinds a warm session holds; once the full census was
         # cached, storage squeezed execution and the shuffle-heavy dedup
-        # band joins degraded ~2x (memtest: dedup_cross_source_matrix
-        # 1.9 vs 1.0 normalized fresh-session, recovered at 16g).  The
+        # band joins degraded ~2x (tools/minibench.py --warm-all:
+        # dedup_cross_source_matrix 1.9 vs 1.0 normalized fresh-session,
+        # recovered at 16g).  The
         # default is 16g capped at half the host's RAM, so a small host is
         # not promised more heap than it has.  On a real cluster this is
         # ordinary executor sizing; SPARK_DRIVER_MEMORY overrides it.

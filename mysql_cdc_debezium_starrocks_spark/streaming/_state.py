@@ -118,6 +118,14 @@ def committed_fold(root: str) -> tuple[str, set[int]] | None:
         return os.path.join(d, "data"), set(json.load(f))
 
 
+def fold_state(root: str) -> tuple[tuple[str, set[int]] | None, list[int]]:
+    """The committed baseline under ``root`` (:func:`committed_fold`) and
+    the sorted live batch ids it has not folded."""
+    base = committed_fold(root)
+    folded = base[1] if base else set()
+    return base, [i for i in numbered_ids(root) if i not in folded]
+
+
 def read_fold_paths(root: str, before: int | None = None) -> list[str]:
     """Parquet paths covering the store exactly once: the committed
     baseline (if any) plus live batch dirs, optionally only ids strictly
@@ -129,13 +137,11 @@ def read_fold_paths(root: str, before: int | None = None) -> list[str]:
     newest batch can replay — so it raises instead of silently serving a
     store that double-counts the replaying batch.
     """
-    base = committed_fold(root)
-    folded = base[1] if base else set()
-    ids = [i for i in numbered_ids(root) if i not in folded]
+    base, ids = fold_state(root)
     if before is not None:
-        if folded and max(folded) >= before:
+        if base and max(base[1]) >= before:
             raise RuntimeError(
-                f"{root}: baseline folded batch ids up to {max(folded)} but "
+                f"{root}: baseline folded batch ids up to {max(base[1])} but "
                 f"batch {before} is replaying — compaction ran ahead of the "
                 f"checkpoint commit horizon (keep_last too small?)"
             )
@@ -160,27 +166,35 @@ def guard_folded_replay(root: str, batch_id: int) -> None:
         )
 
 
-def read_fold_df(spark, root: str, cols: list[str]):
-    """The store as ONE DataFrame: live contribution dirs + the committed
-    baseline, each read with its own ``basePath`` (required for stores
-    whose dirs carry ``key=value`` partition subdirs — a multi-root read
-    would trip Spark's conflicting-partition-directories check, and the
+def read_batch_tagged(
+    spark, root: str, ids: list[int], base: tuple[str, set[int]] | None
+):
+    """Live dirs ``ids`` under ``root`` plus the committed baseline
+    ``base`` (:func:`committed_fold`) as ONE DataFrame with a ``batch``
+    column: a live row carries its own batch id, a baseline row the
+    highest id the baseline folded.  Baselines only fold ids below every
+    live one, so ``batch`` order is fold order with the baseline first —
+    the order key of a left fold that compaction must not change.
+
+    Each leg is read with its own ``basePath`` (required for stores whose
+    dirs carry ``key=value`` partition subdirs — a multi-root read would
+    trip Spark's conflicting-partition-directories check, and the
     baseline's ``baseline/v=<k>/data`` ancestors would break single-rooted
-    discovery), unioned on ``cols``.  Returns None when the store is
-    empty.  Partition-column filters prune in every leg."""
-    base = committed_fold(root)
-    folded = base[1] if base else set()
-    ids = [i for i in numbered_ids(root) if i not in folded]
+    discovery); the live leg's discovery yields ``batch``.  Returns None
+    when there is nothing to read.  Partition-column filters prune in
+    every leg."""
     parts = []
     if ids:
         parts.append(
-            spark.read.option("basePath", root)
-            .parquet(*[os.path.join(root, f"batch={i}") for i in ids])
-            .select(*cols)
+            spark.read.option("basePath", root).parquet(
+                *[os.path.join(root, f"batch={i}") for i in ids]
+            )
         )
     if base:
         parts.append(
-            spark.read.option("basePath", base[0]).parquet(base[0]).select(*cols)
+            spark.read.option("basePath", base[0])
+            .parquet(base[0])
+            .selectExpr("*", f"{max(base[1])} AS batch")
         )
     if not parts:
         return None
@@ -190,50 +204,43 @@ def read_fold_df(spark, root: str, cols: list[str]):
     return out
 
 
+def read_fold_df(spark, root: str, cols: list[str]):
+    """The store as ONE DataFrame of ``cols`` (:func:`read_batch_tagged`
+    over every live dir and the committed baseline); None when empty."""
+    base, ids = fold_state(root)
+    out = read_batch_tagged(spark, root, ids, base)
+    return None if out is None else out.select(*cols)
+
+
 def fold_verbatim(
     spark, root: str, keep_last: int = 2, agg=None, partition_by=None
 ) -> None:
     """Fold all but the newest ``keep_last`` contribution dirs (plus the
     old baseline) into a new committed baseline, then GC what it absorbed.
 
-    ``agg`` (optional) is a schema-preserving DataFrame reducer applied to
-    the union before writing (e.g. re-summing a token ledger); default is a
-    verbatim row copy.  ``partition_by`` (optional) keeps the baseline laid
-    out as ``key=value`` partition dirs so readers that prune on that
-    column (the ANN index's bucket pruning) keep pruning the baseline
-    exactly like a live contribution dir.  ``keep_last`` must stay >= 1:
-    only the newest batch can crash-replay, and its re-read excludes folded
-    ids, so the dirs a replay may touch must never be folded.
+    The folded rows are read with :func:`read_batch_tagged`.  ``agg``
+    (optional) reduces them to the stored schema before writing (e.g.
+    re-summing a token ledger); it sees the ``batch`` column, so a reducer
+    whose result depends on order can fold in batch-id order.  Without
+    ``agg`` the rows are copied verbatim.  ``partition_by`` (optional)
+    keeps the baseline laid out as ``key=value`` partition dirs so readers
+    that prune on that column (the ANN index's bucket pruning) keep
+    pruning the baseline exactly like a live contribution dir.
+    ``keep_last`` must stay >= 1: only the newest batch can crash-replay,
+    and its re-read excludes folded ids, so the dirs a replay may touch
+    must never be folded.
     """
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (replay safety)")
     if not os.path.isdir(root):
         return
-    base = committed_fold(root)
+    base, live = fold_state(root)
     folded = base[1] if base else set()
-    live = [i for i in numbered_ids(root) if i not in folded]
     fold = live[:-keep_last]
     if not fold:
         return
-    parts = [os.path.join(root, f"batch={i}") for i in fold]
-    if base:
-        parts.append(base[0])
-    if partition_by:
-        # one read per path, each its own basePath: a multi-root read over
-        # partitioned contribution dirs (the ANN index's bucket=<b> layout)
-        # trips Spark's conflicting-partition-directories check otherwise
-        dfs = [spark.read.option("basePath", p).parquet(p) for p in parts]
-        merged = dfs[0]
-        for d in dfs[1:]:
-            merged = merged.unionByName(d)
-    else:
-        # one scan, the plan the readers run: a re-aggregating ``agg`` over
-        # a union of per-path scans adds float partials in another order,
-        # moving a folded double sum by an ulp (agg_mv's fold tests assert
-        # bit-exact values across compaction)
-        merged = spark.read.parquet(*parts)
-    if agg is not None:
-        merged = agg(merged)
+    merged = read_batch_tagged(spark, root, fold, base)
+    merged = agg(merged) if agg is not None else merged.drop("batch")
     broot = os.path.join(root, _BASELINE)
     ks = numbered_ids(broot, prefix="v")  # uncommitted leftovers count too:
     new_dir = os.path.join(broot, f"v={(ks[-1] + 1) if ks else 0}")  # no reuse
@@ -245,7 +252,7 @@ def fold_verbatim(
         json.dump(sorted(folded | set(fold)), f)
     with open(os.path.join(new_dir, _COMMITTED), "w") as f:
         f.write("")  # marker LAST
-    for p in parts[: len(fold)]:
-        shutil.rmtree(p, ignore_errors=True)
+    for i in fold:
+        shutil.rmtree(os.path.join(root, f"batch={i}"), ignore_errors=True)
     for k in ks:
         shutil.rmtree(os.path.join(broot, f"v={k}"), ignore_errors=True)

@@ -20,8 +20,13 @@ Per micro-batch: ONE partial aggregation of the batch (map-side combined),
 written under ``contrib/batch=<id>`` (batch-keyed overwrite — replay
 regenerates the same dir; the rollup/scd2 idempotency scheme).  Readers
 merge all contributions with the same associative functions — O(groups x
-batches) rows, compactable exactly like rollup baselines.  No shared state
-is ever read on the write path, so batch cost is O(batch), never O(view).
+batches) rows, compactable exactly like rollup baselines.  Floating-point
+addition is the exception: it is not associative, so ``sum``/``avg``
+partials of a float column are added as a left fold in batch-id order
+(:func:`_sum_in_batch_order`), in the read and in the compaction alike —
+the view is then bit-identical at any parallelism and across compaction.
+No shared state is ever read on the write path, so batch cost is
+O(batch), never O(view).
 
 Spec: ``{"out_col": ("fn", "in_col")}`` with fn in COUNT/SUM/MIN/MAX/AVG/NDV,
 plus ``("hist", col, lo, hi, nbins)`` for the quantile sketch (values outside
@@ -34,8 +39,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType, StructType
 
-from ._state import fold_verbatim, read_fold_paths, start_maintainer
+from ._state import (
+    fold_state,
+    fold_verbatim,
+    read_batch_tagged,
+    start_maintainer,
+)
 
 _CONTRIB = "contrib"
 MERGEABLE = ("count", "sum", "min", "max", "avg", "ndv", "hist")
@@ -138,7 +149,24 @@ def _partial_aggs(spec: dict) -> list:
     return out
 
 
-def _merge_aggs(spec: dict) -> list:
+def _sum_in_batch_order(col: str, schema: StructType):
+    """``sum(col)`` over partial rows tagged with ``batch``
+    (:func:`_state.read_batch_tagged`).  A float column is summed as a left
+    fold in batch-id order: Spark's ``sum`` adds in scan-partition order,
+    which would move the view by an ulp with the parallelism and across a
+    compaction.  Other types add exactly, in any order."""
+    dtype = schema[col].dataType
+    if not isinstance(dtype, (DoubleType, FloatType)):
+        return F.sum(col)
+    xs = F.array_sort(F.collect_list(F.struct("batch", F.col(col).alias("v"))))
+    return F.aggregate(
+        xs,
+        F.lit(None).cast(dtype),
+        lambda acc, x: F.coalesce(acc + x["v"], acc, x["v"]),
+    )
+
+
+def _merge_aggs(spec: dict, schema: StructType) -> list:
     out = []
     for name, entry in spec.items():
         fn = entry[0]
@@ -167,14 +195,17 @@ def _merge_aggs(spec: dict) -> list:
         elif fn == "count":
             out.append(F.sum(f"{name}__cnt").alias(name))
         elif fn == "sum":
-            out.append(F.sum(f"{name}__sum").alias(name))
+            out.append(_sum_in_batch_order(f"{name}__sum", schema).alias(name))
         elif fn == "min":
             out.append(F.min(f"{name}__min").alias(name))
         elif fn == "max":
             out.append(F.max(f"{name}__max").alias(name))
         elif fn == "avg":
             out.append(
-                (F.sum(f"{name}__sum") / F.sum(f"{name}__cnt")).alias(name)
+                (
+                    _sum_in_batch_order(f"{name}__sum", schema)
+                    / F.sum(f"{name}__cnt")
+                ).alias(name)
             )
         elif fn == "ndv":
             out.append(
@@ -183,7 +214,7 @@ def _merge_aggs(spec: dict) -> list:
     return out
 
 
-def _refold_aggs(spec: dict) -> list:
+def _refold_aggs(spec: dict, schema: StructType) -> list:
     """Merge partials INTO partials (for baseline compaction): same
     associative functions, partial-shaped output columns."""
     out = []
@@ -200,13 +231,17 @@ def _refold_aggs(spec: dict) -> list:
         elif fn in ("count",):
             out.append(F.sum(f"{name}__cnt").alias(f"{name}__cnt"))
         elif fn == "sum":
-            out.append(F.sum(f"{name}__sum").alias(f"{name}__sum"))
+            out.append(
+                _sum_in_batch_order(f"{name}__sum", schema).alias(f"{name}__sum")
+            )
         elif fn == "min":
             out.append(F.min(f"{name}__min").alias(f"{name}__min"))
         elif fn == "max":
             out.append(F.max(f"{name}__max").alias(f"{name}__max"))
         elif fn == "avg":
-            out.append(F.sum(f"{name}__sum").alias(f"{name}__sum"))
+            out.append(
+                _sum_in_batch_order(f"{name}__sum", schema).alias(f"{name}__sum")
+            )
             out.append(F.sum(f"{name}__cnt").alias(f"{name}__cnt"))
         elif fn == "ndv":
             out.append(F.hll_union_agg(f"{name}__hll").alias(f"{name}__hll"))
@@ -223,13 +258,14 @@ def compact_agg_mv(
     """Fold all but the newest ``keep_last`` contribution dirs (plus the old
     baseline) into a new committed baseline of PARTIAL rows — the
     ``_state.fold_verbatim`` scheme, re-merging partials with the same
-    associative functions."""
+    associative functions (float sums in batch-id order, the baseline
+    tagged with the highest id it folds)."""
     _check_spec(spec)
     fold_verbatim(
         spark,
         os.path.join(state_dir, _CONTRIB),
         keep_last,
-        agg=lambda df: df.groupBy(*keys).agg(*_refold_aggs(spec)),
+        agg=lambda df: df.groupBy(*keys).agg(*_refold_aggs(spec, df.schema)),
     )
 
 
@@ -254,11 +290,12 @@ def read_agg_mv(
 ) -> DataFrame:
     """The view: all contributions re-merged with the associative finals."""
     _check_spec(spec)
-    parts = read_fold_paths(os.path.join(state_dir, _CONTRIB))
-    if not parts:
+    root = os.path.join(state_dir, _CONTRIB)
+    base, ids = fold_state(root)
+    contribs = read_batch_tagged(spark, root, ids, base)
+    if contribs is None:
         raise FileNotFoundError(f"no agg-MV state under {state_dir}")
-    contribs = spark.read.parquet(*parts)
-    return contribs.groupBy(*keys).agg(*_merge_aggs(spec))
+    return contribs.groupBy(*keys).agg(*_merge_aggs(spec, contribs.schema))
 
 
 def start_agg_mv_load(

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..cdc.apply import latest_by_key, not_deleted, parse_envelope
+from ..cdc.apply import not_deleted, parse_envelope
 from ..cdc.schemas import ORDER_EVENT_ENVELOPE
 from ..storage import (
     BUCKET_COL,
@@ -261,9 +261,11 @@ def merge_batch(
         if not affected:
             return stats
 
+        # the batch goes into upsert_buckets unreduced: its one LWW pass
+        # over (touched state ∪ batch) is the batch's own reduction too
         good = parsed.filter(F.col(cfg.key).isNotNull())
         merged = upsert_buckets(
-            _read_state_raw(spark, cfg), latest_by_key(good, cfg.key, cfg.seq_col),
+            _read_state_raw(spark, cfg), good,
             affected, cfg.key, cfg.key, cfg.buckets, cfg.seq_col,
         )
         overwrite_buckets(merged, _state_path(cfg))

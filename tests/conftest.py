@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from mysql_cdc_debezium_starrocks_spark.session import get_spark
@@ -20,12 +22,11 @@ SF_SMOKE = "/root/testdata/sf0.001"
 # tier unless explicitly tiered here.
 SOAK_MODULES = {
     "test_soak",
-    "test_r7_composed_soak",
+    "test_composed_soak",
 }
 PROPERTY_MODULES = {
     "test_cdc_property",
-    "test_r6c_properties",
-    "test_r8_prefix_props",
+    "test_prefix_sum_properties",
 }
 SLOW_MODULES = {
     # streaming/ingest integration: real micro-batch triggers + sleeps
@@ -46,7 +47,23 @@ SLOW_MODULES = {
 }
 
 
+def _check_tier_sets() -> None:
+    """Every tiered name must be a module here: a rename that misses this
+    file would otherwise drop that module's tests into the core tier."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    stale = sorted(
+        m
+        for m in SOAK_MODULES | PROPERTY_MODULES | SLOW_MODULES
+        if not os.path.isfile(os.path.join(here, f"{m}.py"))
+    )
+    if stale:
+        raise pytest.UsageError(
+            f"tests/conftest.py tiers modules that do not exist: {stale}"
+        )
+
+
 def pytest_collection_modifyitems(config, items):
+    _check_tier_sets()
     for item in items:
         mod = item.module.__name__.rsplit(".", 1)[-1]
         if mod in SOAK_MODULES:

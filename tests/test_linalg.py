@@ -3,14 +3,21 @@
 The oracle gate (tools/parity.py) already hash-checks emb_covariance,
 ts_anomaly_zscore, hist_quantile_bins, text_repetition and
 text_decontaminate; these tests cover the non-SQL-expressible PCA path
-against numpy ground truth plus structural invariants.
+against numpy ground truth plus structural invariants and the integer
+kernels' zero-matrix guard.
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 
+from mysql_cdc_debezium_starrocks_spark.operators.linalg import (
+    _int_power_iteration,
+    _l2_quantize,
+)
 from tests.conftest import SF_SMOKE
 
 
@@ -206,3 +213,16 @@ def test_pack_sequences_invariants(spark):
 
     again = pack_sequences(spark, SF_SMOKE).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
+
+
+def test_power_iteration_rejects_zero_matrix():
+    """Constant embeddings give a zero covariance; the integer kernels must
+    raise a descriptive error, not ZeroDivisionError (advisor finding)."""
+    with pytest.raises(ValueError, match="zero matrix"):
+        _int_power_iteration({}, 4, 10)
+    with pytest.raises(ValueError, match="zero vector"):
+        _l2_quantize([0, 0, 0])
+    # non-degenerate input still works (identity-ish matrix)
+    v = _int_power_iteration({(i, i): 1_000_000 for i in range(4)}, 4, 5)
+    assert any(x != 0 for x in v)
+    assert _l2_quantize(v)

@@ -5,6 +5,11 @@ PPM (P6) and uncompressed 24-bit BMP decode with pure python + numpy, so
 the decode branch is asserted in-container with golden bytes; compressed
 formats stay pillow-gated, and their absence path must remain a clear,
 actionable error — never a silent wrong answer.
+
+Also the perceptual-hash family (mm_image_phash, mm_phash_dupes,
+mm_phash_components, eval_phash_pr): bit shape, exact Hamming distances,
+component consistency, the banded PR gate, and the integer band machinery
+against its string formulation.
 """
 
 from __future__ import annotations
@@ -16,6 +21,8 @@ from mysql_cdc_debezium_starrocks_spark.operators.multimodal import (
     IMAGE_CODEC_AVAILABLE,
     decode_image,
 )
+
+from .conftest import SF_SMOKE
 
 # 2x2 RGB golden image: distinct channel values per pixel, row order
 #   (10,20,30) (40,50,60)
@@ -92,3 +99,116 @@ def test_decode_compressed_format_matches_environment():
     arr = decode_image(buf.getvalue())
     assert arr.shape == (4, 4, 3) and arr.dtype == np.uint8
     assert arr[0, 0, 0] == 0 and arr[3, 3, 2] == 47
+
+
+def test_image_phash_shape_and_dupes(spark):
+    from mysql_cdc_debezium_starrocks_spark.operators.multimodal import (
+        PHASH_MAX_HAMMING,
+        mm_image_phash,
+        mm_phash_dupes,
+    )
+
+    rows = mm_image_phash(spark, SF_SMOKE).collect()
+    assert rows
+    for r in rows:
+        assert len(r.phash_bits) == 64
+        assert set(r.phash_bits) <= {"0", "1"}
+        assert r.n_ones == r.phash_bits.count("1")
+
+    ph = {r.doc_id: r.phash_bits for r in rows}
+    dupes = mm_phash_dupes(spark, SF_SMOKE).collect()
+    assert dupes  # the fixture's duplicated docs share 192-byte prefixes
+    for d in dupes:
+        assert d.doc_a < d.doc_b
+        true_h = sum(
+            1 for x, y in zip(ph[d.doc_a], ph[d.doc_b]) if x != y
+        )
+        assert d.hamming == true_h <= PHASH_MAX_HAMMING
+
+
+def test_phash_components_consistent_with_pairs(spark):
+    """Every pHash dup pair lands in one component; component_id is the
+    cluster minimum (same contract as dedup_components)."""
+    from mysql_cdc_debezium_starrocks_spark.operators.multimodal import (
+        mm_phash_components,
+        mm_phash_dupes,
+    )
+
+    comp = {
+        r.doc_id: r.component_id
+        for r in mm_phash_components(spark, SF_SMOKE).collect()
+    }
+    pairs = [
+        (r.doc_a, r.doc_b) for r in mm_phash_dupes(spark, SF_SMOKE).collect()
+    ]
+    assert pairs and comp
+    for a, b in pairs:
+        assert comp[a] == comp[b], (a, b)
+    # component_id is the min member id
+    members = {}
+    for d, c in comp.items():
+        members.setdefault(c, []).append(d)
+    for c, ds in members.items():
+        assert c == min(ds)
+
+
+def test_phash_pr_gate_invariants(spark):
+    """The 7-band pigeonhole truth is complete by construction, so tp+fn =
+    n_truth and every mm_phash_dupes pair is in truth; 4 bands guarantee
+    radius 3, so recall is high but precision < 1 (band collisions beyond
+    the radius are exactly what the gate counts)."""
+    from mysql_cdc_debezium_starrocks_spark.operators.multimodal import (
+        eval_phash_pr,
+        mm_phash_dupes,
+    )
+
+    [r] = eval_phash_pr(spark, SF_SMOKE).collect()
+    assert r.tp + r.fn == r.n_truth
+    assert r.tp + r.fp == r.n_pred
+    assert r.n_truth == mm_phash_dupes(spark, SF_SMOKE).count()
+    assert r.recall_ppm >= 900_000  # 4 bands: radius-3 guaranteed, 4-6 high
+    assert 0 < r.precision_ppm < 1_000_000
+
+
+def test_phash_band_int_machinery_equals_string_semantics(spark):
+    """Property lock: the integer band keys / band masks / bit_count
+    Hamming must agree with the plain string-substring formulation over
+    random 64-bit patterns — including the straddling truth bands."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from mysql_cdc_debezium_starrocks_spark.operators.multimodal import (
+        _TRUTH_OFFSETS,
+        _TRUTH_WIDTHS,
+        _band_key_col,
+        _band_masks,
+        _phash_ints,
+    )
+
+    rng = random.Random(42)
+    bits = ["".join(rng.choice("01") for _ in range(64)) for _ in range(64)]
+    df = spark.createDataFrame(
+        [(i, b) for i, b in enumerate(bits)], "doc_id long, phash_bits string"
+    )
+    ints = _phash_ints(df)
+    keys = ints.select(
+        "doc_id",
+        *[
+            _band_key_col(_TRUTH_OFFSETS[j], _TRUTH_WIDTHS[j]).alias(f"k{j}")
+            for j in range(len(_TRUTH_WIDTHS))
+        ],
+        (F.bit_count("hi") + F.bit_count("lo")).alias("pop"),
+    ).collect()
+    for r in keys:
+        s = bits[r.doc_id]
+        for j in range(len(_TRUTH_WIDTHS)):
+            off, w = _TRUTH_OFFSETS[j], _TRUTH_WIDTHS[j]
+            assert getattr(r, f"k{j}") == int(s[off : off + w], 2), (j, s)
+        assert r.pop == s.count("1")
+    # masks select exactly their band's bits
+    for j in range(len(_TRUTH_WIDTHS)):
+        hi, lo = _band_masks(_TRUTH_OFFSETS[j], _TRUTH_WIDTHS[j])
+        m = format(hi, "032b") + format(lo, "032b")
+        off, w = _TRUTH_OFFSETS[j], _TRUTH_WIDTHS[j]
+        assert m == "0" * off + "1" * w + "0" * (64 - off - w)

@@ -2,7 +2,9 @@
 
 Each check encodes a 100 TB survival property: filters reach the parquet
 scan, projections prune the read schema, dimension joins broadcast, big aggs
-get map-side partials, nothing falls back to a cartesian product.
+get map-side partials, nothing falls back to a cartesian product.  The
+last test sweeps these properties over epoch repeats, CUSUM, the cosine
+pair histogram and the integer PCA.
 """
 
 from pyspark.sql import functions as F
@@ -563,3 +565,40 @@ def test_zscore_window_is_sub_partitioned(spark):
             assert "_bkt#" in s, f"doc-scale window not sub-partitioned: {s}"
     assert broadcasts(p) >= 1
     assert not has_cartesian(p)
+
+
+def test_upsample_cusum_cosine_pca_plan_shapes(spark):
+    """Scale-shape gates for the round-6 operators."""
+    from mysql_cdc_debezium_starrocks_spark.operators.linalg import (
+        emb_pca_project,
+    )
+    from mysql_cdc_debezium_starrocks_spark.operators.similarity import (
+        emb_cosine_pair_histogram,
+    )
+    from mysql_cdc_debezium_starrocks_spark.operators.stats import (
+        mix_upsample_repeat,
+        ts_changepoint_cusum,
+    )
+
+    # pair histogram: equi-join on the hash bucket, never a cartesian
+    p = plan_of(emb_cosine_pair_histogram(spark, SF_SMOKE))
+    assert not has_cartesian(p)
+
+    # upsample plan: |sources|-row frames broadcast back onto the scan
+    p = plan_of(mix_upsample_repeat(spark, SF_SMOKE))
+    assert not has_cartesian(p) or broadcasts(p)
+    assert broadcasts(p)
+
+    # CUSUM: both windows ride ONE shuffle on event_type (sort reuse); the
+    # only other exchanges are the hourly rollup and the final top-k
+    df = ts_changepoint_cusum(spark, SF_SMOKE)
+    p = plan_of(df)
+    assert shuffle_count(p) <= 4
+    assert not has_cartesian(p)
+
+    # integer PCA: the projection scan is map-only — the single exchange
+    # is load_spread's spreading repartition, not a data shuffle (the
+    # 64-row moment/covariance jobs run eagerly during build)
+    p = plan_of(emb_pca_project(spark, SF_SMOKE))
+    assert shuffle_count(p) <= 1
+    assert "mapinpandas" not in p.lower()

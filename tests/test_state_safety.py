@@ -1,10 +1,13 @@
-"""Materializer/storage state-safety regressions (round-2 review findings):
-tombstone-free point lookups, bucket-layout metadata enforcement, gc-swap
-crash repair, partition-pruned join-MV dim propagation, z-order wide-range
-scaling, deterministic shard export.
+"""Materializer/storage state-safety regressions: tombstone-free point
+lookups, bucket-layout metadata enforcement, gc-swap crash repair,
+partition-pruned join-MV dim propagation, z-order wide-range scaling,
+deterministic shard export; the pre-metadata guards (materializer state
+and theta sketches refuse to guess a layout, the secondary index infers
+its modulus); and NaN-safe agg-MV histogram binning.
 """
 
 import json
+import math
 import os
 
 import pytest
@@ -19,6 +22,8 @@ from mysql_cdc_debezium_starrocks_spark.streaming.materializer import (
 )
 
 SF = "/root/testdata/sf0.001"
+ROW1 = {"order_key": 1, "cust_key": 11, "status": "a",
+        "total_price": "1.00", "__deleted": "false"}
 
 
 def _cfg(tmp_path, **kw) -> CdcLoadConfig:
@@ -235,3 +240,72 @@ def test_training_shards_deterministic_with_duplicate_keys(spark, tmp_path):
             per_shard.append([tuple(r) for r in df.collect()])
         outs.append(per_shard)
     assert outs[0] == outs[1]
+
+
+def test_premeta_state_refuses_merge(spark, tmp_path):
+    """State data with no _meta.json must refuse a merge instead of
+    stamping the current cfg's layout over an unknown one (ADVICE r02 #1:
+    a changed bucket modulus would be silently legitimized)."""
+    cfg = _cfg(tmp_path)
+    merge_batch(spark, cfg, _batch(spark, [(1, ROW1)]))
+    os.remove(os.path.join(cfg.state_dir, "_meta.json"))  # legacy state
+    with pytest.raises(ValueError, match="no _meta.json"):
+        merge_batch(spark, cfg, _batch(spark, [(2, ROW1)]))
+
+
+def test_theta_premeta_read_refuses_default_k(spark, tmp_path):
+    """read_theta on pre-metadata contributions must not assume DEFAULT_K
+    (ADVICE r02 #3) — but an explicit k unblocks legacy state."""
+    from mysql_cdc_debezium_starrocks_spark.streaming.theta_stats import (
+        read_theta,
+        update_theta_batch,
+    )
+
+    state = str(tmp_path / "theta")
+    batch = spark.range(100).select(F.col("id").cast("string").alias("k"))
+    update_theta_batch(spark, state, batch, "k", 0, k=64)
+    os.remove(os.path.join(state, "theta", "_meta.json"))  # legacy state
+    with pytest.raises(ValueError, match="no _meta.json"):
+        read_theta(spark, state)
+    assert read_theta(spark, state, k=64).count() == 64
+
+
+def test_secondary_index_premeta_lookup_falls_back(spark, tmp_path):
+    """An index built before _meta.json existed must still serve lookups
+    by inferring the modulus from the bucket layout (ADVICE r02 #4)."""
+    from mysql_cdc_debezium_starrocks_spark.streaming.secondary_index import (
+        build_secondary_index,
+        lookup_by_index,
+    )
+
+    cfg = _cfg(tmp_path)
+    merge_batch(spark, cfg, _batch(spark, [
+        (1, ROW1),
+        (2, {"order_key": 2, "cust_key": 12, "status": "b",
+             "total_price": "2.00", "__deleted": "false"}),
+    ]))
+    idx_dir = build_secondary_index(spark, cfg, "status")
+    with_meta = [r.order_key for r in
+                 lookup_by_index(spark, cfg, "status", "b").collect()]
+    os.remove(os.path.join(idx_dir, "_meta.json"))  # legacy index
+    without_meta = [r.order_key for r in
+                    lookup_by_index(spark, cfg, "status", "b").collect()]
+    assert with_meta == without_meta == [2]
+
+
+def test_hist_nan_counts_as_null(spark, tmp_path):
+    """A NaN measure must be excluded from the histogram like NULL, not
+    floor-cast into the lowest bin (ADVICE r02 #5: p50 skew)."""
+    from mysql_cdc_debezium_starrocks_spark.streaming.agg_mv import (
+        merge_agg_mv_batch,
+        read_agg_mv,
+    )
+
+    spec = {"q": ("hist", "x", 0.0, 200.0, 20)}
+    rows = [("g", 100.0)] * 10 + [("g", math.nan)] * 10 + [("g", None)] * 5
+    df = spark.createDataFrame(rows, "g STRING, x DOUBLE")
+    state = str(tmp_path / "mv")
+    merge_agg_mv_batch(spark, state, df, ["g"], spec, 0)
+    out = read_agg_mv(spark, state, ["g"], spec).collect()[0]
+    assert out.q.n == 10  # NaN and NULL both uncounted
+    assert out.q.p50 == pytest.approx(105.0)  # bin [100,110) midpoint

@@ -1,11 +1,23 @@
-"""Regenerate PLANS.md: formatted physical plans of the headline queries
-with the scale properties each plan is expected to exhibit.
+"""Dump formatted physical plans, each with the scale properties the plan
+exhibits; a headline query also prints the shape it was designed to have.
 
-Run: python tools/dump_plans.py   (writes PLANS.md at the repo root)
+Usage: python tools/dump_plans.py [sf_dir] [query ...] [--executed] [--out DIR]
+
+- query names default to the headline set below; sf_dir (the first
+  argument containing "/") defaults to the sf0.001 fixture;
+- ``--executed`` runs each query on bench.py's staged copy of sf_dir
+  (``bench._stage``) before dumping, so the plan is AQE's final one
+  (``AdaptiveSparkPlan isFinalPlan=true``, with runtime coalescing, join
+  rewrites and reused exchanges) rather than the pre-execution plan;
+- the dump goes to stdout, or with ``--out DIR`` to ``DIR/<query>.txt``.
+
+The properties a plan must keep are asserted by tests/test_plans.py and
+tests/test_tpch_plans.py; this tool is for reading plans, not gating them.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -214,10 +226,11 @@ HEADLINE = [
     ),
     (
         "dq_fk_orphans",
-        "FK referential audit: relationships sharing a child table chain "
-        "their parent left-joins onto ONE scan (parents broadcast); the "
-        "multi-count-distinct plans as a single Expand; the result is a "
-        "union of 1-row aggregates inline-exploded per relationship.",
+        "FK referential audit: relationships sharing a child table audit "
+        "in ONE scan, exploded to (relationship, key) pairs and collapsed "
+        "per key before the parent membership join — no Expand; each "
+        "relationship's 1-row aggregate is left-joined onto the static "
+        "relationship list, so an empty child table still reports.",
     ),
     (
         "pack_concat_chunks",
@@ -304,46 +317,60 @@ HEADLINE = [
 ]
 
 
+def _dump(title: str, plan: str, note: str | None) -> str:
+    props = []
+    if pushes_filters(plan):
+        props.append("pushed filters")
+    if prunes_columns(plan, 8):
+        props.append("pruned read schema")
+    if broadcasts(plan):
+        props.append("broadcast join")
+    if partial_aggregates(plan):
+        props.append("map-side partial agg")
+    props.append(f"{shuffle_count(plan)} shuffle exchange(s)")
+    out = [f"## {title}", ""]
+    if note:
+        out += [note, ""]
+    out += [f"Verified properties: {', '.join(props)}.", ""]
+    out += ["```", plan.strip(), "```", ""]
+    return "\n".join(out)
+
+
 def main() -> None:
-    spark = get_spark("plans")
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("args", nargs="*", metavar="[sf_dir] query")
+    ap.add_argument("--executed", action="store_true",
+                    help="run each query on the staged layout first")
+    ap.add_argument("--out", metavar="DIR",
+                    help="write DIR/<query>.txt instead of stdout")
+    opts = ap.parse_args()
+    args = list(opts.args)
+    sf_dir = args.pop(0) if args and "/" in args[0] else SF
+    notes = dict(HEADLINE)
+    names = args or list(notes)
+
     import __spark_entry__ as se
 
+    spark = get_spark("dump_plans")
+    if opts.executed:
+        import bench
+
+        sf_dir = bench._stage(spark, sf_dir)
     queries = se.queries()
-    out = [
-        "# PLANS — headline physical plans (regenerate: `python tools/dump_plans.py`)",
-        "",
-        "Each plan is the one the operator was DESIGNED to produce; the matching",
-        "properties are enforced by tests/test_plans.py and tests/test_tpch_plans.py,",
-        "so a regression that changes the plan shape fails CI, not just this file.",
-        "",
-    ]
-    for name, note in HEADLINE:
-        df = queries[name](spark, SF)
-        p = plan_of(df)
-        props = []
-        if pushes_filters(p):
-            props.append("pushed filters")
-        if prunes_columns(p, 8):
-            props.append("pruned read schema")
-        if broadcasts(p):
-            props.append("broadcast join")
-        if partial_aggregates(p):
-            props.append("map-side partial agg")
-        props.append(f"{shuffle_count(p)} shuffle exchange(s)")
-        out.append(f"## {name}")
-        out.append("")
-        out.append(note)
-        out.append("")
-        out.append(f"Verified properties: {', '.join(props)}.")
-        out.append("")
-        out.append("```")
-        out.append(p.strip())
-        out.append("```")
-        out.append("")
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
-    print("wrote PLANS.md")
+    if opts.out:
+        os.makedirs(opts.out, exist_ok=True)
+    for name in names:
+        df = queries[name](spark, sf_dir)
+        if opts.executed:
+            df.collect()  # drive execution so the adaptive plan is final
+        title = f"{name} @ {sf_dir}" + (" (executed)" if opts.executed else "")
+        text = _dump(title, plan_of(df), notes.get(name))
+        if opts.out:
+            with open(os.path.join(opts.out, f"{name}.txt"), "w") as f:
+                f.write(text)
+            print(f"dumped {name}", file=sys.stderr)
+        else:
+            print(text, flush=True)
 
 
 if __name__ == "__main__":

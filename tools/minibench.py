@@ -1,13 +1,21 @@
 """Time a subset of declared queries with bench.py's exact methodology
-(staged layout, noop sink, warm-up pass, median of N settled runs) — for
-before/after comparisons while optimizing, without a full 209-query run.
+(staged layout, noop sink, warm-up pass, median of N settled runs,
+bracketed by drift probes and normalized by them) — for before/after
+comparisons while optimizing, without a full 209-query run.
 
-Usage: SPARK_GRAFT_CPUS=32 python tools/minibench.py <query> [query ...]
+Usage: SPARK_GRAFT_CPUS=32 python tools/minibench.py [--warm-all] <query> [query ...]
+
+``--warm-all`` first runs EVERY registry query once, building all session
+artifacts as bench.py's warm pass does, so the timed queries run under a
+full session's storage pressure; the output then also reports the
+session's driver heap (``_heap``).
+
 Env: MB_RUNS (default 3), SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -16,7 +24,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    names = sys.argv[1:]
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="+", metavar="query")
+    ap.add_argument("--warm-all", action="store_true",
+                    help="run every registry query once before timing")
+    opts = ap.parse_args()
+    names = opts.names
     runs = int(os.environ.get("MB_RUNS", "3"))
     import bench
     import __spark_entry__ as se
@@ -26,6 +39,12 @@ def main() -> None:
     spark = get_spark("minibench")
     staged = bench._stage(spark, sf_dir)
     queries = se.queries()
+
+    if opts.warm_all:
+        for i, n in enumerate(sorted(queries)):
+            bench._exec(queries[n], spark, staged)
+            if i % 40 == 0:
+                print(f"warm {i}/{len(queries)}", file=sys.stderr, flush=True)
 
     def probe() -> float:
         # bench.py's drift probe, same anchor (CONTROL_ANCHORS[group_count])
@@ -64,6 +83,8 @@ def main() -> None:
         "anchor": anchor,
         "drift_abs": round(drift, 3),
     }
+    if opts.warm_all:
+        out["_heap"] = spark.sparkContext.getConf().get("spark.driver.memory")
     print(json.dumps(out))
 
 
