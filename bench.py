@@ -46,8 +46,9 @@ def _stage(spark, sf_dir: str) -> str:
     the original files.
     """
     from mysql_cdc_debezium_starrocks_spark.catalog import TABLES, load
+    from mysql_cdc_debezium_starrocks_spark.session import graft_cpus
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(graft_cpus())
     staged = os.path.join(
         "/tmp", f"bench_stage_{os.path.basename(os.path.normpath(sf_dir))}_{cpus}"
     )

@@ -154,14 +154,6 @@ def all_queries():
     return _prioritize(out)
 
 
-def all_queries_raw():
-    """Registry without wire canonicalization (library-typed outputs)."""
-    out = {}
-    for m in _modules():
-        out.update(m.QUERIES)
-    return _prioritize(out)
-
-
 def all_oracle():
     """Oracle SQL registry, wire-canonicalized to match all_queries()."""
     global _ORACLE_CACHE

@@ -34,6 +34,8 @@ from __future__ import annotations
 
 import re
 
+from ..catalog import TABLES
+
 CANON_SCALE = 6
 
 _DEC_RE = re.compile(r"DECIMAL\((\d+),(\d+)\)", re.IGNORECASE)
@@ -142,11 +144,7 @@ def canonize_oracles(oracles: dict[str, str], fixture_dir: str) -> dict[str, str
     import duckdb
 
     con = duckdb.connect()
-    tables = (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split()
-    for t in tables:
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{fixture_dir}/{t}.parquet')"

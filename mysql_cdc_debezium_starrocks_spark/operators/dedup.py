@@ -109,15 +109,6 @@ MINHASH_B = [524_287_093, 936_172_081, 112_272_535, 819_226_657,
              155_189_249, 672_287_461, 989_712_907, 363_247_393]
 
 
-def _doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct 32-bit shingle hashes per doc — the minhash/Jaccard substrate."""
-    sh = _doc_shingles(spark, sf_dir)
-    hashes = F.array_distinct(
-        F.transform(F.col("sh"), lambda s: phash32(s, "shg"))
-    )
-    return sh.select("doc_id", hashes.alias("hs"))
-
-
 def _uhash(i: int):
     """Single-arg lambda for transform(); arity matters — a second (default)
     parameter would make Spark pass the element index into it."""
@@ -134,6 +125,30 @@ def _minhash_sig(hs_df: DataFrame) -> DataFrame:
         ]
     )
     return hs_df.select("doc_id", "hs", sig.alias("sig"))
+
+
+def _minhash_candidates(sig: DataFrame) -> DataFrame:
+    """Candidate pairs of a banded :func:`signature_table`: the
+    ``(band, bhash)`` bucket self-join with ``doc_a < doc_b``, each pair
+    once, with both shingle-hash sets (``sha``, ``shb``) for the exact
+    verify.  A caller that drops ``sha``/``shb`` never reads them: the
+    optimizer prunes them out of the dedup and the scan."""
+    a, b = sig.alias("a"), sig.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bhash") == F.col("b.bhash"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.hs").alias("sha"),
+            F.col("b.hs").alias("shb"),
+        )
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,23 +169,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE definition of the banded-signature pipeline (signature_table),
     # shared with streaming dedup-at-ingest — a drifted copy here would
     # silently desynchronize the batch and streaming near-dup paths
-    exploded = shared_signatures(spark, sf_dir)
-    a, b = exploded.alias("a"), exploded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bhash") == F.col("b.bhash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.hs").alias("sha"),
-            F.col("b.hs").alias("shb"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    cand = _minhash_candidates(shared_signatures(spark, sf_dir))
     jac = F.size(F.array_intersect("sha", "shb")) / F.size(F.array_union("sha", "shb"))
     return (
         cand.select(
@@ -195,23 +194,7 @@ def dedup_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``x DIV y`` == DuckDB ``//``) — bit-identical cross-engine, no float
     in the hash surface.  Kept pairs: max containment >= 0.70.
     """
-    exploded = shared_signatures(spark, sf_dir)
-    a, b = exploded.alias("a"), exploded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bhash") == F.col("b.bhash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.hs").alias("sha"),
-            F.col("b.hs").alias("shb"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    cand = _minhash_candidates(shared_signatures(spark, sf_dir))
     sized = cand.select(
         "doc_a",
         "doc_b",
@@ -1083,20 +1066,9 @@ def _minhash_eval_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_b",
         (jac * 10000).cast("long").alias("jac_bp"),
     )
-    sa, sb = sig.alias("sa"), sig.alias("sb")
     blk = hsd.select("doc_id", "blk")
     pred = (
-        sa.join(
-            sb,
-            (F.col("sa.band") == F.col("sb.band"))
-            & (F.col("sa.bhash") == F.col("sb.bhash"))
-            & (F.col("sa.doc_id") < F.col("sb.doc_id")),
-        )
-        .select(
-            F.col("sa.doc_id").alias("doc_a"),
-            F.col("sb.doc_id").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
+        _minhash_candidates(sig)
         # universe membership (ground truth is defined): adjacent length
         # blocks — two dimension-scale lookups on the tiny pair set
         .join(blk.select(F.col("doc_id").alias("doc_a"), F.col("blk").alias("blk_a")), "doc_a")

@@ -1,7 +1,8 @@
 """SparkSession factory tuned for the engine.
 
-Test/bench entry points run on ``local[$SPARK_GRAFT_CPUS]`` (default 32) but
-every config here is chosen to survive a 1000-executor cluster: AQE on (runtime
+Test/bench entry points run on ``local[$SPARK_GRAFT_CPUS]`` (default: the
+CPUs the process may run on, :func:`graft_cpus`) but every config here is
+chosen to survive a 1000-executor cluster: AQE on (runtime
 coalesce + skew-join splitting), shuffle partitions sized to cores locally and
 meant to be overridden upward on a real cluster, Arrow enabled for the few
 Pandas-UDF paths, and UTC session time so timestamp semantics are
@@ -21,6 +22,12 @@ def _default_driver_memory() -> str:
     return f"{min(16 * 1024, ram // 2 // 2**20)}m"
 
 
+def graft_cpus() -> str:
+    """Local task slots: $SPARK_GRAFT_CPUS, else the CPUs this process may
+    run on (its affinity mask, not the host's count)."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "mysql-cdc-debezium-starrocks-spark",
     cpus: int | str | None = None,
@@ -29,9 +36,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS (driver contract) or 32.
+    ``cpus`` defaults to :func:`graft_cpus`.
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or graft_cpus()
     shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(cpus)))
     b = (
         SparkSession.builder.master(f"local[{cpus}]")

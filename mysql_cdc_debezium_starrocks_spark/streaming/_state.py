@@ -1,6 +1,8 @@
 """The streaming-maintainer skeleton every incremental module shares: the
-query start path (:func:`start_maintainer`) and the batch-keyed state
-layout (``<state>/<sub>/batch=<id>`` contribution dirs folded into
+query start path (:func:`start_maintainer`) and the two batch-keyed state
+layouts — snapshot chains (``<state>/<sub>/batch=<id>`` full copy-on-write
+snapshots, the newest few kept) and contribution stores
+(``<state>/<sub>/batch=<id>`` contribution dirs folded into
 ``<state>/<sub>/baseline/v=<k>`` committed baselines).
 
 One definition instead of a per-module copy: a future layout or trigger
@@ -87,6 +89,51 @@ def numbered_ids(
             or os.path.exists(os.path.join(root, d, require_marker))
         )
     )
+
+
+# ---------------------------------------------------------------------------
+# Snapshot chains: stores where each batch writes a FULL snapshot derived
+# from the previous one plus the batch rows (a rolling summary, an
+# open-version table, a running carry) to <root>/batch=<id>.  A snapshot
+# counts only once Spark's job-commit marker (_SUCCESS) is in it: a write
+# in flight or a crash leftover is invisible to every read, prior lookup
+# and prune.  Batch b reads only its prior (the newest committed id below
+# b) and overwrites its own dir, so a crash-replay of b regenerates an
+# identical snapshot.
+# ---------------------------------------------------------------------------
+
+
+def snapshot_ids(root: str) -> list[int]:
+    """Committed snapshot ids under ``root``, sorted numerically."""
+    return numbered_ids(root, require_marker="_SUCCESS")
+
+
+def snapshot_path(root: str, batch_id: int) -> str:
+    return os.path.join(root, f"batch={batch_id}")
+
+
+def newest_snapshot(root: str, below: int | None = None) -> str | None:
+    """Path of the newest committed snapshot — with ``below``, the newest
+    below that batch id (the batch's prior) — or None."""
+    ids = [i for i in snapshot_ids(root) if below is None or i < below]
+    return snapshot_path(root, ids[-1]) if ids else None
+
+
+def prune_snapshots(root: str, keep: int) -> None:
+    """Delete all but the newest ``keep`` committed snapshots (best
+    effort: a crash mid-sweep leaves extra dirs for the next one)."""
+    for i in snapshot_ids(root)[:-keep]:
+        shutil.rmtree(snapshot_path(root, i), ignore_errors=True)
+
+
+def write_snapshot(df, root: str, batch_id: int, keep: int | None = 3) -> None:
+    """Write ``df`` as snapshot ``batch_id`` (overwrite: a replay rewrites
+    it), then keep the newest ``keep`` committed snapshots; ``keep=None``
+    leaves pruning to the maintainer's compaction hook.  ``df`` must not
+    read a snapshot the prune can delete — materialize it first."""
+    df.write.mode("overwrite").parquet(snapshot_path(root, batch_id))
+    if keep is not None:
+        prune_snapshots(root, keep)
 
 
 # ---------------------------------------------------------------------------

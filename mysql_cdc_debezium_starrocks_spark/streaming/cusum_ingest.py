@@ -16,10 +16,11 @@ event_type.  Per micro-batch:
    carry, the running min folds with the carried min, and the score pops
    out row-by-row — identical to the batch closed form over the
    concatenated series (pytest-pinned equality);
-3. scores append under ``scores/batch=<id>``, the two-integer carry under
-   ``carry/batch=<id>`` — batch-keyed overwrites reading only state
-   `` < batch_id``, so crash-replay regenerates byte-identical output
-   (the rollup/mix/dedup idempotency scheme).
+3. scores append under ``scores/batch=<id>``, the two-integer carry as a
+   ``_state`` snapshot chain under ``carry/batch=<id>`` — batch-keyed
+   overwrites reading only state `` < batch_id``, so crash-replay
+   regenerates byte-identical output (the rollup/mix/dedup idempotency
+   scheme).
 
 Input contract: rows are FINALIZED hourly rollups (downstream of a
 watermarked window agg — each (event_type, hr) arrives exactly once, in
@@ -42,7 +43,6 @@ training-data pipeline runs on ingest volumes.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,9 +52,12 @@ from ..operators.stats import CUSUM_K_MILLI
 from ._state import (
     fold_verbatim,
     guard_folded_replay,
-    numbered_ids,
+    newest_snapshot,
+    prune_snapshots,
     read_fold_paths,
+    snapshot_ids,
     start_maintainer,
+    write_snapshot,
 )
 
 CUSUM_ALARM_MILLI = 5_000  # default decision threshold H = 5 sigma
@@ -84,10 +87,6 @@ def calibrate_cusum(state_dir: str, hourly: DataFrame) -> None:
     mom.write.mode("overwrite").parquet(os.path.join(state_dir, "calib"))
 
 
-def _carry_ids(state_dir: str) -> list[int]:
-    return numbered_ids(os.path.join(state_dir, "carry"))
-
-
 def ingest_cusum_batch(
     spark: SparkSession,
     state_dir: str,
@@ -104,22 +103,20 @@ def ingest_cusum_batch(
     and corrupt every subsequent score."""
     guard_folded_replay(os.path.join(state_dir, "scores"), batch_id)
     calib = spark.read.parquet(os.path.join(state_dir, "calib"))
-    ids = _carry_ids(state_dir)
-    prev = [i for i in ids if i < batch_id]
+    carry_root = os.path.join(state_dir, "carry")
+    prior = newest_snapshot(carry_root, below=batch_id)
     # batch 0 has NO numbered prior by construction — its true prior is the
     # zero calibration carry, so a batch-0 replay (carry/batch=0 written but
     # the checkpoint commit lost) must fall through to it, not be refused;
     # refusing would wedge the stream permanently on its very first retry.
-    if batch_id > 0 and not prev and any(i >= batch_id for i in ids):
+    if batch_id > 0 and prior is None and snapshot_ids(carry_root):
         raise RuntimeError(
             f"{state_dir}: batch {batch_id} is replaying but its prior "
             "carry dir was pruned — compaction ran ahead of the "
             "checkpoint commit horizon (keep_last too small?)"
         )
-    if prev:
-        carry = spark.read.parquet(
-            os.path.join(state_dir, "carry", f"batch={prev[-1]}")
-        )
+    if prior:
+        carry = spark.read.parquet(prior)
     else:
         carry = calib.select(
             "event_type",
@@ -180,9 +177,7 @@ def ingest_cusum_batch(
         )
     )
     try:
-        new_carry.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "carry", f"batch={batch_id}")
-        )
+        write_snapshot(new_carry, carry_root, batch_id, keep=None)
     finally:
         scored.unpersist()
 
@@ -216,11 +211,7 @@ def compact_cusum_ingest(
     future read; worst case a crash mid-sweep leaves extra dirs for the
     next one."""
     fold_verbatim(spark, os.path.join(state_dir, "scores"), keep_last)
-    ids = _carry_ids(state_dir)
-    for i in ids[: -max(keep_last, 2)]:
-        shutil.rmtree(
-            os.path.join(state_dir, "carry", f"batch={i}"), ignore_errors=True
-        )
+    prune_snapshots(os.path.join(state_dir, "carry"), max(keep_last, 2))
 
 
 def start_cusum_ingest(

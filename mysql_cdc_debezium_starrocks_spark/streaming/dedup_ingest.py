@@ -8,13 +8,18 @@ docs' bands against it — cost O(batch x matching buckets), never O(corpus):
 
 1. ``signature_table`` folds the new docs to (doc_id, hs, band, bhash);
 2. candidates = new bands ⋈ (store ∪ new) on (band, bhash) with
-   ``doc_a < doc_b`` — catches new-vs-old AND new-vs-new pairs once;
+   ``doc_id !=``, normalized to ``doc_a < doc_b`` — catches new-vs-old
+   AND new-vs-new pairs once;
 3. exact Jaccard on the shingle-hash sets verifies candidates (same
    sketch-then-verify discipline as the batch path);
 4. verified pairs append under ``pairs/batch=<id>``, new signatures under
    ``sigs/batch=<id>`` — batch-id-keyed overwrites, and the store read
    EXCLUDES batches >= the current id, so a crash-replay regenerates
    byte-identical output (same idempotency scheme as ``rollup``/``scd2``).
+
+Steps 2 and 4, the readers, the retention hook and the start are the
+banded-pair maintainer (:func:`ingest_banded_pairs`) that
+``phash_ingest`` runs too, with its own bucket, payload and verify.
 
 Scale: the store carries each doc's band rows (hs set duplicated per band —
 trades ~BANDS x storage for O(1) candidate lookup with no store-wide
@@ -30,6 +35,7 @@ Reference analog: StarRocks PK-table background compaction
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,14 +44,23 @@ from ..operators.dedup import JACCARD_MIN, signature_table
 from ._state import fold_verbatim, read_fold_paths, start_maintainer
 
 
-def ingest_dedup_batch(
+def ingest_banded_pairs(
     spark: SparkSession,
     state_dir: str,
-    docs: DataFrame,
+    new: DataFrame,
     batch_id: int,
-    jaccard_min: float = JACCARD_MIN,
+    bucket: str,
+    payload: str,
+    verify: Callable[[DataFrame], DataFrame],
 ) -> None:
-    new = signature_table(docs).persist()
+    """One micro-batch of a banded near-dup store: ``new`` holds the
+    batch's band rows (``doc_id``, ``band``, ``bucket``, ``payload``).
+    Probe = committed ``sigs/`` below ``batch_id`` plus ``new``; candidates
+    = probe ⋈ new on (band, bucket) with ``doc_id !=``, each pair once as
+    (``doc_a``, ``doc_b``, ``pa``, ``pb``); ``verify`` maps them to the pair
+    rows, written to ``pairs/batch=<id>`` before the band rows go to
+    ``sigs/batch=<id>``."""
+    new = new.persist()
     try:
         if new.isEmpty():
             return
@@ -60,34 +75,26 @@ def ingest_dedup_batch(
         # Join on != then normalize with least/greatest: a `<` predicate here
         # would silently drop any new-vs-stored pair whose new doc_id sorts
         # BELOW the stored one (doc_ids are not guaranteed monotonic across
-        # batches).  Jaccard is symmetric, so orientation of (sha, shb) does
-        # not matter; dropDuplicates on the normalized key keeps each pair
-        # exactly once even when both new-vs-new orientations match.
+        # batches).  Both verifies (Jaccard, Hamming) are symmetric, so the
+        # orientation of (pa, pb) does not matter; dropDuplicates on the
+        # normalized key keeps each pair exactly once even when both
+        # new-vs-new orientations match.
         cand = (
             a.join(
                 b,
                 (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bhash") == F.col("b.bhash"))
+                & (F.col(f"a.{bucket}") == F.col(f"b.{bucket}"))
                 & (F.col("a.doc_id") != F.col("b.doc_id")),
             )
             .select(
                 F.least("a.doc_id", "b.doc_id").alias("doc_a"),
                 F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-                F.col("a.hs").alias("sha"),
-                F.col("b.hs").alias("shb"),
+                F.col(f"a.{payload}").alias("pa"),
+                F.col(f"b.{payload}").alias("pb"),
             )
             .dropDuplicates(["doc_a", "doc_b"])
         )
-        jac = F.size(F.array_intersect("sha", "shb")) / F.size(
-            F.array_union("sha", "shb")
-        )
-        pairs = cand.select(
-            "doc_a",
-            "doc_b",
-            F.round(jac, 4).cast("decimal(7,4)").alias("jaccard"),
-        ).filter(F.col("jaccard") >= jaccard_min)
-
-        pairs.write.mode("overwrite").parquet(
+        verify(cand).write.mode("overwrite").parquet(
             os.path.join(state_dir, "pairs", f"batch={batch_id}")
         )
         new.write.mode("overwrite").parquet(
@@ -95,6 +102,28 @@ def ingest_dedup_batch(
         )
     finally:
         new.unpersist()
+
+
+def ingest_dedup_batch(
+    spark: SparkSession,
+    state_dir: str,
+    docs: DataFrame,
+    batch_id: int,
+    jaccard_min: float = JACCARD_MIN,
+) -> None:
+    def verify(cand: DataFrame) -> DataFrame:
+        jac = F.size(F.array_intersect("pa", "pb")) / F.size(
+            F.array_union("pa", "pb")
+        )
+        return cand.select(
+            "doc_a",
+            "doc_b",
+            F.round(jac, 4).cast("decimal(7,4)").alias("jaccard"),
+        ).filter(F.col("jaccard") >= jaccard_min)
+
+    ingest_banded_pairs(
+        spark, state_dir, signature_table(docs), batch_id, "bhash", "hs", verify
+    )
 
 
 def dup_pairs(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -119,6 +148,28 @@ def compact_dedup_ingest(
     fold_verbatim(spark, os.path.join(state_dir, "pairs"), keep_last)
 
 
+def start_banded_ingest(
+    ingest: Callable,
+    source: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    trigger_seconds: int | None,
+    compact_every: int | None,
+    keep_last: int,
+):
+    """Start ``ingest(spark, state_dir, df, batch_id)`` as a banded-pair
+    maintainer, folding with :func:`compact_dedup_ingest` every
+    ``compact_every`` batches."""
+    return start_maintainer(
+        source,
+        lambda df, bid: ingest(df.sparkSession, state_dir, df, bid),
+        checkpoint_dir,
+        trigger_seconds,
+        compact=lambda s: compact_dedup_ingest(s, state_dir, keep_last),
+        compact_every=compact_every,
+    )
+
+
 def start_dedup_ingest(
     spark: SparkSession,
     source: DataFrame,
@@ -132,11 +183,7 @@ def start_dedup_ingest(
 
     ``compact_every``: fold contribution dirs every Nth batch
     (:func:`compact_dedup_ingest`) — bounded state on a long-lived stream."""
-    return start_maintainer(
-        source,
-        lambda df, bid: ingest_dedup_batch(df.sparkSession, state_dir, df, bid),
-        checkpoint_dir,
-        trigger_seconds,
-        compact=lambda s: compact_dedup_ingest(s, state_dir, keep_last),
-        compact_every=compact_every,
+    return start_banded_ingest(
+        ingest_dedup_batch, source, state_dir, checkpoint_dir, trigger_seconds,
+        compact_every, keep_last,
     )

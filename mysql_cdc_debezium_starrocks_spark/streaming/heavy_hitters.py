@@ -27,28 +27,20 @@ Per micro-batch (the distributed merge):
 State layout follows scd2.py's copy-on-write snapshots: ``summary/batch=<b>``
 is derived deterministically from ``summary/batch=<prev>`` plus the batch
 rows, so Structured Streaming replaying batch b after a crash rewrites an
-IDENTICAL snapshot (replay idempotence by construction); old snapshots are
-pruned best-effort after commit.
+IDENTICAL snapshot (replay idempotence by construction); the newest 3
+committed snapshots are kept (``_state.write_snapshot``).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._state import numbered_ids, start_maintainer
+from ._state import newest_snapshot, start_maintainer, write_snapshot
 
-_KEEP_SNAPSHOTS = 3
 _SUMMARY = "summary"
-
-
-def _snapshot_ids(state_dir: str) -> list[int]:
-    return numbered_ids(
-        os.path.join(state_dir, _SUMMARY), require_marker="_SUCCESS"
-    )
 
 
 def merge_heavy_hitters_batch(
@@ -64,11 +56,10 @@ def merge_heavy_hitters_batch(
         F.count(F.lit(1)).alias("cnt")
     )
 
-    prev_ids = [i for i in _snapshot_ids(state_dir) if i < batch_id]
-    if prev_ids:
-        prev = spark.read.parquet(
-            os.path.join(state_dir, _SUMMARY, f"batch={prev_ids[-1]}")
-        )
+    root = os.path.join(state_dir, _SUMMARY)
+    prior = newest_snapshot(root, below=batch_id)
+    if prior:
+        prev = spark.read.parquet(prior)
         prev_summary = prev.filter(F.col("key").isNotNull())
         prev_meta = prev.filter(F.col("key").isNull())  # 1 row: (null, D, N)
         merged = prev_summary.select("key", "cnt").unionByName(counts).groupBy(
@@ -105,13 +96,7 @@ def merge_heavy_hitters_batch(
     # snapshot reads the previous snapshot's files; materialize before the
     # write in case pruning below removes them mid-plan
     out = out.localCheckpoint(eager=True)
-    out.write.mode("overwrite").parquet(
-        os.path.join(state_dir, _SUMMARY, f"batch={batch_id}")
-    )
-    for old in _snapshot_ids(state_dir)[:-_KEEP_SNAPSHOTS]:
-        shutil.rmtree(
-            os.path.join(state_dir, _SUMMARY, f"batch={old}"), ignore_errors=True
-        )
+    write_snapshot(out, root, batch_id)
 
 
 def heavy_hitters_view(spark: SparkSession, state_dir: str, k: int = 10) -> DataFrame:
@@ -121,10 +106,10 @@ def heavy_hitters_view(spark: SparkSession, state_dir: str, k: int = 10) -> Data
     the guaranteed upper bound; any key with true count > deducted is
     guaranteed to appear in the summary.
     """
-    ids = _snapshot_ids(state_dir)
-    if not ids:
+    latest = newest_snapshot(os.path.join(state_dir, _SUMMARY))
+    if latest is None:
         raise FileNotFoundError(f"no heavy-hitter state under {state_dir}")
-    s = spark.read.parquet(os.path.join(state_dir, _SUMMARY, f"batch={ids[-1]}"))
+    s = spark.read.parquet(latest)
     return (
         s.filter(F.col("key").isNotNull())
         .select(

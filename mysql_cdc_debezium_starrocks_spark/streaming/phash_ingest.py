@@ -8,14 +8,12 @@ key) and, per micro-batch:
 
 1. decode + hash ONLY the new images (``phash_of`` — the same real
    PPM-decode kernel the batch path uses, Arrow-batched);
-2. candidates = new bands ⋈ (store ∪ new) on (band, key) with
-   least/greatest pair normalization — new-vs-old AND new-vs-new once
-   (doc_ids are not monotonic across batches, so `<` would drop pairs);
-3. verify TRUE Hamming distance <= PHASH_MAX_HAMMING on candidates only;
-4. verified pairs append under ``pairs/batch=<id>``, new band rows under
-   ``sigs/batch=<id>`` — batch-id-keyed overwrites with the store read
-   excluding batches >= the current id, so crash-replay regenerates
-   byte-identical output (the rollup/scd2/dedup_ingest idempotency scheme).
+2. candidates = new bands ⋈ (store ∪ new) on (band, key), verified by
+   TRUE Hamming distance <= PHASH_MAX_HAMMING, pairs and band rows
+   written per batch — ``dedup_ingest``'s banded-pair maintainer
+   (``ingest_banded_pairs``) with ``key`` as the bucket, ``phash_bits``
+   as the payload and Hamming as the verify; its readers, retention hook
+   and start are shared the same way.
 
 Scale: the store carries PHASH_BANDS 16-char rows per image (~100 B) —
 never pixels; candidate volume is band-bucket bounded exactly like the
@@ -26,13 +24,16 @@ O(keep_last) on a long-lived stream.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import PHASH_MAX_HAMMING, phash_bands, phash_of
-from ._state import fold_verbatim, read_fold_paths, start_maintainer
+from .dedup_ingest import (
+    compact_dedup_ingest,
+    dup_pairs,
+    ingest_banded_pairs,
+    start_banded_ingest,
+)
 
 
 def ingest_phash_batch(
@@ -42,31 +43,7 @@ def ingest_phash_batch(
     batch_id: int,
     max_hamming: int = PHASH_MAX_HAMMING,
 ) -> None:
-    new = phash_bands(phash_of(blobs).select("doc_id", "phash_bits")).persist()
-    try:
-        if new.isEmpty():
-            return
-        prev = read_fold_paths(os.path.join(state_dir, "sigs"), before=batch_id)
-        probe = new
-        if prev:
-            store = spark.read.parquet(*prev)
-            probe = store.unionByName(new)
-        a, b = probe.alias("a"), new.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.doc_id") != F.col("b.doc_id")),
-            )
-            .select(
-                F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-                F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-                F.least("a.phash_bits", "b.phash_bits").alias("pa"),
-                F.greatest("a.phash_bits", "b.phash_bits").alias("pb"),
-            )
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
+    def verify(cand: DataFrame) -> DataFrame:
         hamming = F.size(
             F.filter(
                 F.zip_with(
@@ -77,38 +54,27 @@ def ingest_phash_batch(
                 lambda d: d,
             )
         )
-        pairs = cand.select(
+        return cand.select(
             "doc_a", "doc_b", hamming.cast("int").alias("hamming")
         ).filter(F.col("hamming") <= max_hamming)
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "pairs", f"batch={batch_id}")
-        )
-        new.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "sigs", f"batch={batch_id}")
-        )
-    finally:
-        new.unpersist()
+
+    new = phash_bands(phash_of(blobs).select("doc_id", "phash_bits"))
+    ingest_banded_pairs(
+        spark, state_dir, new, batch_id, "key", "phash_bits", verify
+    )
 
 
 def dup_image_pairs(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """All near-dup image pairs found so far (each pair exactly once)."""
-    paths = read_fold_paths(os.path.join(state_dir, "pairs"))
-    if not paths:
-        return None
-    return spark.read.parquet(*paths)
+    return dup_pairs(spark, state_dir)
 
 
 def compact_phash_ingest(
     spark: SparkSession, state_dir: str, keep_last: int = 2
 ) -> None:
-    """Retention hook (the ``compact_agg_mv`` analog): fold old per-batch
-    band-store and pair dirs into committed baselines — bounded dir counts
-    and O(1) file listings on a long-lived stream.  Rows copy verbatim
-    (band rows and verified pairs need no re-aggregation); the ingest read
-    path sees baseline + live dirs, so folded state stays byte-equivalent.
-    Crash-mid-compaction is invisible (committed-marker-last scheme)."""
-    fold_verbatim(spark, os.path.join(state_dir, "sigs"), keep_last)
-    fold_verbatim(spark, os.path.join(state_dir, "pairs"), keep_last)
+    """Retention hook: fold old per-batch band-store and pair dirs into
+    committed baselines (:func:`~.dedup_ingest.compact_dedup_ingest`)."""
+    compact_dedup_ingest(spark, state_dir, keep_last)
 
 
 def start_phash_ingest(
@@ -124,11 +90,7 @@ def start_phash_ingest(
 
     ``compact_every``: fold contribution dirs every Nth batch
     (:func:`compact_phash_ingest`) — bounded state on a long-lived stream."""
-    return start_maintainer(
-        source,
-        lambda df, bid: ingest_phash_batch(df.sparkSession, state_dir, df, bid),
-        checkpoint_dir,
-        trigger_seconds,
-        compact=lambda s: compact_phash_ingest(s, state_dir, keep_last),
-        compact_every=compact_every,
+    return start_banded_ingest(
+        ingest_phash_batch, source, state_dir, checkpoint_dir, trigger_seconds,
+        compact_every, keep_last,
     )

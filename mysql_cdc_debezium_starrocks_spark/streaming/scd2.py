@@ -15,7 +15,8 @@ State layout (under ``state_dir``):
   snapshot and writes its own, so replaying batch <id> re-reads snapshot
   <id-1> and regenerates identical output — idempotent under Structured
   Streaming's crash-replay, the same batch-id-keyed-write trick as
-  ``rollup.merge_rollup_batch``.  Old snapshots are pruned (keep last 3).
+  ``rollup.merge_rollup_batch``.  A snapshot counts once committed
+  (``_SUCCESS``); the newest 3 are kept (``_state.write_snapshot``).
 
 Per batch: close the previously-open version of every touched key at the
 batch's first event for that key, close intra-batch versions with lead(),
@@ -31,8 +32,6 @@ from __future__ import annotations
 
 import os
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -40,13 +39,7 @@ from pyspark.sql.window import Window
 
 from ..cdc.apply import latest_by_key, not_deleted, parse_envelope
 from ..cdc.schemas import ORDER_EVENT_ENVELOPE
-from ._state import numbered_ids, start_maintainer
-
-_KEEP_SNAPSHOTS = 3
-
-
-def _snapshot_ids(state_dir: str) -> list[int]:
-    return numbered_ids(os.path.join(state_dir, "open"))
+from ._state import newest_snapshot, start_maintainer, write_snapshot
 
 
 def merge_scd2_batch(
@@ -67,14 +60,9 @@ def merge_scd2_batch(
     try:
         if parsed.isEmpty():
             return
-        prev_ids = [i for i in _snapshot_ids(state_dir) if i < batch_id]
-        prev_open = (
-            spark.read.parquet(
-                os.path.join(state_dir, "open", f"batch={prev_ids[-1]}")
-            )
-            if prev_ids
-            else None
-        )
+        open_root = os.path.join(state_dir, "open")
+        prior = newest_snapshot(open_root, below=batch_id)
+        prev_open = spark.read.parquet(prior) if prior else None
 
         w = Window.partitionBy(key).orderBy(seq_col)
         b = parsed.withColumn("valid_from_seq", F.col(seq_col)).withColumn(
@@ -116,14 +104,7 @@ def merge_scd2_batch(
         closed.write.mode("overwrite").parquet(
             os.path.join(state_dir, "closed", f"batch={batch_id}")
         )
-        open_rows.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "open", f"batch={batch_id}")
-        )
-        for old in _snapshot_ids(state_dir)[:-_KEEP_SNAPSHOTS]:
-            shutil.rmtree(
-                os.path.join(state_dir, "open", f"batch={old}"),
-                ignore_errors=True,
-            )
+        write_snapshot(open_rows, open_root, batch_id)
     finally:
         parsed.unpersist()
 
@@ -133,12 +114,10 @@ def scd2_view(
 ) -> DataFrame | None:
     """Full temporal history: all closed versions plus the latest open
     snapshot, with read-time version numbers and the current-row flag."""
-    ids = _snapshot_ids(state_dir)
-    if not ids:
+    latest = newest_snapshot(os.path.join(state_dir, "open"))
+    if latest is None:
         return None
-    opens = spark.read.parquet(
-        os.path.join(state_dir, "open", f"batch={ids[-1]}")
-    )
+    opens = spark.read.parquet(latest)
     closed_root = os.path.join(state_dir, "closed")
     hist = opens
     if os.path.isdir(closed_root):

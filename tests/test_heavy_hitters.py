@@ -101,11 +101,11 @@ def test_state_is_bounded(spark, tmp_path):
         merge_heavy_hitters_batch(
             spark, state, _skewed_batch(spark, i, rows=2000), i, m=M
         )
-    from mysql_cdc_debezium_starrocks_spark.streaming.heavy_hitters import (
-        _snapshot_ids,
+    from mysql_cdc_debezium_starrocks_spark.streaming._state import (
+        snapshot_ids,
     )
 
-    ids = _snapshot_ids(state)
+    ids = snapshot_ids(os.path.join(state, "summary"))
     assert len(ids) <= 3  # snapshot pruning
     latest = spark.read.parquet(
         os.path.join(state, "summary", f"batch={ids[-1]}")

@@ -3,8 +3,9 @@
 The oracle gate (tools/parity.py) already hash-checks emb_covariance,
 ts_anomaly_zscore, hist_quantile_bins, text_repetition and
 text_decontaminate; these tests cover the non-SQL-expressible PCA path
-against numpy ground truth plus structural invariants and the integer
-kernels' zero-matrix guard.
+against numpy ground truth plus structural invariants, the integer
+kernels' zero-matrix guard and a python replay of the embedding outlier
+z-scores.
 """
 
 from __future__ import annotations
@@ -14,10 +15,12 @@ import math
 import numpy as np
 import pytest
 
+from mysql_cdc_debezium_starrocks_spark.catalog import load
 from mysql_cdc_debezium_starrocks_spark.operators.linalg import (
     _int_power_iteration,
     _l2_quantize,
 )
+from tests._replay import _round_half_up, _tdiv
 from tests.conftest import SF_SMOKE
 
 
@@ -226,3 +229,42 @@ def test_power_iteration_rejects_zero_matrix():
     v = _int_power_iteration({(i, i): 1_000_000 for i in range(4)}, 4, 5)
     assert any(x != 0 for x in v)
     assert _l2_quantize(v)
+
+
+def test_emb_outlier_zscore_replay(spark):
+    """Integer-moment replay: per-dim mean/sigma and worst-dimension
+    milli-sigma scores, top-k order included."""
+    from mysql_cdc_debezium_starrocks_spark.operators.linalg import (
+        OUTLIER_TOPK,
+        emb_outlier_zscore,
+    )
+
+    rows = load(spark, SF_SMOKE, "embeddings").collect()
+    xq = {
+        r.vec_id: [int(_round_half_up(x * 1e6)) for x in r.embedding]
+        for r in rows
+    }
+    d = len(next(iter(xq.values())))
+    n = len(xq)
+    stats = []
+    for k in range(d):
+        col = [v[k] for v in xq.values()]
+        sx, sxx = sum(col), sum(c * c for c in col)
+        mean = _tdiv(sx, n)
+        var = _tdiv(sxx, n) - mean * mean
+        stats.append((mean, math.floor(math.sqrt(var))))
+    scores = {
+        vid: max(
+            (abs(v[k] - stats[k][0]) * 1000) // max(stats[k][1], 1)
+            for k in range(d)
+        )
+        for vid, v in xq.items()
+    }
+    order = sorted(scores, key=lambda v: (-scores[v], v))[:OUTLIER_TOPK]
+    expect = [(v, scores[v]) for v in order]
+
+    got = [
+        (r.vec_id, r.max_z_milli)
+        for r in emb_outlier_zscore(spark, SF_SMOKE).collect()
+    ]
+    assert got == expect

@@ -3,8 +3,9 @@
 Each check encodes a 100 TB survival property: filters reach the parquet
 scan, projections prune the read schema, dimension joins broadcast, big aggs
 get map-side partials, nothing falls back to a cartesian product.  The
-last test sweeps these properties over epoch repeats, CUSUM, the cosine
-pair histogram and the integer PCA.
+last two tests sweep these properties over epoch repeats, CUSUM, the
+cosine pair histogram and the integer PCA, and over the sampling, KL,
+DSIR, BM25, HLL, outlier and sweep operators.
 """
 
 from pyspark.sql import functions as F
@@ -602,3 +603,42 @@ def test_upsample_cusum_cosine_pca_plan_shapes(spark):
     p = plan_of(emb_pca_project(spark, SF_SMOKE))
     assert shuffle_count(p) <= 1
     assert "mapinpandas" not in p.lower()
+
+
+def test_new_ops_plan_shapes(spark):
+    """100 TB survival properties of the round's remaining new operators:
+    map-side partial aggregation everywhere, no cartesian products, and
+    the scoring joins broadcast their bounded side."""
+    from mysql_cdc_debezium_starrocks_spark.operators.dedup import (
+        eval_minhash_threshold_sweep,
+    )
+    from mysql_cdc_debezium_starrocks_spark.operators.linalg import (
+        emb_outlier_zscore,
+    )
+    from mysql_cdc_debezium_starrocks_spark.operators.sketches import (
+        sketch_hll_portable,
+    )
+    from mysql_cdc_debezium_starrocks_spark.operators.stats import (
+        mix_dsir_weights,
+        stats_kl_by_source,
+    )
+    from mysql_cdc_debezium_starrocks_spark.operators.text import (
+        eval_bpe_compression_sweep,
+        text_ngram_coverage,
+    )
+    from mysql_cdc_debezium_starrocks_spark.plans import broadcasts
+
+    for fn, needs_bcast in (
+        (mix_dsir_weights, True),        # 4096-row log-ratio table
+        (stats_kl_by_source, False),     # vocab-sized join, AQE decides
+        (sketch_hll_portable, True),     # 1-row exact-count leg
+        (text_ngram_coverage, True),     # eval gram set + hit set
+        (emb_outlier_zscore, True),      # d-row moment table
+        (eval_minhash_threshold_sweep, True),  # |taus|-row grid
+        (eval_bpe_compression_sweep, True),    # 0-or-1-row best pair
+    ):
+        p = plan_of(fn(spark, SF_SMOKE))
+        assert not has_cartesian(p), fn.__name__
+        assert partial_aggregates(p), fn.__name__
+        if needs_bcast:
+            assert broadcasts(p), fn.__name__

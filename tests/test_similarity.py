@@ -1,8 +1,8 @@
 """Invariants of the vector-search operators (operators/similarity.py)
 beyond value-level parity (tools/parity.py): product-quantization ADC
 distances, IVF-PQ search and exact re-rank, MRR/balance/silhouette gates,
-diversity pruning, and the cosine pair histogram with its corpus-scaled
-bucket rule.
+diversity pruning, the cosine pair histogram with its corpus-scaled
+bucket rule, and the ANN-recall and dimension-budget recall gates.
 """
 
 import math
@@ -257,3 +257,54 @@ def test_cph_bucket_rule_matches_oracle_sql():
             f"// {CPH_TARGET_BUCKET_ROWS} AS BIGINT))"
         ).fetchone()[0]
         assert got == _cph_buckets(n), n
+
+
+def test_ann_recall_eval_invariants(spark):
+    from mysql_cdc_debezium_starrocks_spark.operators.similarity import (
+        IVF_TOPK,
+        eval_ann_recall,
+    )
+
+    rows = eval_ann_recall(spark, SF_SMOKE).collect()
+    assert {r.index_name for r in rows} == {"ivf", "lsh", "ivfpq"}
+    for r in rows:
+        assert r.n_truth == IVF_TOPK
+        assert 0 <= r.hits <= min(r.n_pred, r.n_truth)
+        assert 0 <= r.recall_ppm <= 1_000_000
+        assert r.recall_ppm == (r.hits * 1_000_000) // r.n_truth
+    # the pruned indexes must actually find something on the fixture —
+    # a 0-recall index would mean the cell/bucket params are broken
+    assert sum(r.hits for r in rows if r.index_name == "ivf") > 0
+    # IVF-PQ probes the same cells as IVF but scores with quantized ADC
+    # distances — it may lose recall to quantization but the floor is the
+    # same gate IVF carries: the composed index must find real neighbors
+    assert sum(r.hits for r in rows if r.index_name == "ivfpq") > 0
+    # and its candidate pool equals IVF's (same cells), so n_pred matches
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r.query_id, {})[r.index_name] = r.n_pred
+    for q, m in by_q.items():
+        if "ivf" in m and "ivfpq" in m:
+            assert m["ivfpq"] == m["ivf"], (q, m)
+
+
+def test_emb_dim_budget_recall_invariants(spark):
+    """The full-dim budget must recover exactly the brute-force truth
+    (recall 1e6 — its prefix IS the full vector), every budget predicts
+    exactly k per query, and recall is a valid ppm."""
+    from mysql_cdc_debezium_starrocks_spark.operators.similarity import (
+        DIM,
+        DIM_BUDGETS,
+        IVF_TOPK,
+        emb_dim_budget_recall,
+    )
+
+    rows = {r.dim_budget: r for r in emb_dim_budget_recall(spark, SF_SMOKE).collect()}
+    assert sorted(rows) == sorted(DIM_BUDGETS)
+    n_queries = {r.n_queries for r in rows.values()}
+    assert len(n_queries) == 1 and n_queries.pop() > 0
+    for d, r in rows.items():
+        assert r.n_pred == r.n_queries * IVF_TOPK
+        assert 0 <= r.hits <= r.n_pred
+        assert 0 <= r.recall_ppm <= 1_000_000
+    assert rows[DIM].recall_ppm == 1_000_000  # self-check budget

@@ -3,13 +3,14 @@
 The parity gate proves Spark == DuckDB on the deterministic sketches; these
 tests assert the *statistical* guarantees each sketch carries, which the
 hash-match alone can't express (and, for HLL++, can't check at all since the
-estimate is engine-specific).
+estimate is engine-specific); the portable HLL gets a python replay.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from mysql_cdc_debezium_starrocks_spark.catalog import load
 from mysql_cdc_debezium_starrocks_spark.operators.sketches import (
     THETA_K,
     sketch_approx_distinct,
@@ -18,6 +19,7 @@ from mysql_cdc_debezium_starrocks_spark.operators.sketches import (
     sketch_kmv_distinct,
     sketch_theta_intersect,
 )
+from tests._replay import _phash32, _qln, _tdiv
 from tests.conftest import SF_SMOKE
 
 
@@ -195,3 +197,58 @@ def test_scd2_intervals_partition_history(spark):
     )
     assert chained == 0
     hist.unpersist()
+
+
+def test_sketch_hll_portable_replay_and_merge(spark):
+    """Exact register replay, the HLL error bound, and the mergeability
+    contract: registers built from any partition of the data max-combine
+    to the whole-corpus sketch."""
+    from mysql_cdc_debezium_starrocks_spark.operators.sketches import (
+        HLL_M,
+        HLL_P,
+        _HLL_REM_BITS,
+        sketch_hll_portable,
+    )
+
+    orders = load(spark, SF_SMOKE, "orders").select("o_orderkey").collect()
+    keys = [r.o_orderkey for r in orders]
+
+    def regs_of(ks):
+        regs = {}
+        for k in ks:
+            h = _phash32(str(k), "hll")
+            idx, rem = h >> _HLL_REM_BITS, h & ((1 << _HLL_REM_BITS) - 1)
+            rho = _HLL_REM_BITS + 1 - rem.bit_length()
+            regs[idx] = max(regs.get(idx, 0), rho)
+        return regs
+
+    whole = regs_of(keys)
+    # mergeability: split by key parity, max-combine == whole
+    a, b = regs_of([k for k in keys if k % 2]), regs_of(
+        [k for k in keys if not k % 2]
+    )
+    merged = dict(a)
+    for i, r in b.items():
+        merged[i] = max(merged.get(i, 0), r)
+    assert merged == whole
+
+    # replay the estimator arithmetic
+    s = _HLL_REM_BITS + 1
+    sum_scaled = sum(1 << (s - r) for r in whole.values()) + (
+        HLL_M - len(whole)
+    ) * (1 << s)
+    zeros = HLL_M - len(whole)
+    n1 = 720541 * HLL_M * HLL_M * (1 << s)
+    est_raw = (n1 // sum_scaled) // 1_000_000
+    if est_raw <= (5 * HLL_M) // 2 and zeros > 0:
+        est = (HLL_M * (_qln(HLL_M) - _qln(zeros))) // 1_000_000
+    else:
+        est = est_raw
+    n_exact = len(set(keys))
+    err = _tdiv((est - n_exact) * 1_000_000, n_exact)
+
+    row = sketch_hll_portable(spark, SF_SMOKE).collect()[0]
+    assert (row.m, row.n_exact, row.n_zero_regs) == (HLL_M, n_exact, zeros)
+    assert (row.est_raw, row.est_hll, row.err_ppm) == (est_raw, est, err)
+    # 1.04/sqrt(m) ~ 3.25% std error; 4 sigma bound
+    assert abs(row.err_ppm) < 130_000

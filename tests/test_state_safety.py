@@ -3,7 +3,8 @@ lookups, bucket-layout metadata enforcement, gc-swap crash repair,
 partition-pruned join-MV dim propagation, z-order wide-range scaling,
 deterministic shard export; the pre-metadata guards (materializer state
 and theta sketches refuse to guess a layout, the secondary index infers
-its modulus); and NaN-safe agg-MV histogram binning.
+its modulus); NaN-safe agg-MV histogram binning; and the SCD2 history
+reader skipping an uncommitted open snapshot.
 """
 
 import json
@@ -309,3 +310,27 @@ def test_hist_nan_counts_as_null(spark, tmp_path):
     out = read_agg_mv(spark, state, ["g"], spec).collect()[0]
     assert out.q.n == 10  # NaN and NULL both uncounted
     assert out.q.p50 == pytest.approx(105.0)  # bin [100,110) midpoint
+
+
+def test_scd2_view_skips_uncommitted_open_snapshot(spark, tmp_path):
+    """An ``open/batch=<id>`` dir still being written (no ``_SUCCESS``)
+    is not a snapshot: the history reader serves the newest committed one
+    instead of trying to read the half-written dir."""
+    from mysql_cdc_debezium_starrocks_spark.streaming.scd2 import (
+        merge_scd2_batch,
+        scd2_view,
+    )
+
+    state = str(tmp_path / "scd2")
+    merge_scd2_batch(spark, state, _batch(spark, [
+        (1, {"payload": ROW1}),
+        (2, {"payload": {"order_key": 2, "cust_key": 12, "status": "b",
+                         "total_price": "2.00", "__deleted": "false"}}),
+    ]), 0)
+    merge_scd2_batch(spark, state, _batch(spark, [
+        (3, {"payload": dict(ROW1, status="a2")}),
+    ]), 1)
+    committed = sorted(map(tuple, scd2_view(spark, state).collect()))
+    os.makedirs(os.path.join(state, "open", "batch=2", "_temporary", "0"))
+    assert sorted(map(tuple, scd2_view(spark, state).collect())) == committed
+    assert len(committed) == 3  # key 1: closed a + open a2; key 2: open b

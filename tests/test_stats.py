@@ -1,8 +1,10 @@
 """Invariants of the statistics and sampling operators (operators/stats.py)
 beyond value-level parity (tools/parity.py): basket pairs, vocabulary
-coverage, source Gini, column profiles, bootstrap replicas, token budgets,
-the rolling z-score's saturation, and exact python replays of the integer
-kernels (epoch repeats, CUSUM).
+coverage and growth, source Gini, column profiles, bootstrap replicas,
+token budgets, the rolling z-score's saturation, PMI co-occurrence, KS
+drift, temperature and weighted-priority sampling, mixture convergence,
+and exact python replays of the integer kernels (epoch repeats, CUSUM,
+doc-length profiles, KL by source, DSIR weights).
 """
 
 import datetime
@@ -10,14 +12,24 @@ import math
 from collections import defaultdict
 from decimal import Decimal
 
+from pyspark.sql import functions as F
+
 from mysql_cdc_debezium_starrocks_spark.catalog import load
 from mysql_cdc_debezium_starrocks_spark.operators.stats import (
+    PMI_MIN_SUP,
     basket_part_pairs,
     stats_column_profile,
+    stats_ks_by_source,
+    text_pmi_cooccur,
     ts_anomaly_zscore,
 )
+from mysql_cdc_debezium_starrocks_spark.plans import (
+    has_cartesian,
+    plan_of,
+    shuffle_count,
+)
 
-from ._replay import _phash32, _tdiv
+from ._replay import _phash32, _qln, _tdiv, _words
 from .conftest import SF_SMOKE
 
 
@@ -294,3 +306,285 @@ def test_near_constant_window_saturates_not_errors(spark, tmp_path):
     # the outlier against the near-constant window flags at the exact
     # saturation ceiling instead of overflowing the decimal contract
     assert out[20] == Decimal("10000000.0000")
+
+
+def test_pmi_pairs_canonical_and_supported(spark):
+    rows = text_pmi_cooccur(spark, SF_SMOKE).collect()
+    assert rows, "fixture corpus must surface co-occurring pairs"
+    for r in rows:
+        # canonical unordered pair: alphabetical, never a self-pair
+        assert r.word_a < r.word_b
+        assert r.n_ab >= PMI_MIN_SUP
+        # a pair can't co-occur more often than either word occurs
+        assert r.n_ab <= r.n_a and r.n_ab <= r.n_b
+        # score is exactly the integer-scaled PMI kernel
+        assert r.score_ppb == (r.n_ab * 1_000_000_000) // (r.n_a * r.n_b)
+    # ranking is (score desc, pair asc) — deterministic under ties
+    key = [(-r.score_ppb, r.word_a, r.word_b) for r in rows]
+    assert key == sorted(key)
+
+
+def test_pmi_unigram_counts_match_corpus(spark):
+    """The unigram counts joined onto pairs must be the true corpus counts
+    (guards the persisted-uni plumbing)."""
+    rows = text_pmi_cooccur(spark, SF_SMOKE).collect()
+    some = {r.word_a: r.n_a for r in rows[:5]}
+    d = load(spark, SF_SMOKE, "documents")
+    w = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda x: F.length(x) > 0)
+    truth = dict(
+        d.select(F.explode(w).alias("word"))
+        .filter(F.col("word").isin(*some))
+        .groupBy("word")
+        .count()
+        .collect()
+    )
+    assert {k: truth[k] for k in some} == some
+
+
+def test_ks_drift_bounds_and_totals(spark):
+    rows = stats_ks_by_source(spark, SF_SMOKE).collect()
+    d = load(spark, SF_SMOKE, "documents")
+    n_docs = d.count()
+    n_sources = d.select("source").distinct().count()
+    assert len(rows) == n_sources
+    for r in rows:
+        # KS statistic is a probability-scale sup-norm
+        assert 0 <= r.ks_ppm <= 1_000_000
+        # each source + its complement partition the corpus
+        assert r.n_s + r.n_rest == n_docs
+        assert r.max_dev <= r.n_s * r.n_rest
+
+
+def test_ks_detects_injected_shift(spark, tmp_path):
+    """A source whose docs are all much longer than the rest must dominate
+    the drift ranking (the property the gate exists to catch)."""
+    d = load(spark, SF_SMOKE, "documents")
+    shifted = d.withColumn(
+        "text",
+        F.when(
+            F.col("source") == "src0",
+            F.concat_ws(" ", F.col("text"), F.repeat(F.lit("pad "), 400)),
+        ).otherwise(F.col("text")),
+    )
+    shifted.write.parquet(str(tmp_path / "documents.parquet"))
+    rows = stats_ks_by_source(spark, str(tmp_path)).collect()
+    by_src = {r.source: r.ks_ppm for r in rows}
+    assert by_src["src0"] == max(by_src.values())
+    assert by_src["src0"] > 900_000  # near-total separation
+
+
+def test_vocab_growth_monotone_and_bounded(spark):
+    from mysql_cdc_debezium_starrocks_spark.operators.stats import (
+        VOCAB_CHECKPOINTS,
+        text_vocab_growth,
+    )
+
+    rows = text_vocab_growth(spark, SF_SMOKE).collect()
+    assert len(rows) == VOCAB_CHECKPOINTS
+    prev_t = prev_v = 0
+    for r in rows:
+        # both cumulatives are monotone, vocab never outgrows tokens
+        assert r.cum_tokens >= prev_t and r.cum_vocab >= prev_v
+        assert r.cum_vocab <= r.cum_tokens
+        prev_t, prev_v = r.cum_tokens, r.cum_vocab
+    assert rows[-1].cum_vocab > 0
+
+
+def test_temperature_sampling_invariants(spark):
+    """alpha=1/2 reweighting: weights sum to ~1e6, the most up-weighted
+    source samples at exactly 100%, and up-weighting favors small shares."""
+    from mysql_cdc_debezium_starrocks_spark.operators.stats import (
+        mix_temperature_sampling,
+    )
+
+    rows = mix_temperature_sampling(spark, SF_SMOKE).collect()
+    assert len(rows) > 1
+    wsum = sum(r.temp_weight_ppm for r in rows)
+    assert 1_000_000 - len(rows) <= wsum <= 1_000_000
+    assert max(r.sample_rate_ppm for r in rows) == 1_000_000
+    assert all(0 < r.sample_rate_ppm <= 1_000_000 for r in rows)
+    # smallest share must hold the max keep-rate; weights flatter than raw
+    smallest = min(rows, key=lambda r: (r.share_ppm, r.source))
+    assert smallest.sample_rate_ppm == 1_000_000
+    for r in rows:
+        if r.share_ppm > smallest.share_ppm:
+            assert r.temp_weight_ppm < 2 * r.share_ppm  # flattened upward shares
+
+
+def test_eval_mix_convergence_shares_and_targets(spark):
+    """Realized shares sum to ~1e6 over the targeted sources, targets match
+    the published policy, and the deviation column is exact."""
+    from mysql_cdc_debezium_starrocks_spark.operators.stats import (
+        MIX_TARGET_SHARE,
+        eval_mix_convergence,
+    )
+
+    rows = eval_mix_convergence(spark, SF_SMOKE).collect()
+    assert {r.source for r in rows} == set(MIX_TARGET_SHARE)
+    s = sum(r.realized_ppm for r in rows)
+    assert 1_000_000 - len(rows) <= s <= 1_000_000
+    for r in rows:
+        assert r.target_ppm == round(MIX_TARGET_SHARE[r.source] * 1_000_000)
+        assert r.abs_dev_ppm == abs(r.realized_ppm - r.target_ppm)
+
+
+def test_stats_doc_len_profile_python_replay(spark):
+    """Exact per-source length percentiles equal a python replay of the
+    order-statistic definitions (med2 = two middle lengths, p95 = value at
+    rank ceil(0.95 n))."""
+    from mysql_cdc_debezium_starrocks_spark.catalog import load
+    from mysql_cdc_debezium_starrocks_spark.operators.stats import (
+        stats_doc_len_profile,
+    )
+
+    docs = load(spark, SF_SMOKE, "documents").collect()
+    by_src: dict = {}
+    for r in docs:
+        by_src.setdefault(r.source, []).append(
+            len([w for w in r.text.lower().split() if w])
+        )
+    expect = {}
+    for src, toks in by_src.items():
+        s = sorted(toks)
+        n = len(s)
+        med2 = s[(n + 1) // 2 - 1] + s[(n + 2) // 2 - 1]
+        p95 = s[(19 * n + 19) // 20 - 1]
+        expect[src] = (n, sum(s), med2, p95, max(s))
+    got = {
+        r.source: (r.n_docs, r.total_tokens, r.med2, r.p95_tokens, r.max_tokens)
+        for r in stats_doc_len_profile(spark, SF_SMOKE).collect()
+    }
+    assert got == expect and len(got) > 1
+
+
+def test_sample_weighted_priority_replay(spark):
+    """Exact A-ES priority order: cost = (QLN32 - qln(h+1))*1e6 div w over
+    the portable hash, 20 smallest (cost, doc_id)."""
+    from mysql_cdc_debezium_starrocks_spark.operators.stats import (
+        sample_weighted_priority,
+    )
+
+    docs = load(spark, SF_SMOKE, "documents").collect()
+    expect = []
+    for r in docs:
+        h = _phash32(str(r.doc_id), "wrs")
+        cost = _tdiv((22180710 - _qln(h + 1)) * 1_000_000, max(r.n_chars, 1))
+        expect.append((cost, r.doc_id, r.source, r.n_chars))
+    expect.sort()
+    expect = [(d, s, w, c) for c, d, s, w in expect[:20]]
+
+    got = [
+        (r.doc_id, r.source, r.w, r.cost_q)
+        for r in sample_weighted_priority(spark, SF_SMOKE)
+        .orderBy("cost_q", "doc_id")
+        .collect()
+    ]
+    assert got == expect
+    # weighted WOR property: the sample's mean weight must exceed the
+    # corpus mean (big docs are proportionally favored)
+    corpus_mean = sum(r.n_chars for r in docs) / len(docs)
+    sample_mean = sum(w for _, _, w, _ in got) / len(got)
+    assert sample_mean > corpus_mean
+
+
+def test_sample_weighted_priority_plan(spark):
+    """Global top-k must be TakeOrderedAndProject — per-partition heaps,
+    no shuffle, no global sort of the corpus."""
+    from mysql_cdc_debezium_starrocks_spark.operators.stats import (
+        sample_weighted_priority,
+    )
+
+    p = plan_of(sample_weighted_priority(spark, SF_SMOKE))
+    assert "TakeOrderedAndProject" in p
+    assert shuffle_count(p) == 0
+    assert not has_cartesian(p)
+
+
+def test_stats_kl_by_source_replay(spark):
+    """Exact integer replay of the quantized-log KL decomposition."""
+    from mysql_cdc_debezium_starrocks_spark.operators.stats import (
+        stats_kl_by_source,
+    )
+
+    docs = load(spark, SF_SMOKE, "documents").collect()
+    st: dict = {}
+    for r in docs:
+        for t in _words(r.text):
+            st[(r.source, t)] = st.get((r.source, t), 0) + 1
+    ct: dict = {}
+    ts: dict = {}
+    for (s, t), c in st.items():
+        ct[t] = ct.get(t, 0) + c
+        ts[s] = ts.get(s, 0) + c
+    t_all = sum(ct.values())
+    expect = {}
+    for s in ts:
+        acc = sum(
+            c * ((_qln(c) - _qln(ts[s])) - (_qln(ct[t]) - _qln(t_all)))
+            for (s2, t), c in st.items()
+            if s2 == s
+        )
+        expect[s] = (ts[s], _tdiv(acc, ts[s]))
+
+    got = {
+        r.source: (r.n_tokens, r.kl_micro_nats)
+        for r in stats_kl_by_source(spark, SF_SMOKE).collect()
+    }
+    assert got == expect
+    # true KL >= 0; quantization noise is bounded by ~1 micro-nat per term
+    assert all(kl > -100 for _, kl in got.values())
+
+
+def test_mix_dsir_weights_replay(spark):
+    """Exact integer replay of the hashed-bigram importance weights, plus
+    the selection property: the target source scores the highest mean."""
+    from mysql_cdc_debezium_starrocks_spark.operators.stats import (
+        DSIR_BUCKETS,
+        DSIR_TARGET,
+        mix_dsir_weights,
+    )
+
+    docs = load(spark, SF_SMOKE, "documents").collect()
+    doc_grams = []
+    for r in docs:
+        w = _words(r.text)
+        grams = [f"{a} {b}" for a, b in zip(w, w[1:])]
+        doc_grams.append(
+            (r.doc_id, r.source, [
+                _phash32(g, "dsir") % DSIR_BUCKETS for g in grams
+            ])
+        )
+    ct = [0] * DSIR_BUCKETS
+    cr = [0] * DSIR_BUCKETS
+    for _, s, bs in doc_grams:
+        for b in bs:
+            (ct if s == DSIR_TARGET else cr)[b] += 1
+    tt, tr = sum(ct), sum(cr)
+    lr = [
+        (_qln(ct[b] + 1) - _qln(tt + DSIR_BUCKETS))
+        - (_qln(cr[b] + 1) - _qln(tr + DSIR_BUCKETS))
+        for b in range(DSIR_BUCKETS)
+    ]
+    per_source: dict = {}
+    for doc_id, s, bs in doc_grams:
+        if not bs:
+            continue
+        w_micro = sum(lr[b] for b in bs)
+        per_source.setdefault(s, []).append(w_micro)
+    expect = {
+        s: (
+            len(ws),
+            _tdiv(sum(ws), len(ws)),
+            min(ws),
+            max(ws),
+        )
+        for s, ws in per_source.items()
+    }
+
+    got = {
+        r.source: (r.n_docs, r.mean_w_micro, r.min_w_micro, r.max_w_micro)
+        for r in mix_dsir_weights(spark, SF_SMOKE).collect()
+    }
+    assert got == expect
+    best = max(got, key=lambda s: got[s][1])
+    assert best == DSIR_TARGET

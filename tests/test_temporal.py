@@ -1,5 +1,6 @@
 """Invariants of the temporal operators (operators/temporal.py): EWMA
-weights and the sweep-line interval overlap against the plain self-join.
+weights, the sweep-line interval overlap against the plain self-join, and
+a python replay of the nearest as-of join.
 """
 
 from pyspark.sql import functions as F
@@ -73,3 +74,53 @@ def test_interval_overlap_sweep_equals_plain_join(spark):
     }
     assert got == expected
     assert got, "fixture must produce at least one overlapping pair"
+
+
+def test_join_asof_nearest_python_replay(spark):
+    """Full python replay at smoke SF: per non-purchase event, the nearest
+    purchase (backward inclusive, forward strict, tie -> backward, ms
+    deltas) — every output column equal."""
+    from mysql_cdc_debezium_starrocks_spark.catalog import load
+    from mysql_cdc_debezium_starrocks_spark.operators.temporal import (
+        RIGHT_TYPE,
+        join_asof_nearest,
+    )
+
+    ev = load(spark, SF_SMOKE, "events").collect()
+    ms = lambda t: int(t.timestamp() * 1000)  # noqa: E731  (ntz = UTC)
+    purchases = sorted(
+        (r for r in ev if r.event_type == RIGHT_TYPE),
+        key=lambda r: (r.ts, r.event_id),
+    )
+    by_user: dict = {}
+    for r in purchases:
+        by_user.setdefault(r.user_id, []).append(r)
+
+    expect = {}
+    for r in ev:
+        if r.event_type == RIGHT_TYPE:
+            continue
+        cands = by_user.get(r.user_id, [])
+        back = [p for p in cands if p.ts <= r.ts]
+        fwd = [p for p in cands if p.ts > r.ts]
+        b = max(back, key=lambda p: (p.ts, p.event_id)) if back else None
+        f = min(fwd, key=lambda p: (p.ts, p.event_id)) if fwd else None
+        if b is not None and (
+            f is None or ms(r.ts) - ms(b.ts) <= ms(f.ts) - ms(r.ts)
+        ):
+            pick = (b.ts, b.value, "backward", -(ms(r.ts) - ms(b.ts)))
+        elif f is not None:
+            pick = (f.ts, f.value, "forward", ms(f.ts) - ms(r.ts))
+        else:
+            pick = (None, None, None, None)
+        expect[r.event_id] = pick
+
+    got = {
+        r.event_id: (r.purchase_ts, r.purchase_value, r.direction, r.delta_ms)
+        for r in join_asof_nearest(spark, SF_SMOKE).collect()
+    }
+    assert set(got) == set(expect)
+    assert got == expect
+    # both directions actually exercised
+    dirs = {v[2] for v in got.values()}
+    assert "backward" in dirs and "forward" in dirs

@@ -3,7 +3,7 @@
 bracketed by drift probes and normalized by them) — for before/after
 comparisons while optimizing, without a full 209-query run.
 
-Usage: SPARK_GRAFT_CPUS=32 python tools/minibench.py [--warm-all] <query> [query ...]
+Usage: [SPARK_GRAFT_CPUS=N] python tools/minibench.py [--warm-all] <query> [query ...]
 
 ``--warm-all`` first runs EVERY registry query once, building all session
 artifacts as bench.py's warm pass does, so the timed queries run under a

@@ -19,9 +19,7 @@ import duckdb
 REPO = "/root/repo"
 sys.path.insert(0, REPO)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from mysql_cdc_debezium_starrocks_spark.catalog import TABLES  # noqa: E402
 
 
 def canon(v):
