@@ -4,7 +4,8 @@ Replaces the reference's MySQL-binlog -> Debezium -> Kafka -> StarRocks
 Primary-Key-table path (reference: debezium-connector.json:3-25,
 create-starrocks-tables.sh:17-44, docs/ARCHITECTURE.md:83-129) with:
 
-- :mod:`.schemas`   — envelope + table StructTypes (both envelope shapes).
+- :mod:`.schemas`   — the wire contract: column names, ingest schema and
+                      envelope StructTypes (both envelope shapes).
 - :mod:`.generator` — deterministic synthetic CDC event logs derived from the
                       fixture tables (replaces continuous-ingest.sh data gen).
 - :mod:`.apply`     — envelope parse/unwrap + last-write-wins keyed apply with

@@ -28,14 +28,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .schemas import ORDER_EVENT_ENVELOPE
+from .schemas import (
+    DELETED_COL,
+    ORDER_EVENT_ENVELOPE,
+    SEQ_COL,
+    TS_WIRE_FORMAT,
+    VALUE_COL,
+)
 
 
 def parse_envelope(
-    events: DataFrame,
-    envelope: StructType = ORDER_EVENT_ENVELOPE,
-    value_col: str = "value",
-    seq_col: str = "_seq",
+    events: DataFrame, envelope: StructType = ORDER_EVENT_ENVELOPE
 ) -> DataFrame:
     """JSON wire rows -> typed payload columns.
 
@@ -44,16 +47,29 @@ def parse_envelope(
     """
     payload_names = [f.name for f in envelope["payload"].dataType.fields]
     parsed = (
-        events.filter(F.col(value_col).isNotNull())
-        .select(seq_col, F.from_json(F.col(value_col), envelope).alias("e"))
+        events.filter(F.col(VALUE_COL).isNotNull())
+        .select(SEQ_COL, F.from_json(F.col(VALUE_COL), envelope).alias("e"))
     )
-    cols: list[Column] = [F.col(seq_col)]
+    cols: list[Column] = [F.col(SEQ_COL)]
     for n in payload_names:
         cols.append(F.coalesce(F.col(f"e.payload.{n}"), F.col(f"e.{n}")).alias(n))
     return parsed.select(*cols)
 
 
-def latest_by_key(df: DataFrame, key: str, seq_col: str = "_seq") -> DataFrame:
+def encode_envelope(payload: Column, wrap: Column | None = None) -> Column:
+    """Inverse of the parse's unwrap: a payload struct -> wire JSON text.
+
+    Wrapped as ``{"payload": {...}}`` where ``wrap`` holds, bare elsewhere;
+    with no ``wrap``, always wrapped.  Mixed producers send both shapes
+    (SURVEY.md §2.1 S7), so each generator picks its own per-row rule.
+    """
+    wrapped, bare = (
+        F.to_json(c) for c in (F.struct(payload.alias("payload")), payload)
+    )
+    return wrapped if wrap is None else F.when(wrap, wrapped).otherwise(bare)
+
+
+def latest_by_key(df: DataFrame, key: str) -> DataFrame:
     """Last-write-wins reduction: one row per key, the highest-seq event.
 
     ``max(struct(seq, all cols))`` keeps the reduction partially
@@ -65,27 +81,22 @@ def latest_by_key(df: DataFrame, key: str, seq_col: str = "_seq") -> DataFrame:
     every run, instead of max_by's arbitrary pick.
     """
     value_cols = [c for c in df.columns if c != key]
-    ordered = [seq_col] + [c for c in value_cols if c != seq_col]
+    ordered = [SEQ_COL] + [c for c in value_cols if c != SEQ_COL]
     packed = F.max(F.struct(*[F.col(c) for c in ordered])).alias("_latest")
     out = df.groupBy(key).agg(packed)
     return out.select(key, *[F.col(f"_latest.{c}").alias(c) for c in value_cols])
 
 
-def not_deleted(deleted_col: str = "__deleted") -> Column:
-    """The live-row predicate: true unless ``deleted_col`` is ``'true'``.
+def not_deleted() -> Column:
+    """The live-row predicate: true unless ``__deleted`` is ``'true'``.
 
     A NULL marker is live (inserts from producers that never set it).
     Every reader of tombstone-retaining state filters with this.
     """
-    return F.col(deleted_col).isNull() | (F.col(deleted_col) != F.lit("true"))
+    return F.col(DELETED_COL).isNull() | (F.col(DELETED_COL) != F.lit("true"))
 
 
-def apply_cdc_log(
-    events: DataFrame,
-    key: str,
-    seq_col: str = "_seq",
-    deleted_col: str = "__deleted",
-) -> DataFrame:
+def apply_cdc_log(events: DataFrame, key: str) -> DataFrame:
     """Materialize the live table from a structured CDC event log.
 
     The live view excludes keys whose latest event is a delete
@@ -96,8 +107,8 @@ def apply_cdc_log(
     message would collapse into one spurious NULL-key live row.  The
     streaming path additionally quarantines them (materializer dead-letter).
     """
-    latest = latest_by_key(events.filter(F.col(key).isNotNull()), key, seq_col)
-    return latest.filter(not_deleted(deleted_col)).drop(seq_col, deleted_col)
+    latest = latest_by_key(events.filter(F.col(key).isNotNull()), key)
+    return latest.filter(not_deleted()).drop(SEQ_COL, DELETED_COL)
 
 
 def materialize_orders(events_json: DataFrame) -> DataFrame:
@@ -106,8 +117,6 @@ def materialize_orders(events_json: DataFrame) -> DataFrame:
     Output columns (typed): order_key, cust_key, status,
     total_price decimal(10,2), order_ts timestamp, priority.
     """
-    from .schemas import TS_WIRE_FORMAT
-
     parsed = parse_envelope(events_json)
     live = apply_cdc_log(parsed, key="order_key")
     return live.select(
@@ -120,27 +129,22 @@ def materialize_orders(events_json: DataFrame) -> DataFrame:
     )
 
 
-def to_envelope_wire(
-    df: DataFrame, seq_col: str = "_seq", deleted_col: str = "__deleted"
-) -> DataFrame:
+def to_envelope_wire(df: DataFrame) -> DataFrame:
     """Inverse of :func:`parse_envelope`: serialize typed rows back into the
     Debezium-shaped wire format (envelope shape 1, ``{"payload": {...}}``)
     — the outbound CDC sink that lets THIS engine feed another pipeline
     instance (or any Debezium-compatible consumer) over Kafka/files.
 
-    Columns other than ``seq_col`` become payload fields; a missing
-    ``deleted_col`` is emitted as "false" (pure inserts).  Decimal columns
+    Columns other than ``_seq`` become payload fields; a missing
+    ``__deleted`` is emitted as "false" (pure inserts).  Decimal columns
     should already be strings per the wire convention (README.md:324
     decimal-as-string).  Output schema matches the ingest side exactly:
     (``_seq`` LONG, ``value`` STRING) — so emit -> parse is lossless, which
     tests/test_cdc.py asserts round-trip.
     """
-    data_cols = [c for c in df.columns if c != seq_col]
-    if deleted_col not in data_cols:
-        df = df.withColumn(deleted_col, F.lit("false"))
-        data_cols.append(deleted_col)
-    payload = F.struct(*[F.col(c) for c in data_cols]).alias("payload")
-    return df.select(
-        F.col(seq_col),
-        F.to_json(F.struct(payload)).alias("value"),
-    )
+    data_cols = [c for c in df.columns if c != SEQ_COL]
+    if DELETED_COL not in data_cols:
+        df = df.withColumn(DELETED_COL, F.lit("false"))
+        data_cols.append(DELETED_COL)
+    payload = F.struct(*[F.col(c) for c in data_cols])
+    return df.select(F.col(SEQ_COL), encode_envelope(payload).alias(VALUE_COL))

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from .apply import encode_envelope
+from .schemas import DELETED_COL, SEQ_COL, TS_WIRE_FORMAT, VALUE_COL
 
 UPDATE_MOD = 5
 DELETE_MOD = 7
@@ -35,8 +37,6 @@ TOMBSTONE_MOD = 11
 
 
 def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .schemas import TS_WIRE_FORMAT
-
     o = load(spark, sf_dir, "orders")
     return o.select(
         F.col("o_orderkey").alias("order_key"),
@@ -141,22 +141,20 @@ def synth_order_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "total_price",
                     "order_ts",
                     "priority",
-                    "__deleted",
+                    DELETED_COL,
                 )
             ]
         )
-        wrapped = F.to_json(F.struct(payload.alias("payload")))
-        bare = F.to_json(payload)
         return F.struct(
-            e["_seq"].alias("_seq"),
-            F.when(F.col("order_key") % 2 == 0, wrapped)
-            .otherwise(bare)
-            .alias("value"),
+            e[SEQ_COL].alias(SEQ_COL),
+            encode_envelope(payload, wrap=F.col("order_key") % 2 == 0).alias(
+                VALUE_COL
+            ),
         )
 
     tombstone = F.struct(
-        (F.col("order_key") * 3 + 3).cast("long").alias("_seq"),
-        F.lit(None).cast("string").alias("value"),
+        (F.col("order_key") * 3 + 3).cast("long").alias(SEQ_COL),
+        F.lit(None).cast("string").alias(VALUE_COL),
     )
     wire = F.concat(
         F.transform(_event_structs(b), serialize),
@@ -164,4 +162,4 @@ def synth_order_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.slice(F.array(tombstone), 1, 0)
         ),
     )
-    return b.select(F.explode(wire).alias("w")).select("w._seq", "w.value")
+    return b.select(F.explode(wire).alias("w")).select("w.*")

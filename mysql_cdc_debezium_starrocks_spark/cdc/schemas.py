@@ -1,4 +1,4 @@
-"""Schemas for the CDC wire format and the reference's user tables.
+"""The CDC wire contract: column names, ingest schema and envelope schemas.
 
 The reference's wire format is Debezium JSON after ``ExtractNewRecordState``
 (reference: debezium-connector.json:21-24, docs/ARCHITECTURE.md:91-103) and is
@@ -8,6 +8,11 @@ while benchmark.sh:164 and docs/MANUAL_SETUP.md:284 expect ``{schema,payload}``
 wrappers.  We accept BOTH by declaring a schema carrying the payload fields at
 top level *and* under ``payload`` and coalescing per field.
 
+Like the reference, where the connector config and Routine Load's fixed
+jsonpaths pin the wire shape (create-routine-load.sh:16,21), the column
+names are constants, not options: every event row is (``_seq`` LONG,
+``value`` STRING) and every payload carries ``__deleted``.
+
 Conventions preserved from the reference:
 - decimals travel as strings (``decimal.handling.mode=string`` workaround for
   the base64-decimal pitfall, reference: README.md:324);
@@ -15,56 +20,22 @@ Conventions preserved from the reference:
   (``delete.handling.mode=rewrite``, reference: debezium-connector.json:24);
 - null-value tombstone messages are present and must be tolerated
   (``drop.tombstones=false``, reference: debezium-connector.json:23);
-- timestamps travel as epoch millis (deployment-timezone-independent).
+- timestamps travel as ``TS_WIRE_FORMAT`` strings, read back as
+  ``timestamp_ntz`` (deployment-timezone-independent).
 """
 
 from __future__ import annotations
 
-from pyspark.sql.types import (
-    DecimalType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-# --- reference-faithful user tables (reference: mysql/init/01-init.sql:4-18) ---
+SEQ_COL = "_seq"          # LWW sequence: Kafka offset / file-log position
+VALUE_COL = "value"       # the JSON event text; NULL for a tombstone message
+DELETED_COL = "__deleted"  # "true" on a delete (delete.handling.mode=rewrite)
 
-ORDERS_SCHEMA = StructType(
-    [
-        StructField("order_id", IntegerType()),
-        StructField("customer_name", StringType()),
-        StructField("product", StringType()),
-        StructField("amount", DecimalType(10, 2)),
-        StructField("order_date", TimestampType()),
-        StructField("status", StringType()),
-    ]
-)
+# every ingest path (file source, audit replay) reads the event log with it
+INGEST_SCHEMA = "`_seq` LONG, value STRING"
 
-CUSTOMERS_SCHEMA = StructType(
-    [
-        StructField("customer_id", IntegerType()),
-        StructField("name", StringType()),
-        StructField("email", StringType()),
-        StructField("created_at", TimestampType()),
-    ]
-)
-
-# wider benchmark table (reference: benchmark.sh:118-127)
-BENCHMARK_ORDERS_SCHEMA = StructType(
-    [
-        StructField("id", IntegerType()),
-        StructField("customer_name", StringType()),
-        StructField("product", StringType()),
-        StructField("amount", DecimalType(10, 2)),
-        StructField("quantity", IntegerType()),
-        StructField("order_date", TimestampType()),
-        StructField("status", StringType()),
-        StructField("notes", StringType()),
-    ]
-)
+TS_WIRE_FORMAT = "yyyy-MM-dd HH:mm:ss.SSS"
 
 
 def payload_fields(key_col: str, value_cols: list[tuple[str, str]]) -> StructType:
@@ -75,7 +46,7 @@ def payload_fields(key_col: str, value_cols: list[tuple[str, str]]) -> StructTyp
     """
     fields = [StructField(key_col, LongType())]
     fields += [StructField(n, _ddl(t)) for n, t in value_cols]
-    fields.append(StructField("__deleted", StringType()))
+    fields.append(StructField(DELETED_COL, StringType()))
     return StructType(fields)
 
 
@@ -108,10 +79,8 @@ ORDER_EVENT_PAYLOAD = StructType(
         StructField("total_price", StringType()),
         StructField("order_ts", StringType()),
         StructField("priority", StringType()),
-        StructField("__deleted", StringType()),
+        StructField(DELETED_COL, StringType()),
     ]
 )
-
-TS_WIRE_FORMAT = "yyyy-MM-dd HH:mm:ss.SSS"
 
 ORDER_EVENT_ENVELOPE = envelope_schema(ORDER_EVENT_PAYLOAD)

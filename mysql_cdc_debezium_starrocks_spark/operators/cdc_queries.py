@@ -1,10 +1,10 @@
 """Oracle-checked queries over the CDC pipeline (SURVEY.md §2.1, §2.10).
 
 ``cdc_apply`` runs the FULL wire path — JSON envelope serialization (both
-shapes), tombstones, decimal-as-string, epoch-millis timestamps, parse,
-unwrap, last-write-wins keyed apply with delete handling — and the oracle
-mirrors only the *semantics* (latest non-deleted version per key), proving the
-wire round-trip is lossless.
+shapes), tombstones, decimal-as-string, ``TS_WIRE_FORMAT`` timestamp
+strings, parse, unwrap, last-write-wins keyed apply with delete handling —
+and the oracle mirrors only the *semantics* (latest non-deleted version per
+key), proving the wire round-trip is lossless.
 
 Covers reference behaviors S6/S7/S8, P6/P7, T4/T5 and the verification
 queries of test-pipeline.sh:35-40 / README.md:91-92.

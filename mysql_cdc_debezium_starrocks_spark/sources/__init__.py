@@ -21,6 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cdc.apply import encode_envelope
+from ..cdc.schemas import DELETED_COL, INGEST_SCHEMA, SEQ_COL, VALUE_COL
+
 # reference vocabularies (continuous-ingest.sh:38-41)
 PRODUCTS = ["Laptop", "Phone", "Tablet", "Monitor", "Keyboard",
             "Mouse", "Headphones", "Webcam", "Speaker", "Charger"]
@@ -84,15 +87,13 @@ def _to_wire(df: DataFrame, key_space: int, mix: tuple[int, int, int], seed: int
     payload = F.struct(
         key,
         *_synth_event(id_col, seed),
-        F.when(op == "d", F.lit("true")).otherwise(F.lit("false")).alias("__deleted"),
+        F.when(op == "d", F.lit("true")).otherwise(F.lit("false")).alias(DELETED_COL),
         op.alias("op"),
     )
     # alternate envelope shapes like real mixed producers (SURVEY §2.1 S7)
-    wrapped = F.to_json(F.struct(payload.alias("payload")))
-    bare = F.to_json(payload)
     return df.select(
-        id_col.alias("_seq"),
-        F.when(id_col % 2 == 0, wrapped).otherwise(bare).alias("value"),
+        id_col.alias(SEQ_COL),
+        encode_envelope(payload, wrap=id_col % 2 == 0).alias(VALUE_COL),
     )
 
 
@@ -134,11 +135,10 @@ def file_event_source(
 ) -> DataFrame:
     """JSON event-log directory stream: (_seq, value) rows (S5 file mode).
 
-    The single definition of the ingest wire schema — the materializer's
-    file path builds on this (micro-batch sizing via
+    The materializer's file path builds on this (micro-batch sizing via
     ``max_files_per_trigger``, T1).
     """
-    reader = spark.readStream.schema("`_seq` LONG, value STRING")
+    reader = spark.readStream.schema(INGEST_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.json(path)

@@ -64,7 +64,6 @@ def upsert_buckets(
     key: str,
     bucket_key: str,
     buckets: int,
-    seq_col: str = "_seq",
 ) -> DataFrame:
     """Last-write-wins merge of ``delta`` into the ``touched`` buckets of
     ``current`` (partition-pruned read), re-bucketed on ``bucket_key``:
@@ -75,7 +74,7 @@ def upsert_buckets(
         merged = current.filter(F.col(BUCKET_COL).isin(touched)).unionByName(
             delta, allowMissingColumns=True
         )
-    return latest_by_key(merged, key, seq_col).withColumn(
+    return latest_by_key(merged, key).withColumn(
         BUCKET_COL, bucket_of(bucket_key, buckets)
     )
 

@@ -18,10 +18,10 @@ round-robin.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from ..cdc.apply import apply_cdc_log, parse_envelope
+from ..cdc.schemas import INGEST_SCHEMA
 from ..storage import bucket_of
 from .materializer import CdcLoadConfig, read_state
 
@@ -37,13 +37,8 @@ def audit_state(
     ``buckets`` restricts both sides to those PK hash buckets (partition-
     pruned state read; the incremental audit pattern).
     """
-    events = spark.read.schema(f"`{cfg.seq_col}` LONG, value STRING").json(
-        cfg.source_dir
-    )
-    parsed = parse_envelope(events, cfg.envelope, seq_col=cfg.seq_col).filter(
-        F.col(cfg.key).isNotNull()
-    )
-    expected = apply_cdc_log(parsed, cfg.key, cfg.seq_col, cfg.deleted_col)
+    events = spark.read.schema(INGEST_SCHEMA).json(cfg.source_dir)
+    expected = apply_cdc_log(parse_envelope(events, cfg.envelope), cfg.key)
     actual = read_state(spark, cfg)
 
     if buckets is not None:

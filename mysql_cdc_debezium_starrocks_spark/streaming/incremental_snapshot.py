@@ -139,7 +139,7 @@ def chunk_to_wire(plan: SnapshotPlan, chunk_rows: DataFrame) -> DataFrame:
     serialized per the wire conventions (cdc/schemas.py): decimals as
     strings (reference README.md:324), timestamps as formatted NTZ strings.
     """
-    from ..cdc.schemas import TS_WIRE_FORMAT
+    from ..cdc.schemas import SEQ_COL, TS_WIRE_FORMAT
 
     cols = []
     for f in chunk_rows.schema.fields:
@@ -150,7 +150,7 @@ def chunk_to_wire(plan: SnapshotPlan, chunk_rows: DataFrame) -> DataFrame:
             c = F.date_format(c, TS_WIRE_FORMAT)
         cols.append(c.alias(f.name))
     wired = chunk_rows.select(*cols).withColumn(
-        "_seq", F.lit(plan.snapshot_seq).cast("long")
+        SEQ_COL, F.lit(plan.snapshot_seq).cast("long")
     )
     return to_envelope_wire(wired)
 

@@ -58,8 +58,6 @@ class JoinMVConfig:
     dim_key: str  # dim PK
     dim_cols: tuple  # dim payload columns to denormalize into the view
     buckets: int = 8
-    seq_col: str = "_seq"
-    deleted_col: str = "__deleted"
     # DDL types for dim_cols, positionally.  Needed when a fact batch
     # arrives before ANY dim state exists: the NULL enrichment must be
     # typed (parquet cannot store NullType) and must match the type later
@@ -112,7 +110,7 @@ def _enrich(fact: DataFrame, dim: DataFrame | None, cfg: JoinMVConfig) -> DataFr
         for c, t in zip(cfg.dim_cols, cfg.dim_types):
             out = out.withColumn(c, F.lit(None).cast(t))
         return out
-    live = dim.filter(not_deleted(cfg.deleted_col)).select(
+    live = dim.filter(not_deleted()).select(
         F.col(cfg.dim_key).alias("_dk"), *[F.col(c) for c in cfg.dim_cols]
     )
     return fact.join(
@@ -138,7 +136,7 @@ def merge_join_mv_batch(
         touched = _touched_buckets(dim_delta, cfg.dim_key, cfg.buckets)
         merged = upsert_buckets(
             dim_state, dim_delta, touched,
-            cfg.dim_key, cfg.dim_key, cfg.buckets, cfg.seq_col,
+            cfg.dim_key, cfg.dim_key, cfg.buckets,
         )
         merged = merged.localCheckpoint(eager=True)  # reads files we overwrite
         overwrite_buckets(merged, cfg.dim_path)
@@ -167,7 +165,7 @@ def merge_join_mv_batch(
                 f"fact delta rows with NULL {cfg.fact_key!r}: the view key "
                 f"must be present on every row (deletes included)"
             )
-        latest = latest_by_key(fact_delta, cfg.fact_key, cfg.seq_col)
+        latest = latest_by_key(fact_delta, cfg.fact_key)
         touched = _touched_buckets(latest, cfg.fk, cfg.buckets)
         # the dim side shares the bucket hash space (same expr over dim_key
         # as over fk), so the enrichment join only needs the dim buckets
@@ -181,7 +179,7 @@ def merge_join_mv_batch(
             read_if_exists(spark, cfg.mv_path),
             _enrich(latest, dim_side, cfg),
             touched,
-            cfg.fact_key, cfg.fk, cfg.buckets, cfg.seq_col,
+            cfg.fact_key, cfg.fk, cfg.buckets,
         )
         enriched = enriched.localCheckpoint(eager=True)
         overwrite_buckets(enriched, cfg.mv_path)
@@ -192,7 +190,7 @@ def read_join_mv(spark: SparkSession, cfg: JoinMVConfig) -> DataFrame:
     mv = read_if_exists(spark, cfg.mv_path)
     if mv is None:
         raise FileNotFoundError(f"no MV state under {cfg.mv_path}")
-    return mv.filter(not_deleted(cfg.deleted_col)).drop(BUCKET_COL)
+    return mv.filter(not_deleted()).drop(BUCKET_COL)
 
 
 def start_join_mv_load(
@@ -225,12 +223,12 @@ def start_join_mv_load(
             fact_rows = df.filter(F.col(table_col) == fact_table)
             dim_rows = df.filter(F.col(table_col) == dim_table)
             fact_delta = (
-                parse_envelope(fact_rows, fact_envelope, seq_col=cfg.seq_col)
+                parse_envelope(fact_rows, fact_envelope)
                 if not fact_rows.isEmpty()
                 else None
             )
             dim_delta = (
-                parse_envelope(dim_rows, dim_envelope, seq_col=cfg.seq_col)
+                parse_envelope(dim_rows, dim_envelope)
                 if not dim_rows.isEmpty()
                 else None
             )

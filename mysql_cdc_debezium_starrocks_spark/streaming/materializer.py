@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..cdc.apply import not_deleted, parse_envelope
-from ..cdc.schemas import ORDER_EVENT_ENVELOPE
+from ..cdc.schemas import ORDER_EVENT_ENVELOPE, SEQ_COL, VALUE_COL
 from ..storage import (
     BUCKET_COL,
     bucket_of,
@@ -69,8 +69,6 @@ class CdcLoadConfig:
     checkpoint_dir: str          # offset/commit WAL (T3)
     key: str = "order_key"
     envelope: StructType = field(default_factory=lambda: ORDER_EVENT_ENVELOPE)
-    seq_col: str = "_seq"
-    deleted_col: str = "__deleted"
     trigger_seconds: int | None = None   # None -> availableNow (drain & stop)
     max_files_per_trigger: int | None = None  # micro-batch sizing (T1)
     buckets: int = 4             # PK hash buckets (reference: BUCKETS 4)
@@ -136,7 +134,7 @@ def read_state(spark: SparkSession, cfg: CdcLoadConfig) -> DataFrame:
     raw = _read_state_raw(spark, cfg)
     if raw is None:
         return None
-    return raw.filter(not_deleted(cfg.deleted_col)).drop(BUCKET_COL)
+    return raw.filter(not_deleted()).drop(BUCKET_COL)
 
 
 def _ensure_state_meta(cfg: CdcLoadConfig) -> None:
@@ -194,8 +192,9 @@ def merge_batch(
 
     ``batch_id`` (passed by the streaming path) keys the dead-letter
     quarantine dir so checkpoint replay overwrites rather than re-appends —
-    the same idempotence the state merge itself has.  Ad-hoc batch callers
-    may omit it (appends).
+    the same idempotence the state merge itself has — and tags the batch's
+    schema-drift rows.  Ad-hoc batch callers may omit it (appends; drift
+    rows log batch 0).
     """
     _ensure_state_meta(cfg)
     if cfg.drift_dir is not None:
@@ -204,13 +203,13 @@ def merge_batch(
         # aggregated job, no I/O unless drift exists
         from .schema_drift import record_drift
 
-        record_drift(spark, cfg.drift_dir, batch, cfg.envelope)
+        record_drift(spark, cfg.drift_dir, batch, cfg.envelope, batch_id or 0)
 
     # persist the parsed batch: merge_batch runs several actions (dead-letter
     # probe, bucket-set collect, state write) and without a cache each one
     # would re-run the JSON parse of the whole batch — this persist alone is
     # ~3x batch throughput
-    parsed = parse_envelope(batch, cfg.envelope, seq_col=cfg.seq_col).persist()
+    parsed = parse_envelope(batch, cfg.envelope).persist()
     try:
         # ONE small job yields the dead-letter count (bucket -1) and the
         # touched-bucket set — merge-batch overhead is dominated by job
@@ -224,8 +223,8 @@ def merge_batch(
             parsed.groupBy(probe_bucket.alias(BUCKET_COL))
             .agg(
                 F.count(F.lit(1)).alias("n"),
-                F.min(F.col(cfg.seq_col)).alias("mn"),
-                F.max(F.col(cfg.seq_col)).alias("mx"),
+                F.min(F.col(SEQ_COL)).alias("mn"),
+                F.max(F.col(SEQ_COL)).alias("mx"),
             )
             .collect()
         )
@@ -266,7 +265,7 @@ def merge_batch(
         good = parsed.filter(F.col(cfg.key).isNotNull())
         merged = upsert_buckets(
             _read_state_raw(spark, cfg), good,
-            affected, cfg.key, cfg.key, cfg.buckets, cfg.seq_col,
+            affected, cfg.key, cfg.key, cfg.buckets,
         )
         overwrite_buckets(merged, _state_path(cfg))
         return stats
@@ -297,8 +296,8 @@ def gc_tombstones(
     if current is None:
         return
     kept = current.filter(
-        not_deleted(cfg.deleted_col)
-        | (F.col(cfg.seq_col) >= F.lit(int(before_seq)))
+        not_deleted()
+        | (F.col(SEQ_COL) >= F.lit(int(before_seq)))
     )
     swap_in(
         _state_path(cfg),
@@ -562,8 +561,8 @@ def kafka_project(records: DataFrame) -> DataFrame:
     for the streaming path.
     """
     return records.select(
-        F.col("offset").alias("_seq"),
-        F.col("value").cast("string").alias("value"),
+        F.col("offset").alias(SEQ_COL),
+        F.col("value").cast("string").alias(VALUE_COL),
     )
 
 
@@ -608,6 +607,6 @@ def point_lookup(spark: SparkSession, cfg: CdcLoadConfig, key_value) -> DataFram
         .filter(F.col(cfg.key) == k)
         # stored delete tombstones are not live rows: without this filter a
         # deleted key would "exist" to point readers until gc_tombstones
-        .filter(not_deleted(cfg.deleted_col))
+        .filter(not_deleted())
         .drop(BUCKET_COL)
     )

@@ -9,7 +9,9 @@ history but cannot be queried relationally).
 State layout (under ``state_dir``):
 
 - ``closed/batch=<id>/``  — versions closed by batch <id> (immutable once
-  the batch commits; a replay overwrites the same directory).
+  the batch commits; a replay overwrites the same directory).  Written
+  before ``open/batch=<id>``, so readers count it only once that snapshot
+  has committed (:func:`scd2_view`).
 - ``open/batch=<id>/``    — full snapshot of the open (current) version per
   key AFTER batch <id>.  Copy-on-write: each batch reads the previous
   snapshot and writes its own, so replaying batch <id> re-reads snapshot
@@ -38,8 +40,14 @@ from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..cdc.apply import latest_by_key, not_deleted, parse_envelope
-from ..cdc.schemas import ORDER_EVENT_ENVELOPE
-from ._state import newest_snapshot, start_maintainer, write_snapshot
+from ..cdc.schemas import ORDER_EVENT_ENVELOPE, SEQ_COL
+from ._state import (
+    newest_snapshot,
+    snapshot_ids,
+    snapshot_path,
+    start_maintainer,
+    write_snapshot,
+)
 
 
 def merge_scd2_batch(
@@ -49,11 +57,9 @@ def merge_scd2_batch(
     batch_id: int,
     envelope: StructType = ORDER_EVENT_ENVELOPE,
     key: str = "order_key",
-    seq_col: str = "_seq",
-    deleted_col: str = "__deleted",
 ) -> None:
     parsed = (
-        parse_envelope(batch, envelope, seq_col=seq_col)
+        parse_envelope(batch, envelope)
         .filter(F.col(key).isNotNull())
         .persist()
     )
@@ -64,14 +70,14 @@ def merge_scd2_batch(
         prior = newest_snapshot(open_root, below=batch_id)
         prev_open = spark.read.parquet(prior) if prior else None
 
-        w = Window.partitionBy(key).orderBy(seq_col)
-        b = parsed.withColumn("valid_from_seq", F.col(seq_col)).withColumn(
-            "valid_to_seq", F.lead(seq_col).over(w)
+        w = Window.partitionBy(key).orderBy(SEQ_COL)
+        b = parsed.withColumn("valid_from_seq", F.col(SEQ_COL)).withColumn(
+            "valid_to_seq", F.lead(SEQ_COL).over(w)
         )
-        live = not_deleted(deleted_col)
+        live = not_deleted()
         intra_closed = b.filter(F.col("valid_to_seq").isNotNull() & live)
 
-        firsts = parsed.groupBy(key).agg(F.min(seq_col).alias("_first"))
+        firsts = parsed.groupBy(key).agg(F.min(SEQ_COL).alias("_first"))
         closed = intra_closed
         open_rows = None
         if prev_open is not None:
@@ -84,10 +90,10 @@ def merge_scd2_batch(
             closed = closed.unionByName(closing)
             open_rows = prev_open.join(firsts.select(key), key, "left_anti")
 
-        last_ev = latest_by_key(parsed, key, seq_col)
+        last_ev = latest_by_key(parsed, key)
         new_open = (
             last_ev.filter(live)
-            .withColumn("valid_from_seq", F.col(seq_col))
+            .withColumn("valid_from_seq", F.col(SEQ_COL))
             .withColumn("valid_to_seq", F.lit(None).cast("long"))
         )
         open_rows = (
@@ -112,19 +118,28 @@ def merge_scd2_batch(
 def scd2_view(
     spark: SparkSession, state_dir: str, key: str = "order_key"
 ) -> DataFrame | None:
-    """Full temporal history: all closed versions plus the latest open
-    snapshot, with read-time version numbers and the current-row flag."""
-    latest = newest_snapshot(os.path.join(state_dir, "open"))
-    if latest is None:
+    """Full temporal history as of the newest committed open snapshot: the
+    versions closed by batches up to it plus the snapshot, with read-time
+    version numbers and the current-row flag.  A batch writes ``closed/``
+    before ``open/``, so a closed dir past the snapshot (mid-batch, or a
+    crash between the writes) is skipped until a replay commits both."""
+    open_root = os.path.join(state_dir, "open")
+    open_ids = snapshot_ids(open_root)
+    if not open_ids:
         return None
-    opens = spark.read.parquet(latest)
+    hist = spark.read.parquet(snapshot_path(open_root, open_ids[-1]))
     closed_root = os.path.join(state_dir, "closed")
-    hist = opens
-    if os.path.isdir(closed_root):
-        closed = spark.read.option("recursiveFileLookup", "true").parquet(
-            closed_root
+    closed = [
+        snapshot_path(closed_root, i)
+        for i in snapshot_ids(closed_root)
+        if i <= open_ids[-1]
+    ]
+    if closed:
+        hist = (
+            spark.read.option("recursiveFileLookup", "true")
+            .parquet(*closed)
+            .unionByName(hist)
         )
-        hist = closed.unionByName(opens)
     w = Window.partitionBy(key).orderBy("valid_from_seq")
     return hist.withColumn("version", F.row_number().over(w)).withColumn(
         "is_current", F.col("valid_to_seq").isNull()

@@ -29,18 +29,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..cdc.schemas import SEQ_COL, VALUE_COL
+from ..storage import read_if_exists
+
 DRIFT_SCHEMA = (
     "field STRING, n_events LONG, first_seq LONG, last_seq LONG, "
     "sample_value STRING"
 )
 
 
-def detect_schema_drift(
-    batch: DataFrame,
-    envelope: StructType,
-    value_col: str = "value",
-    seq_col: str = "_seq",
-) -> DataFrame:
+def detect_schema_drift(batch: DataFrame, envelope: StructType) -> DataFrame:
     """Unknown payload fields in a wire batch, one row per field.
 
     Returns (field, n_events, first_seq, last_seq, sample_value); empty when
@@ -50,12 +48,12 @@ def detect_schema_drift(
     """
     declared = {f.name for f in envelope["payload"].dataType.fields}
     payload = F.coalesce(
-        F.get_json_object(F.col(value_col), "$.payload"), F.col(value_col)
+        F.get_json_object(F.col(VALUE_COL), "$.payload"), F.col(VALUE_COL)
     )
     pairs = (
-        batch.filter(F.col(value_col).isNotNull())
+        batch.filter(F.col(VALUE_COL).isNotNull())
         .select(
-            F.col(seq_col),
+            F.col(SEQ_COL),
             F.explode(F.from_json(payload, "map<string,string>")).alias(
                 "field", "val"
             ),
@@ -65,8 +63,8 @@ def detect_schema_drift(
     )
     return pairs.groupBy("field").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.min(seq_col).alias("first_seq"),
-        F.max(seq_col).alias("last_seq"),
+        F.min(SEQ_COL).alias("first_seq"),
+        F.max(SEQ_COL).alias("last_seq"),
         F.max("val").alias("sample_value"),
     )
 
@@ -102,8 +100,9 @@ def record_drift(
 
 
 def read_drift_log(spark: SparkSession, drift_dir: str) -> DataFrame:
-    """The accumulated drift log (empty-safe)."""
-    try:
-        return spark.read.parquet(_drift_path(drift_dir))
-    except Exception:
+    """The accumulated drift log; empty when none was written yet (a
+    missing dir, ``storage.read_if_exists`` — read errors propagate)."""
+    log = read_if_exists(spark, _drift_path(drift_dir))
+    if log is None:
         return spark.createDataFrame([], DRIFT_SCHEMA + ", batch_id LONG")
+    return log

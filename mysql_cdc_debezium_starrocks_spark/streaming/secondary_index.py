@@ -113,7 +113,7 @@ def lookup_by_index(
     raw = _read_state_raw(spark, cfg)
     live = (
         raw.filter(F.col(BUCKET_COL).isin(pk_buckets))
-        .filter(not_deleted(cfg.deleted_col))
+        .filter(not_deleted())
         .join(hits.select(cfg.key), cfg.key, "left_semi")
         .drop(BUCKET_COL)
     )

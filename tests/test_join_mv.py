@@ -48,10 +48,10 @@ def _expected(spark, fact_rows, dim_rows):
     """From-scratch recomputation of the view."""
     from mysql_cdc_debezium_starrocks_spark.cdc.apply import latest_by_key
 
-    f = latest_by_key(_fact(spark, fact_rows), "order_key", "_seq").filter(
+    f = latest_by_key(_fact(spark, fact_rows), "order_key").filter(
         F.col("__deleted").isNull() | (F.col("__deleted") != "true")
     )
-    d = latest_by_key(_dim(spark, dim_rows), "cust_key", "_seq").filter(
+    d = latest_by_key(_dim(spark, dim_rows), "cust_key").filter(
         F.col("__deleted").isNull() | (F.col("__deleted") != "true")
     ).select("cust_key", *DIM_COLS)
     return f.join(d, "cust_key", "left")

@@ -12,6 +12,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from mysql_cdc_debezium_starrocks_spark.cdc.schemas import DELETED_COL
 from mysql_cdc_debezium_starrocks_spark.streaming.materializer import (
     CdcLoadConfig,
     _read_state_raw,
@@ -41,7 +42,7 @@ def _write(path: str, fname: str, lines: list[str]) -> None:
 
 def _tombstones(spark, cfg) -> int:
     raw = _read_state_raw(spark, cfg)
-    return raw.filter(F.col(cfg.deleted_col) == "true").count()
+    return raw.filter(F.col(DELETED_COL) == "true").count()
 
 
 def test_cdc_auto_gc_sweeps_committed_tombstones(spark, tmp_path):

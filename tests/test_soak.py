@@ -21,6 +21,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from mysql_cdc_debezium_starrocks_spark.cdc.schemas import DELETED_COL, SEQ_COL
 from mysql_cdc_debezium_starrocks_spark.streaming.audit import audit_state
 from mysql_cdc_debezium_starrocks_spark.streaming.materializer import (
     CdcLoadConfig,
@@ -129,7 +130,7 @@ def test_cdc_soak_bounded_state_flat_latency_clean_audit(spark, tmp_path):
         )
         raw = _read_state_raw(spark, cfg)
         tombstone_counts.append(
-            raw.filter(F.col(cfg.deleted_col) == "true").count()
+            raw.filter(F.col(DELETED_COL) == "true").count()
         )
 
     n_batches = N_DRAINS * FILES_PER_DRAIN
@@ -160,7 +161,7 @@ def test_cdc_soak_bounded_state_flat_latency_clean_audit(spark, tmp_path):
     assert audit["consistent"], audit
     # and equals an independent python LWW fold of every event written
     live = {
-        r["order_key"]: r[cfg.seq_col] for r in read_state(spark, cfg).collect()
+        r["order_key"]: r[SEQ_COL] for r in read_state(spark, cfg).collect()
     }
     assert live == _python_lww(raw_events)
 
@@ -224,7 +225,7 @@ def test_cdc_soak_out_of_order_delivery_never_resurrects(spark, tmp_path, grace)
         start_cdc_load(spark, cfg).awaitTermination(300)
         raw = _read_state_raw(spark, cfg)
         tombstone_counts.append(
-            raw.filter(F.col(cfg.deleted_col) == "true").count()
+            raw.filter(F.col(DELETED_COL) == "true").count()
         )
 
     # the adversarial setup must actually have delivered out of order —
@@ -252,6 +253,6 @@ def test_cdc_soak_out_of_order_delivery_never_resurrects(spark, tmp_path, grace)
     audit = audit_state(spark, cfg)
     assert audit["consistent"], audit
     live = {
-        r["order_key"]: r[cfg.seq_col] for r in read_state(spark, cfg).collect()
+        r["order_key"]: r[SEQ_COL] for r in read_state(spark, cfg).collect()
     }
     assert live == _python_lww(raw_events)

@@ -334,3 +334,31 @@ def test_scd2_view_skips_uncommitted_open_snapshot(spark, tmp_path):
     os.makedirs(os.path.join(state, "open", "batch=2", "_temporary", "0"))
     assert sorted(map(tuple, scd2_view(spark, state).collect())) == committed
     assert len(committed) == 3  # key 1: closed a + open a2; key 2: open b
+
+
+def test_scd2_view_ignores_closed_batch_without_its_open_snapshot(
+    spark, tmp_path
+):
+    """A batch writes ``closed/batch=<b>`` before ``open/batch=<b>``; a
+    crash (or a reader) between the two must not see b's closed versions
+    beside b-1's open rows — the view stays at batch b-1."""
+    import shutil
+
+    from mysql_cdc_debezium_starrocks_spark.streaming.scd2 import (
+        merge_scd2_batch,
+        scd2_view,
+    )
+
+    def view():
+        return sorted(
+            (r.status, r.is_current) for r in scd2_view(spark, state).collect()
+        )
+
+    state = str(tmp_path / "scd2")
+    merge_scd2_batch(spark, state, _batch(spark, [(1, ROW1)]), 0)
+    merge_scd2_batch(
+        spark, state, _batch(spark, [(2, dict(ROW1, status="b"))]), 1
+    )
+    assert view() == [("a", False), ("b", True)]
+    shutil.rmtree(os.path.join(state, "open", "batch=1"))
+    assert view() == [("a", True)]

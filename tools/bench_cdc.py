@@ -29,6 +29,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from mysql_cdc_debezium_starrocks_spark.cdc.schemas import INGEST_SCHEMA  # noqa: E402
 from mysql_cdc_debezium_starrocks_spark.session import get_spark  # noqa: E402
 from mysql_cdc_debezium_starrocks_spark.streaming import (  # noqa: E402
     CdcLoadConfig,
@@ -130,7 +131,7 @@ def cdc_control_probe(spark, root: str, tag: str) -> float:
     )
     _write_batch(cfg.source_dir, "p.json", [_event(i, i) for i in range(1000)])
     t0 = time.perf_counter()
-    batch = spark.read.schema("`_seq` LONG, value STRING").json(cfg.source_dir)
+    batch = spark.read.schema(INGEST_SCHEMA).json(cfg.source_dir)
     merge_batch(spark, cfg, batch)
     visible = read_state(spark, cfg).count()
     dt = time.perf_counter() - t0
@@ -157,7 +158,7 @@ def bench_insert_throughput(spark, root: str, sizes: list[int]) -> dict:
     merge_batch(
         spark,
         warm_cfg,
-        spark.read.schema("`_seq` LONG, value STRING").json(warm_cfg.source_dir),
+        spark.read.schema(INGEST_SCHEMA).json(warm_cfg.source_dir),
     )
     read_state(spark, warm_cfg).count()
 
@@ -173,7 +174,7 @@ def bench_insert_throughput(spark, root: str, sizes: list[int]) -> dict:
         lines = [_event(i, i) for i in range(n)]
         _write_batch(cfg.source_dir, "b0.json", lines)
         t0 = time.perf_counter()
-        batch = spark.read.schema("`_seq` LONG, value STRING").json(cfg.source_dir)
+        batch = spark.read.schema(INGEST_SCHEMA).json(cfg.source_dir)
         merge_batch(spark, cfg, batch)
         visible = read_state(spark, cfg).count()
         dt = time.perf_counter() - t0
@@ -252,7 +253,7 @@ def bench_delete_propagation(spark, root: str, n: int = 1000, deletes: int = 100
         checkpoint_dir=os.path.join(d, "ckpt"),
     )
     _write_batch(cfg.source_dir, "b0.json", [_event(i, i) for i in range(n)])
-    batch = spark.read.schema("`_seq` LONG, value STRING").json(cfg.source_dir)
+    batch = spark.read.schema(INGEST_SCHEMA).json(cfg.source_dir)
     merge_batch(spark, cfg, batch)
     before = read_state(spark, cfg).count()
 
@@ -262,7 +263,7 @@ def bench_delete_propagation(spark, root: str, n: int = 1000, deletes: int = 100
     ]
     dd = os.path.join(d, "ev2")
     _write_batch(dd, "b1.json", del_lines)
-    batch2 = spark.read.schema("`_seq` LONG, value STRING").json(dd)
+    batch2 = spark.read.schema(INGEST_SCHEMA).json(dd)
     merge_batch(spark, cfg, batch2)
     after = read_state(spark, cfg).count()
     dt = time.perf_counter() - t0
@@ -292,7 +293,7 @@ def bench_update_throughput(
         checkpoint_dir=os.path.join(d, "ckpt"),
     )
     _write_batch(cfg.source_dir, "b0.json", [_event(i, i) for i in range(n)])
-    batch = spark.read.schema("`_seq` LONG, value STRING").json(cfg.source_dir)
+    batch = spark.read.schema(INGEST_SCHEMA).json(cfg.source_dir)
     merge_batch(spark, cfg, batch)
     assert read_state(spark, cfg).count() == n
 
@@ -302,7 +303,7 @@ def bench_update_throughput(
     ]
     dd = os.path.join(d, "ev2")
     _write_batch(dd, "b1.json", upd_lines)
-    batch2 = spark.read.schema("`_seq` LONG, value STRING").json(dd)
+    batch2 = spark.read.schema(INGEST_SCHEMA).json(dd)
     merge_batch(spark, cfg, batch2)
     st = read_state(spark, cfg)
     visible_updates = st.filter(st.status == "updated").count()

@@ -11,12 +11,13 @@ Usage: python tools/parity.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 from decimal import Decimal
 
 import duckdb
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from mysql_cdc_debezium_starrocks_spark.catalog import TABLES  # noqa: E402
