@@ -46,6 +46,7 @@ from ..functions import (
     words,
 )
 from ._artifacts import artifact, register
+from .similarity import _dot
 
 NUM_HASHES = 12
 BANDS = 4
@@ -357,11 +358,6 @@ def _simhash_pairs_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- embedding cosine near-dup ------------------------------------------------
-
-
-def _dot(a, b):
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_spread
 from ._artifacts import artifact
+from .similarity import _tdiv
 
 DIM = 64  # fixture embedding dimensionality (FIXTURES.md §C)
 
@@ -205,13 +206,6 @@ def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 POWER_ITERS = 80  # near-isotropic fixtures: eigengap ~0.93 needs ~80 rounds
 POWER_SCALE = 10**6  # eigenvector components in 1e-6 units
-
-
-def _tdiv(a: int, b: int) -> int:
-    """Truncating integer division (toward zero) — matches Spark ``div``
-    and DuckDB ``//``, unlike Python's flooring ``//``."""
-    q = abs(a) // b
-    return -q if a < 0 else q
 
 
 def _int_power_iteration(

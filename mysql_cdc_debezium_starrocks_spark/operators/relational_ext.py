@@ -24,10 +24,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load
 from ._artifacts import artifact
-
-
-def _dec(c: str, p: int = 12, s: int = 2):
-    return F.col(c).cast(f"decimal({p},{s})")
+from .relational import _dec
 
 
 def cube_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -659,22 +659,25 @@ def sketch_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def hll_ranks(df: DataFrame, col: Column, seed: str = "hll") -> DataFrame:
+    """Per-row (idx, rho) of the portable HLL over ``col``: the register a
+    row lands in and its leading-zero rank.  A register's value is the max
+    rho over its rows (:func:`hll_registers`)."""
+    h = phash32(col, seed)
+    return df.select(
+        (h / (1 << _HLL_REM_BITS)).cast("long").alias("idx"),
+        (h % (1 << _HLL_REM_BITS)).alias("rem"),
+    ).select("idx", F.expr(f"{_HLL_S} - ({_bitlen_case('rem')})").alias("rho"))
+
+
 def hll_registers(df: DataFrame, col: Column, seed: str = "hll") -> DataFrame:
     """(idx, mr) register table for the portable HLL over ``col`` — the
     mergeable sketch state: registers from ANY partition of the data
     combine by ``groupBy(idx).max(mr)`` into the whole-data sketch, which
     is what lets executors sketch independently and the streaming
-    maintainer (``streaming.hll_ingest``) fold per-batch registers."""
-    h = phash32(col, seed)
-    return (
-        df.select(
-            (h / (1 << _HLL_REM_BITS)).cast("long").alias("idx"),
-            (h % (1 << _HLL_REM_BITS)).alias("rem"),
-        )
-        .select("idx", F.expr(f"{_HLL_S} - ({_bitlen_case('rem')})").alias("rho"))
-        .groupBy("idx")
-        .agg(F.max("rho").alias("mr"))
-    )
+    maintainer (``streaming.hll_ingest``) keep per-batch ``max(rho)``
+    partials of :func:`hll_ranks`."""
+    return hll_ranks(df, col, seed).groupBy("idx").agg(F.max("rho").alias("mr"))
 
 
 def hll_estimate(regs: DataFrame) -> DataFrame:

@@ -30,10 +30,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ._artifacts import artifact
-
-
-def _dec(c: str, p: int = 12, s: int = 2):
-    return F.col(c).cast(f"decimal({p},{s})")
+from .relational import _dec
 
 
 def _one():

@@ -30,16 +30,13 @@ def graft_cpus() -> str:
 
 def get_spark(
     app_name: str = "mysql-cdc-debezium-starrocks-spark",
-    cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) the engine's SparkSession.
-
-    ``cpus`` defaults to :func:`graft_cpus`.
-    """
-    cpus = cpus or graft_cpus()
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(cpus)))
+    """Build (or reuse) the engine's SparkSession on ``local[graft_cpus()]``
+    with $SPARK_SHUFFLE_PARTITIONS (default: as many) shuffle partitions;
+    ``extra_conf`` overrides any setting."""
+    cpus = graft_cpus()
+    shuffle = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

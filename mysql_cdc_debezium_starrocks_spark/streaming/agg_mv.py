@@ -1,7 +1,9 @@
 """Generic incremental aggregate materialized view: arbitrary group keys and
 algebraic aggregates maintained per micro-batch as MERGEABLE PARTIALS — the
-CREATE MATERIALIZED VIEW analog, generalizing the events-specific rollup
-(rollup.py) to any (keys, aggs) spec.
+CREATE MATERIALIZED VIEW analog, and the engine's one store of mergeable
+partials: the minute rollup (rollup.py), the streaming HLL registers
+(hll_ingest.py) and the table statistics (table_stats.py) are each a key
+projection plus one (keys, spec) constant over this module.
 
 The classical split (Gray et al., data-cube taxonomy): an aggregate is
 incrementally maintainable iff its partial state merges associatively —
@@ -18,13 +20,19 @@ mergeable-quantile formulation as the batch ``hist_quantile_bins`` query).
 
 Per micro-batch: ONE partial aggregation of the batch (map-side combined),
 written under ``contrib/batch=<id>`` (batch-keyed overwrite — replay
-regenerates the same dir; the rollup/scd2 idempotency scheme).  Readers
+regenerates the same dir).  Readers
 merge all contributions with the same associative functions — O(groups x
-batches) rows, compactable exactly like rollup baselines.  Floating-point
-addition is the exception: it is not associative, so ``sum``/``avg``
-partials of a float column are added as a left fold in batch-id order
-(:func:`_sum_in_batch_order`), in the read and in the compaction alike —
-the view is then bit-identical at any parallelism and across compaction.
+batches) rows, folded by compaction into a committed baseline
+(``_state.fold_verbatim``).  Floating-point addition is the exception: it
+is not associative, so ``sum``/``avg`` partials of a float column are added
+as a left fold in batch-id order (:func:`_sum_in_batch_order`), in the read
+and in the compaction alike — count/sum/min/max/avg (and hist) are then
+bit-identical at any parallelism and across compaction.  ``ndv`` estimates
+are not: the sketch union's estimate depends on the order sketches merge
+in, and folding merges them in a different grouping than the read, so an
+estimate moves by a few counts across a compaction (``table_stats`` on 5
+random splits of the sf0.001 ``events`` table: ``value``, 952 distinct,
+estimated 958 before and 954 after).
 No shared state is ever read on the write path, so batch cost is
 O(batch), never O(view).
 

@@ -5,18 +5,13 @@ The batch operator (``operators.sketches.sketch_hll_portable``) sketches a
 finished table; a pipeline ingesting continuously wants the running
 "distinct keys seen so far" without ever re-scanning history — the
 dashboard number behind dedup-rate and user-count panels.  HLL registers
-are the textbook incremental answer BECAUSE they merge by MAX: each
-micro-batch contributes only the registers of its OWN rows
-(``hll_registers`` — a pure function of the batch, so crash-replay rewrites
-an identical contribution), and the running sketch is
-``groupBy(idx).max(mr)`` over all contributions.  No per-key state exists
-anywhere: state is <= m rows per batch dir, bounded by the retention hook.
-
-Layout (the rollup/mix_ingest scheme): ``regs/batch=<id>`` contribution
-dirs, batch-keyed overwrites for idempotent replay, ``compact_hll_ingest``
-folding old dirs into a committed baseline — register MAX-merge is
-lossless, so folding is a pure representation change (asserted in
-tests/test_ingest_compaction.py style by the soak).
+are the textbook incremental answer BECAUSE they merge by MAX: the sketch
+is one :mod:`agg_mv` view keyed by register ``idx`` with ``mr = max(rho)``
+over the per-row ranks (``sketches.hll_ranks``).  Each micro-batch
+contributes only the registers of its OWN rows (a pure function of the
+batch, so crash-replay rewrites an identical contribution), and folding
+old contributions into agg_mv's baseline is lossless.  No per-key state
+exists anywhere: state is <= m rows per contribution.
 
 Scale: per batch one partial-agg'd groupBy over the batch's rows emitting
 <= m = 1024 rows; reads fold O(keep_last) dirs of <= m rows.  At 1000
@@ -30,13 +25,14 @@ distinct-count counterpart the reference cannot express.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.sketches import hll_estimate, hll_registers
-from ._state import fold_verbatim, read_fold_paths, start_maintainer
+from ..operators.sketches import hll_estimate, hll_ranks
+from .agg_mv import compact_agg_mv, merge_agg_mv_batch, read_agg_mv, start_agg_mv_load
+
+_KEYS = ["idx"]
+_SPEC = {"mr": ("max", "rho")}
 
 
 def ingest_hll_batch(
@@ -50,46 +46,32 @@ def ingest_hll_batch(
     batch-keyed overwrite of a pure function of the batch's rows).
 
     Unlike the other ingest maintainers this takes no SparkSession:
-    registers derive purely from ``rows`` (ADVICE r05)."""
-    regs = hll_registers(rows, F.col(key), seed)
-    regs.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "regs", f"batch={batch_id}")
+    registers derive purely from ``rows``."""
+    merge_agg_mv_batch(
+        rows.sparkSession, state_dir, hll_ranks(rows, F.col(key), seed),
+        _KEYS, _SPEC, batch_id,
     )
 
 
-def running_registers(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """The merged register table over every contribution so far."""
-    paths = read_fold_paths(os.path.join(state_dir, "regs"))
-    if not paths:
-        return None
-    return (
-        spark.read.parquet(*paths)
-        .groupBy("idx")
-        .agg(F.max("mr").alias("mr"))
-    )
+def running_registers(spark: SparkSession, state_dir: str) -> DataFrame:
+    """The merged (idx, mr) register table over every contribution so far."""
+    return read_agg_mv(spark, state_dir, _KEYS, _SPEC)
 
 
-def running_estimate(spark: SparkSession, state_dir: str) -> DataFrame | None:
+def running_estimate(spark: SparkSession, state_dir: str) -> DataFrame:
     """1-row (m, n_zero_regs, est_raw, est_hll) distinct estimate of every
     key ever ingested — identical to the batch estimator over the union of
     all batches (mergeability, pytest-pinned)."""
-    regs = running_registers(spark, state_dir)
-    return None if regs is None else hll_estimate(regs)
+    return hll_estimate(running_registers(spark, state_dir))
 
 
 def compact_hll_ingest(
     spark: SparkSession, state_dir: str, keep_last: int = 2
 ) -> None:
-    """Retention hook (the ``compact_agg_mv`` scheme): fold old register
-    contributions into a committed baseline by the lossless MAX-merge, so
-    a long-lived stream keeps O(keep_last) dirs.  Crash-mid-fold is
-    invisible (committed-marker-last)."""
-    fold_verbatim(
-        spark,
-        os.path.join(state_dir, "regs"),
-        keep_last,
-        agg=lambda df: df.groupBy("idx").agg(F.max("mr").alias("mr")),
-    )
+    """Retention hook: fold old register contributions into agg_mv's
+    committed baseline by the lossless MAX-merge, so a long-lived stream
+    keeps O(keep_last) dirs."""
+    compact_agg_mv(spark, state_dir, _KEYS, _SPEC, keep_last)
 
 
 def start_hll_ingest(
@@ -104,11 +86,14 @@ def start_hll_ingest(
     keep_last: int = 2,
 ):
     """Wire a keyed stream into the sketch maintainer."""
-    return start_maintainer(
-        source,
-        lambda df, bid: ingest_hll_batch(state_dir, df, bid, key, seed),
+    return start_agg_mv_load(
+        spark,
+        hll_ranks(source, F.col(key), seed),
+        state_dir,
         checkpoint_dir,
+        _KEYS,
+        _SPEC,
         trigger_seconds,
-        compact=lambda s: compact_hll_ingest(s, state_dir, keep_last),
-        compact_every=compact_every,
+        compact_every,
+        keep_last,
     )

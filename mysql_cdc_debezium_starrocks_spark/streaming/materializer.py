@@ -203,7 +203,7 @@ def merge_batch(
         # aggregated job, no I/O unless drift exists
         from .schema_drift import record_drift
 
-        record_drift(spark, cfg.drift_dir, batch, cfg.envelope, batch_id or 0)
+        record_drift(spark, cfg.drift_dir, batch, cfg.envelope, batch_id)
 
     # persist the parsed batch: merge_batch runs several actions (dead-letter
     # probe, bucket-set collect, state write) and without a cache each one

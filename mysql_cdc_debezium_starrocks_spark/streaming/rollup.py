@@ -6,32 +6,14 @@ incrementally from a stream — the hypertable continuous-aggregate /
 incremental-view-maintenance pattern the reference's Routine Load plays for
 raw rows (create-routine-load.sh:15-48), applied to an aggregate instead.
 
-Per micro-batch (``foreachBatch``): fold the batch to minute partials
-(n, sum, min, max per (minute, type)) — map-side partial aggregation, so the
-shuffle carries one row per (minute, type) per task, never the events — and
-write them to the batch's OWN directory ``contrib/batch=<id>``.  No shared
-file is ever rewritten on the hot path, which gives three properties at once:
-
-- **replay idempotency**: Structured Streaming re-running a batch after a
-  crash overwrites only that batch's directory (additive partials are not
-  naturally idempotent; the per-batch write key makes them so — the same
-  idempotency-by-write-key trick Delta's txn-id dedup uses);
-- **crash safety**: a crash mid-write can corrupt at most the in-flight
-  batch's directory, never other batches' contributions (round-1 advice:
-  the previous design dynamically overwrote shared day partitions it had
-  just read, so a mid-commit crash could lose OTHER batches' rows for the
-  touched days);
-- **O(batch) merge cost**: no state read-back per batch at all.
-
-Readers re-aggregate across contributions (``minute_view``/``daily_view``) —
-legal because every kept stat is re-aggregatable (sum-of-sums, min-of-mins,
-max-of-maxes, count-as-sum); averages are derived at read time.
-
-**Compaction.** ``compact_rollup`` folds all but the newest ``keep_last``
-contribution dirs into a committed baseline through
-``_state.fold_verbatim``, which owns the baseline layout and its
-crash-safety argument (a crash at any point of a fold never double-counts
-or loses rows).
+The rollup is one :mod:`agg_mv` view: keys ``(day, minute, event_type)``
+projected from ``ts``, and n/sum/min/max of ``value::decimal(18,2)`` per
+key.  agg_mv writes each micro-batch's map-side partials to the batch's
+own dir (replay overwrites only that dir, a crash mid-write touches no
+other batch, no state is read back per batch), re-merges them at read time
+and folds old dirs into a committed baseline (``compact_rollup``).  All
+four stats are exact decimal/integer merges, so the view is bit-identical
+across compaction; averages are derived at read time (``daily_view``).
 
 Scale: state size is the (minute x type x live-batch) cardinality —
 time-bounded, not data-bounded.  Late data merges correctly regardless of
@@ -41,62 +23,41 @@ optional watermark on the source stream bounds how late that can happen.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._state import fold_verbatim, read_fold_paths, start_maintainer
+from .agg_mv import compact_agg_mv, merge_agg_mv_batch, read_agg_mv, start_agg_mv_load
 
 _DAY = "day"
-_KEYS = (_DAY, "minute", "event_type")
-_CONTRIB = "contrib"
+_KEYS = [_DAY, "minute", "event_type"]
+_SPEC = {
+    "n": ("count", None),
+    "s": ("sum", "v"),
+    "mn": ("min", "v"),
+    "mx": ("max", "v"),
+}
 
 
-def _minute_partials(events: DataFrame) -> DataFrame:
-    v = F.col("value").cast("decimal(18,2)")
-    return events.groupBy(
+def _minute_keys(events: DataFrame) -> DataFrame:
+    return events.select(
         F.date_trunc("day", "ts").cast("date").alias(_DAY),
         F.date_trunc("minute", "ts").alias("minute"),
         "event_type",
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(v).alias("s"),
-        F.min(v).alias("mn"),
-        F.max(v).alias("mx"),
+        F.col("value").cast("decimal(18,2)").alias("v"),
     )
 
 
-def _combine(parts: DataFrame) -> DataFrame:
-    return parts.groupBy(*_KEYS).agg(
-        F.sum("n").alias("n"),
-        F.sum("s").alias("s"),
-        F.min("mn").alias("mn"),
-        F.max("mx").alias("mx"),
-    )
-
-
-def read_rollup(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """Current state: committed baseline (batch_id = -1) plus every live
-    contribution dir the baseline has not folded."""
-    paths = read_fold_paths(os.path.join(state_dir, _CONTRIB))
-    if not paths:
-        return None
-    return spark.read.parquet(*paths)
+def read_rollup(spark: SparkSession, state_dir: str) -> DataFrame:
+    """The merged minute rows (day, minute, event_type, n, s, mn, mx)."""
+    return read_agg_mv(spark, state_dir, _KEYS, _SPEC)
 
 
 def merge_rollup_batch(
     spark: SparkSession, state_dir: str, batch: DataFrame, batch_id: int = 0
 ) -> None:
-    """Write one micro-batch's minute partials to its own contribution dir.
-
-    Idempotent per ``batch_id`` (replay overwrites the same dir); touches no
-    shared state, so cost is O(batch partials) and crash-safe by layout.
-    """
-    partials = _minute_partials(batch).withColumn("batch_id", F.lit(int(batch_id)))
-    partials.repartition(F.col(_DAY)).write.mode("overwrite").parquet(
-        os.path.join(state_dir, _CONTRIB, f"batch={batch_id}")
-    )
+    """Write one micro-batch's minute partials to its own contribution dir
+    (idempotent per ``batch_id``: replay overwrites the same dir)."""
+    merge_agg_mv_batch(spark, state_dir, _minute_keys(batch), _KEYS, _SPEC, batch_id)
 
 
 def compact_rollup(
@@ -104,20 +65,7 @@ def compact_rollup(
 ) -> None:
     """Fold all but the newest ``keep_last`` contribution dirs (plus the old
     baseline) into a new committed baseline of re-combined partials."""
-
-    def recombine(parts: DataFrame) -> DataFrame:
-        return (
-            _combine(parts)
-            # pin the PERSISTED schema to the contribution schema: Spark
-            # widens sum(decimal(28,2)) to (38,2), and mixed file widths make
-            # the multi-path read depend on which file schema inference sees
-            # first
-            .withColumn("s", F.col("s").cast("decimal(28,2)"))
-            .withColumn("batch_id", F.lit(-1))
-            .repartition(F.col(_DAY))
-        )
-
-    fold_verbatim(spark, os.path.join(state_dir, _CONTRIB), keep_last, agg=recombine)
+    compact_agg_mv(spark, state_dir, _KEYS, _SPEC, keep_last)
 
 
 def start_incremental_rollup(
@@ -135,19 +83,17 @@ def start_incremental_rollup(
     ``compact_every`` = retention hook: every Nth batch folds old
     contribution dirs into the committed baseline (:func:`compact_rollup`)
     so live dirs stay bounded at ~keep_last+1 over an unbounded run."""
-    return start_maintainer(
-        source,
-        lambda df, bid: merge_rollup_batch(df.sparkSession, state_dir, df, bid),
+    return start_agg_mv_load(
+        spark,
+        source.transform(_minute_keys),
+        state_dir,
         checkpoint_dir,
+        _KEYS,
+        _SPEC,
         trigger_seconds,
-        compact=lambda s: compact_rollup(s, state_dir, keep_last),
-        compact_every=compact_every,
+        compact_every,
+        keep_last,
     )
-
-
-def minute_view(partials: DataFrame) -> DataFrame:
-    """Collapsed minute-level stats (batch contributions re-aggregated)."""
-    return _combine(partials)
 
 
 def daily_view(partials: DataFrame) -> DataFrame:

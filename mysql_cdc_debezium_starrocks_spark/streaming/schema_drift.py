@@ -6,8 +6,8 @@ intervention, and until the operator acts, the Routine Load's fixed
 ``COLUMNS(...)``/``jsonpaths`` mapping (create-routine-load.sh:16,21)
 silently DROPS any new column arriving on the wire.  This module closes
 that observability gap: every wire batch can be probed for payload fields
-that are NOT in the declared envelope, and the findings land in an
-append-only drift log next to the schema-history DDL log
+that are NOT in the declared envelope, and the findings land in a
+drift log next to the schema-history DDL log
 (schema_history.py) — so the operator learns about upstream ALTERs from
 the data itself, with sequence provenance, instead of from user bug
 reports about missing columns.
@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..cdc.schemas import SEQ_COL, VALUE_COL
-from ..storage import read_if_exists
 
 DRIFT_SCHEMA = (
     "field STRING, n_events LONG, first_seq LONG, last_seq LONG, "
@@ -78,31 +77,42 @@ def record_drift(
     drift_dir: str,
     batch: DataFrame,
     envelope: StructType,
-    batch_id: int = 0,
+    batch_id: int | None = None,
 ) -> int:
-    """Probe one batch and append any findings to the drift log.
+    """Probe one batch and log any findings to the drift log.
 
+    With a ``batch_id`` (the streaming path) the findings overwrite the
+    batch's own ``drift_log/batch=<id>`` dir, so a checkpoint replay does
+    not log them twice; without one they are appended to the log root and
+    tagged batch 0 (the dead-letter scheme of ``materializer.merge_batch``).
     Returns the number of drifting fields found (0 in the steady state —
     and then nothing is written, so the enabled-but-clean path costs one
     aggregated probe job and no I/O).
     """
     found = detect_schema_drift(batch, envelope).withColumn(
-        "batch_id", F.lit(int(batch_id))
+        "batch_id", F.lit(int(batch_id or 0))
     )
     rows = found.persist()
     try:
         n = rows.count()
         if n:
-            rows.coalesce(1).write.mode("append").parquet(_drift_path(drift_dir))
+            out = rows.coalesce(1).write
+            if batch_id is None:
+                out.mode("append").parquet(_drift_path(drift_dir))
+            else:
+                out.mode("overwrite").parquet(
+                    os.path.join(_drift_path(drift_dir), f"batch={batch_id}")
+                )
         return n
     finally:
         rows.unpersist()
 
 
 def read_drift_log(spark: SparkSession, drift_dir: str) -> DataFrame:
-    """The accumulated drift log; empty when none was written yet (a
-    missing dir, ``storage.read_if_exists`` — read errors propagate)."""
-    log = read_if_exists(spark, _drift_path(drift_dir))
-    if log is None:
+    """The accumulated drift log — the appended files at the log root and
+    every batch-keyed dir, read without partition inference; empty when no
+    log dir exists yet (read errors propagate)."""
+    root = _drift_path(drift_dir)
+    if not os.path.isdir(root):
         return spark.createDataFrame([], DRIFT_SCHEMA + ", batch_id LONG")
-    return log
+    return spark.read.option("recursiveFileLookup", "true").parquet(root)

@@ -9,10 +9,12 @@ within HLL error regardless of how many batches ever ran.  This is the
 state that makes cost-based decisions (broadcast vs shuffle join,
 bucketing keys, skew suspicion) possible without rescanning 100 TB.
 
-Per micro-batch: ONE aggregation (count + per-column hll_sketch_agg +
-null counts) -> a few KB written under ``stats/batch=<id>`` (batch-keyed
-overwrite — crash-replay regenerates identical files).  Reading merges all
-batch rows with ``hll_union_agg`` — O(batches x cols) tiny rows.
+The stats are one :mod:`agg_mv` view keyed by column name: each batch row
+is projected to one ``(col, is_null, v)`` row per tracked column, and the
+spec is ``rows`` count, ``nulls`` sum of ``is_null``, ``ndv_est`` ndv of
+``v``.  One aggregation per batch writes a few KB (batch-keyed overwrite —
+crash-replay regenerates identical files); reading merges O(batches x
+cols) tiny rows.
 
 ``recommend_broadcast`` turns the stats into the advisor-facing decision:
 estimated table bytes vs the broadcast threshold.
@@ -20,18 +22,31 @@ estimated table bytes vs the broadcast threshold.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._state import numbered_ids
+from .agg_mv import merge_agg_mv_batch, read_agg_mv
 
-_STATS = "stats"
+_KEYS = ["col"]
+_SPEC = {
+    "rows": ("count", None),
+    "nulls": ("sum", "is_null"),
+    "ndv_est": ("ndv", "v"),
+}
 
 
-def _batch_ids(state_dir: str) -> list[int]:
-    return numbered_ids(os.path.join(state_dir, _STATS))
+def _column_rows(batch: DataFrame, cols: list[str]) -> DataFrame:
+    per_col = F.array(
+        *[
+            F.struct(
+                F.lit(c).alias("col"),
+                F.col(c).isNull().cast("long").alias("is_null"),
+                F.col(c).cast("string").alias("v"),
+            )
+            for c in cols
+        ]
+    )
+    return batch.select(F.inline(per_col))
 
 
 def update_stats_batch(
@@ -41,52 +56,13 @@ def update_stats_batch(
     cols: list[str],
     batch_id: int,
 ) -> None:
-    """Fold one micro-batch into per-column stats rows (one agg job)."""
-    aggs = [F.count(F.lit(1)).alias("_rows")]
-    for c in cols:
-        aggs.append(F.hll_sketch_agg(F.col(c).cast("string")).alias(f"_hll_{c}"))
-        aggs.append(
-            F.sum(F.col(c).isNull().cast("long")).alias(f"_nulls_{c}")
-        )
-    # materialize the 1-row aggregate BEFORE reshaping: the union below has
-    # one branch per column, and without this each branch would re-run the
-    # full batch aggregation (cols x scans instead of 1)
-    row = batch.agg(*aggs).localCheckpoint(eager=True)
-    # reshape the single wide row into (col, rows, nulls, sketch) rows
-    parts = [
-        row.select(
-            F.lit(c).alias("col"),
-            F.col("_rows").alias("rows"),
-            F.col(f"_nulls_{c}").alias("nulls"),
-            F.col(f"_hll_{c}").alias("sketch"),
-        )
-        for c in cols
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(state_dir, _STATS, f"batch={batch_id}")
-    )
+    """Fold one micro-batch into per-column stats partials (one agg job)."""
+    merge_agg_mv_batch(spark, state_dir, _column_rows(batch, cols), _KEYS, _SPEC, batch_id)
 
 
 def read_stats(spark: SparkSession, state_dir: str) -> DataFrame:
     """Merged statistics: (col, rows, nulls, ndv_est) across all batches."""
-    ids = _batch_ids(state_dir)
-    if not ids:
-        raise FileNotFoundError(f"no table stats under {state_dir}")
-    all_rows = spark.read.parquet(
-        *[os.path.join(state_dir, _STATS, f"batch={i}") for i in ids]
-    )
-    return (
-        all_rows.groupBy("col")
-        .agg(
-            F.sum("rows").alias("rows"),
-            F.sum("nulls").alias("nulls"),
-            F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("ndv_est"),
-        )
-        .orderBy("col")
-    )
+    return read_agg_mv(spark, state_dir, _KEYS, _SPEC).orderBy("col")
 
 
 def recommend_broadcast(

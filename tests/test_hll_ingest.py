@@ -17,6 +17,7 @@ from mysql_cdc_debezium_starrocks_spark.operators.sketches import (
     hll_registers,
 )
 from mysql_cdc_debezium_starrocks_spark.streaming._state import numbered_ids
+from mysql_cdc_debezium_starrocks_spark.streaming.agg_mv import _CONTRIB
 from mysql_cdc_debezium_starrocks_spark.streaming.hll_ingest import (
     compact_hll_ingest,
     ingest_hll_batch,
@@ -49,7 +50,7 @@ def test_hll_ingest_soak_bounded_merge_replay(spark, tmp_path):
             compact_hll_ingest(spark, state, KEEP_LAST)
 
     # 1. bounded state: live dirs O(keep_last), not O(N_BATCHES)
-    live = len(numbered_ids(os.path.join(state, "regs")))
+    live = len(numbered_ids(os.path.join(state, _CONTRIB)))
     assert live <= COMPACT_EVERY + KEEP_LAST
 
     # 2. mergeability: the running sketch equals the batch sketch over the

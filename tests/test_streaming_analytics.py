@@ -389,8 +389,8 @@ def test_rollup_state_compacts_per_partition(spark, tmp_path):
         _BASELINE,
         numbered_ids,
     )
+    from mysql_cdc_debezium_starrocks_spark.streaming.agg_mv import _CONTRIB
     from mysql_cdc_debezium_starrocks_spark.streaming.rollup import (
-        _CONTRIB,
         compact_rollup,
         merge_rollup_batch,
     )
@@ -437,8 +437,15 @@ def test_rollup_replay_is_idempotent(spark, tmp_path):
     """Crash-replay safety: re-merging the SAME micro-batch (same batch_id)
     must leave the state unchanged — a naive additive merge would
     double-count it.  A different batch_id with the same rows must add."""
+    import os
+
     from pyspark.sql import functions as F
 
+    from mysql_cdc_debezium_starrocks_spark.streaming._state import (
+        committed_fold,
+        numbered_ids,
+    )
+    from mysql_cdc_debezium_starrocks_spark.streaming.agg_mv import _CONTRIB
     from mysql_cdc_debezium_starrocks_spark.streaming.rollup import (
         compact_rollup,
         daily_view,
@@ -476,8 +483,11 @@ def test_rollup_replay_is_idempotent(spark, tmp_path):
     compact_rollup(spark, state, keep_last=1)
     cur = read_rollup(spark, state)
     assert sorted(map(tuple, daily_view(cur).collect())) == before
-    ids = {r[0] for r in cur.select("batch_id").distinct().collect()}
-    assert ids == {-1, 2}, f"old batches must fold into baseline, got {ids}"
+    root = os.path.join(state, _CONTRIB)
+    ids = numbered_ids(root)
+    assert ids == [2], f"only the newest batch stays live, got {ids}"
+    folded = committed_fold(root)[1]
+    assert folded == {0, 1}, f"old batches must fold into baseline, got {folded}"
 
 
 def test_rollup_compaction_crash_windows_are_safe(spark, tmp_path):
@@ -495,8 +505,8 @@ def test_rollup_compaction_crash_windows_are_safe(spark, tmp_path):
         _BASELINE,
         _COMMITTED,
     )
+    from mysql_cdc_debezium_starrocks_spark.streaming.agg_mv import _CONTRIB
     from mysql_cdc_debezium_starrocks_spark.streaming.rollup import (
-        _CONTRIB,
         compact_rollup,
         daily_view,
         merge_rollup_batch,
