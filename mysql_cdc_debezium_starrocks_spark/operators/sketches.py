@@ -242,12 +242,12 @@ def theta_merge(sketches: DataFrame, set_col: str, k: int = THETA_K) -> DataFram
     )
 
 
-def theta_combine(sketch: DataFrame, set_col: str) -> DataFrame:
-    """Combine a sketch table holding EXACTLY TWO sets under
-    theta = min(theta_a, theta_b): every retained hash below theta is a
-    uniform sample of the key space, so |sample ∩| * 2^32 / theta estimates
-    the true intersection — the set-algebra capability HLL lacks.  Returns
-    one row: theta, sample counts, inter/union/Jaccard estimates."""
+def _theta_sample(
+    sketch: DataFrame, set_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The combined sample of a TWO-set sketch table: its rows below
+    theta_g = min(theta_a, theta_b), each carrying theta_g, and the
+    one-row theta_g table itself."""
     thg = (
         sketch.groupBy(set_col)
         .agg(F.first("theta").alias("t"))
@@ -256,6 +256,16 @@ def theta_combine(sketch: DataFrame, set_col: str) -> DataFrame:
     sample = sketch.crossJoin(F.broadcast(thg)).filter(
         F.col("h") < F.col("theta_g")
     )
+    return sample, thg
+
+
+def theta_combine(sketch: DataFrame, set_col: str) -> DataFrame:
+    """Combine a sketch table holding EXACTLY TWO sets under
+    theta = min(theta_a, theta_b): every retained hash below theta is a
+    uniform sample of the key space, so |sample ∩| * 2^32 / theta estimates
+    the true intersection — the set-algebra capability HLL lacks.  Returns
+    one row: theta, sample counts, inter/union/Jaccard estimates."""
+    sample, thg = _theta_sample(sketch, set_col)
     est = (
         sample.groupBy("h")
         .agg(F.countDistinct(set_col).alias("nt"))
@@ -337,12 +347,7 @@ def theta_containment(sketch: DataFrame, set_col: str, fk_label: str) -> DataFra
     """Containment of the ``fk_label`` set in the other set of a TWO-set
     sketch table, as a ratio of sample counts below the combined theta (the
     2^32/theta scale cancels).  One row: inter_s, fk_s, containment_est."""
-    thg = (
-        sketch.groupBy(set_col)
-        .agg(F.first("theta").alias("t"))
-        .agg(F.min("t").alias("theta_g"))
-    )
-    sample = sketch.crossJoin(F.broadcast(thg)).filter(F.col("h") < F.col("theta_g"))
+    sample, _thg = _theta_sample(sketch, set_col)
     return (
         sample.groupBy("h")
         .agg(

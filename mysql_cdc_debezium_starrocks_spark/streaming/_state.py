@@ -200,16 +200,19 @@ def read_fold_paths(root: str, before: int | None = None) -> list[str]:
 
 
 def guard_folded_replay(root: str, batch_id: int) -> None:
-    """Refuse a replay of a batch id the committed baseline already
-    absorbed — rewriting its dir would serve the rows twice (baseline +
-    live).  For maintainers whose writer never reads state (so the
+    """Refuse a write at a batch id the committed baseline already
+    absorbed — its dir is hidden from every read (:func:`fold_state`), so
+    the rows would be lost, and a replay rewriting it would serve them
+    twice (baseline + live) to a reader that trusts the dir.  For
+    maintainers whose writer never reads state (so the
     ``read_fold_paths(before=...)`` check never trips)."""
     base = committed_fold(root)
     if base and batch_id in base[1]:
         raise RuntimeError(
             f"{root}: batch {batch_id} already folded into the committed "
-            "baseline but is replaying — compaction ran ahead of the "
-            "checkpoint commit horizon (keep_last too small?)"
+            "baseline — either compaction ran ahead of the checkpoint "
+            "commit horizon (keep_last too small?), or a restarted stream "
+            "recycled its batch ids and needs a fresh state_dir"
         )
 
 

@@ -2,14 +2,16 @@
 algebraic aggregates maintained per micro-batch as MERGEABLE PARTIALS — the
 CREATE MATERIALIZED VIEW analog, and the engine's one store of mergeable
 partials: the minute rollup (rollup.py), the streaming HLL registers
-(hll_ingest.py) and the table statistics (table_stats.py) are each a key
-projection plus one (keys, spec) constant over this module.
+(hll_ingest.py), the table statistics (table_stats.py) and the theta key
+sketches (theta_stats.py) are each a key projection plus one (keys, spec)
+constant over this module.
 
 The classical split (Gray et al., data-cube taxonomy): an aggregate is
 incrementally maintainable iff its partial state merges associatively —
   count/sum  -> add        min/max -> min/max
   avg        -> (sum, count) pair  ndv     -> HLL sketch union
   hist       -> fixed-width bin counts (element-wise add)
+  kmv        -> k smallest distinct values of the union
 Holistic aggregates (EXACT median/percentile) have no bounded mergeable
 state; ask for one and this module refuses loudly rather than silently
 recomputing — the scale answer is the ``hist`` aggregate below: a
@@ -20,25 +22,28 @@ mergeable-quantile formulation as the batch ``hist_quantile_bins`` query).
 
 Per micro-batch: ONE partial aggregation of the batch (map-side combined),
 written under ``contrib/batch=<id>`` (batch-keyed overwrite — replay
-regenerates the same dir).  Readers
-merge all contributions with the same associative functions — O(groups x
-batches) rows, folded by compaction into a committed baseline
-(``_state.fold_verbatim``).  Floating-point addition is the exception: it
-is not associative, so ``sum``/``avg`` partials of a float column are added
-as a left fold in batch-id order (:func:`_sum_in_batch_order`), in the read
-and in the compaction alike — count/sum/min/max/avg (and hist) are then
-bit-identical at any parallelism and across compaction.  ``ndv`` estimates
-are not: the sketch union's estimate depends on the order sketches merge
-in, and folding merges them in a different grouping than the read, so an
-estimate moves by a few counts across a compaction (``table_stats`` on 5
-random splits of the sf0.001 ``events`` table: ``value``, 952 distinct,
-estimated 958 before and 954 after).
+regenerates the same dir; a batch id the committed baseline already folded
+is refused, since every read skips its dir).  Readers merge all
+contributions with the same associative functions — O(groups x batches)
+rows, folded by compaction into a committed baseline
+(``_state.fold_verbatim``); the read is the compaction's merge
+(:func:`_refold_aggs`) plus a finalizing projection.  Two merges depend on
+the order of their inputs: floating-point addition, and the HLL sketch
+union, whose estimate moves with the order sketches merge in.  Both run as
+a left fold in batch-id order (:func:`_fold_in_batch_order`), and the
+baseline is tagged with the highest id it folds, so compaction keeps the
+fold sequence: every aggregate is bit-identical at any parallelism and
+across compaction.
 No shared state is ever read on the write path, so batch cost is
 O(batch), never O(view).
 
 Spec: ``{"out_col": ("fn", "in_col")}`` with fn in COUNT/SUM/MIN/MAX/AVG/NDV,
 plus ``("hist", col, lo, hi, nbins)`` for the quantile sketch (values outside
-[lo, hi) clamp to the edge bins, so totals are conserved).
+[lo, hi) clamp to the edge bins, so totals are conserved) and
+``("kmv", col, k)``: the k smallest distinct non-NULL values of ``col`` as a
+sorted array (a KMV sketch when ``col`` is a LONG hash).  Its partial
+collects a group's distinct values before it cuts them to k, so feed it a
+projection already limited to k rows per group.
 """
 
 from __future__ import annotations
@@ -52,12 +57,13 @@ from pyspark.sql.types import DoubleType, FloatType, StructType
 from ._state import (
     fold_state,
     fold_verbatim,
+    guard_folded_replay,
     read_batch_tagged,
     start_maintainer,
 )
 
 _CONTRIB = "contrib"
-MERGEABLE = ("count", "sum", "min", "max", "avg", "ndv", "hist")
+MERGEABLE = ("count", "sum", "min", "max", "avg", "ndv", "hist", "kmv")
 _HIST_MAX_BINS = 512
 
 
@@ -81,6 +87,8 @@ def _check_spec(spec: dict) -> None:
                     f"hist spec {k!r}: need lo < hi and 2 <= nbins <= "
                     f"{_HIST_MAX_BINS}, got lo={lo} hi={hi} nbins={nbins}"
                 )
+        elif v[0] == "kmv" and (len(v) != 3 or int(v[2]) < 1):
+            raise ValueError(f"kmv spec {k!r} must be ('kmv', col, k >= 1)")
 
 
 def _hist_bin(col: str, lo: float, hi: float, nbins: int):
@@ -154,77 +162,47 @@ def _partial_aggs(spec: dict) -> list:
             out.append(
                 F.hll_sketch_agg(F.col(col).cast("string")).alias(f"{name}__hll")
             )
+        elif fn == "kmv":
+            out.append(
+                F.slice(F.array_sort(F.collect_set(col)), 1, int(entry[2]))
+                .alias(f"{name}__kmv")
+            )
     return out
 
 
-def _sum_in_batch_order(col: str, schema: StructType):
-    """``sum(col)`` over partial rows tagged with ``batch``
-    (:func:`_state.read_batch_tagged`).  A float column is summed as a left
-    fold in batch-id order: Spark's ``sum`` adds in scan-partition order,
-    which would move the view by an ulp with the parallelism and across a
-    compaction.  Other types add exactly, in any order."""
-    dtype = schema[col].dataType
-    if not isinstance(dtype, (DoubleType, FloatType)):
-        return F.sum(col)
+def _fold_in_batch_order(col: str, dtype, step):
+    """Merge partial rows tagged with ``batch``
+    (:func:`_state.read_batch_tagged`) as a left fold ``step(acc, x)`` in
+    batch-id order, NULL partials skipped.  Spark's aggregates merge in
+    scan-partition or shuffle-fetch order, which would move an
+    order-dependent merge with the parallelism and across a compaction."""
     xs = F.array_sort(F.collect_list(F.struct("batch", F.col(col).alias("v"))))
     return F.aggregate(
         xs,
         F.lit(None).cast(dtype),
-        lambda acc, x: F.coalesce(acc + x["v"], acc, x["v"]),
+        lambda acc, x: F.coalesce(step(acc, x["v"]), acc, x["v"]),
     )
 
 
-def _merge_aggs(spec: dict, schema: StructType) -> list:
-    out = []
-    for name, entry in spec.items():
-        fn = entry[0]
-        if fn == "hist":
-            _fn, _col, lo, hi, nbins = entry
-            nbins = int(nbins)
-            w = (hi - lo) / nbins
-            arr = F.array(
-                *[
-                    F.coalesce(F.sum(f"{name}__h{i}"), F.lit(0))
-                    .cast("long")
-                    for i in range(nbins)
-                ]
-            )
-            total = F.aggregate(
-                arr, F.lit(0).cast("long"), lambda a, x: a + x
-            )
-            out.append(
-                F.struct(
-                    total.alias("n"),
-                    _hist_quantile(arr, total, 0.5, lo, w, nbins).alias("p50"),
-                    _hist_quantile(arr, total, 0.95, lo, w, nbins).alias("p95"),
-                    _hist_quantile(arr, total, 0.99, lo, w, nbins).alias("p99"),
-                ).alias(name)
-            )
-        elif fn == "count":
-            out.append(F.sum(f"{name}__cnt").alias(name))
-        elif fn == "sum":
-            out.append(_sum_in_batch_order(f"{name}__sum", schema).alias(name))
-        elif fn == "min":
-            out.append(F.min(f"{name}__min").alias(name))
-        elif fn == "max":
-            out.append(F.max(f"{name}__max").alias(name))
-        elif fn == "avg":
-            out.append(
-                (
-                    _sum_in_batch_order(f"{name}__sum", schema)
-                    / F.sum(f"{name}__cnt")
-                ).alias(name)
-            )
-        elif fn == "ndv":
-            out.append(
-                F.hll_sketch_estimate(F.hll_union_agg(f"{name}__hll")).alias(name)
-            )
-    return out
+def _sum_in_batch_order(col: str, schema: StructType):
+    """``sum(col)``: a float column is not associative under addition, so
+    it folds in batch-id order; other types add exactly, in any order."""
+    dtype = schema[col].dataType
+    if not isinstance(dtype, (DoubleType, FloatType)):
+        return F.sum(col)
+    return _fold_in_batch_order(col, dtype, lambda acc, x: acc + x)
+
+
+def _kmv_merge(name: str, k: int):
+    """The k smallest distinct values of a group's partial arrays: exact
+    and independent of merge order."""
+    vals = F.flatten(F.collect_list(f"{name}__kmv"))
+    return F.slice(F.array_sort(F.array_distinct(vals)), 1, k)
 
 
 def _refold_aggs(spec: dict, schema: StructType) -> list:
-    """Merge partials INTO partials (for baseline compaction): same
-    associative functions, partial-shaped output columns."""
+    """Merge partials INTO partials — the one merge: compaction stores its
+    output as the baseline, and the read finalizes it (:func:`_finals`)."""
     out = []
     for name, entry in spec.items():
         fn = entry[0]
@@ -236,7 +214,7 @@ def _refold_aggs(spec: dict, schema: StructType) -> list:
                 .alias(f"{name}__h{i}")
                 for i in range(nbins)
             )
-        elif fn in ("count",):
+        elif fn == "count":
             out.append(F.sum(f"{name}__cnt").alias(f"{name}__cnt"))
         elif fn == "sum":
             out.append(
@@ -252,7 +230,46 @@ def _refold_aggs(spec: dict, schema: StructType) -> list:
             )
             out.append(F.sum(f"{name}__cnt").alias(f"{name}__cnt"))
         elif fn == "ndv":
-            out.append(F.hll_union_agg(f"{name}__hll").alias(f"{name}__hll"))
+            # the union's estimate depends on merge order
+            out.append(
+                _fold_in_batch_order(f"{name}__hll", "binary", F.hll_union)
+                .alias(f"{name}__hll")
+            )
+        elif fn == "kmv":
+            out.append(_kmv_merge(name, int(entry[2])).alias(f"{name}__kmv"))
+    return out
+
+
+_PARTIAL = {"count": "cnt", "sum": "sum", "min": "min", "max": "max", "kmv": "kmv"}
+
+
+def _finals(spec: dict) -> list:
+    """The view's columns from one merged partial row per group."""
+    out = []
+    for name, entry in spec.items():
+        fn = entry[0]
+        if fn == "hist":
+            _fn, _col, lo, hi, nbins = entry
+            nbins = int(nbins)
+            w = (hi - lo) / nbins
+            arr = F.array(*[F.col(f"{name}__h{i}") for i in range(nbins)])
+            total = F.aggregate(
+                arr, F.lit(0).cast("long"), lambda a, x: a + x
+            )
+            out.append(
+                F.struct(
+                    total.alias("n"),
+                    _hist_quantile(arr, total, 0.5, lo, w, nbins).alias("p50"),
+                    _hist_quantile(arr, total, 0.95, lo, w, nbins).alias("p95"),
+                    _hist_quantile(arr, total, 0.99, lo, w, nbins).alias("p99"),
+                ).alias(name)
+            )
+        elif fn == "avg":
+            out.append((F.col(f"{name}__sum") / F.col(f"{name}__cnt")).alias(name))
+        elif fn == "ndv":
+            out.append(F.hll_sketch_estimate(f"{name}__hll").alias(name))
+        else:
+            out.append(F.col(f"{name}__{_PARTIAL[fn]}").alias(name))
     return out
 
 
@@ -266,8 +283,8 @@ def compact_agg_mv(
     """Fold all but the newest ``keep_last`` contribution dirs (plus the old
     baseline) into a new committed baseline of PARTIAL rows — the
     ``_state.fold_verbatim`` scheme, re-merging partials with the same
-    associative functions (float sums in batch-id order, the baseline
-    tagged with the highest id it folds)."""
+    associative functions (float sums and sketch unions in batch-id order,
+    the baseline tagged with the highest id it folds)."""
     _check_spec(spec)
     fold_verbatim(
         spark,
@@ -285,8 +302,11 @@ def merge_agg_mv_batch(
     spec: dict,
     batch_id: int,
 ) -> None:
-    """Fold one micro-batch to per-group partials in its own contrib dir."""
+    """Fold one micro-batch to per-group partials in its own contrib dir.
+    A batch id the committed baseline already folded raises (its dir would
+    be invisible to every read)."""
     _check_spec(spec)
+    guard_folded_replay(os.path.join(state_dir, _CONTRIB), batch_id)
     partials = batch.groupBy(*keys).agg(*_partial_aggs(spec))
     partials.write.mode("overwrite").parquet(
         os.path.join(state_dir, _CONTRIB, f"batch={batch_id}")
@@ -303,7 +323,8 @@ def read_agg_mv(
     contribs = read_batch_tagged(spark, root, ids, base)
     if contribs is None:
         raise FileNotFoundError(f"no agg-MV state under {state_dir}")
-    return contribs.groupBy(*keys).agg(*_merge_aggs(spec, contribs.schema))
+    merged = contribs.groupBy(*keys).agg(*_refold_aggs(spec, contribs.schema))
+    return merged.select(*keys, *_finals(spec))
 
 
 def start_agg_mv_load(

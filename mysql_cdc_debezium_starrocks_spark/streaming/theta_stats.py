@@ -3,20 +3,22 @@ set-overlap / referential-integrity monitoring over streaming state.
 
 The batch query ``sketch_theta_containment`` answers "are fact FKs
 resolving against the dimension?" with one pass; THIS module keeps the
-answer continuously fresh: each micro-batch folds its key column into a
-k-row KMV/theta sketch written under ``theta/batch=<id>`` (batch-keyed
-overwrite — crash-replay regenerates identical files, the rollup/scd2
-idempotency scheme), and reads merge all contributions with
-:func:`operators.sketches.theta_merge` — KMV sketches union losslessly
-(the k smallest hashes of a union are the k smallest of the per-chunk k
-smallest), proven bit-for-bit in tests, so the merged sketch equals the
-sketch of all data ever ingested without rescanning history.
+answer continuously fresh.  The state is one :mod:`agg_mv` view with no
+group keys and one ``("kmv", "h", k)`` spec: each micro-batch projects its
+key column to the hashes of its k-row KMV/theta sketch
+(:func:`operators.sketches.theta_sketch`) and writes them as one partial,
+and a read merges the partials to the k smallest distinct hashes and
+rebuilds the sketch with :func:`operators.sketches.theta_merge` — KMV
+sketches union losslessly (the k smallest hashes of a union are the k
+smallest of the per-chunk k smallest), proven bit-for-bit in tests, so the
+merged sketch equals the sketch of all data ever ingested without
+rescanning history.
 
 Cross-stream questions then cost O(k): :func:`containment_between` labels
 two maintained states fk/pk and runs
 :func:`operators.sketches.theta_containment`; ``overlap_between`` runs the
 full intersection/union/Jaccard estimate.  At 100 TB each state is a few
-KB per batch, the read-side merge is O(batches x k) tiny rows, and no
+KB per batch, the read-side merge is O(batches x k) hashes, and no
 monitor ever touches the fact table again.
 """
 
@@ -34,86 +36,62 @@ from ..operators.sketches import (
     theta_sketch,
 )
 from ..storage import pin_layout, read_json
-from ._state import (
-    committed_fold,
-    fold_verbatim,
-    numbered_ids,
-    read_fold_paths,
-    start_maintainer,
-)
+from ._state import start_maintainer
+from .agg_mv import _CONTRIB, compact_agg_mv, merge_agg_mv_batch, read_agg_mv
 
-_THETA = "theta"
 DEFAULT_K = 256
 _META = "_meta.json"
 
 
-def _theta_root(state_dir: str) -> str:
-    return os.path.join(state_dir, _THETA)
+def _spec(k: int) -> dict:
+    return {"h": ("kmv", "h", k)}
+
+
+def _meta_path(state_dir: str) -> str:
+    return os.path.join(state_dir, _META)
+
+
+def _has_data(state_dir: str) -> bool:
+    return os.path.isdir(os.path.join(state_dir, _CONTRIB))
+
+
+def _unpinned(state_dir: str) -> str:
+    return (
+        f"theta state {state_dir} has contributions but no {_META}; "
+        f"backfill it with the original maintenance k/seed (a read may "
+        f"pass that k explicitly instead)"
+    )
+
+
+def _maintained_k(state_dir: str, k: int | None = None) -> int:
+    """The k the state was maintained with (its ``_meta.json``).  A sketch
+    maintained at k is only valid read at THAT k: merging k-row
+    contributions then selecting k' > k smallest hashes silently flips a
+    big set into bogus 'exact mode' (fewer than k' distinct hashes
+    survive), so a different ``k`` raises, and state without the record
+    needs ``k`` passed explicitly rather than an assumed DEFAULT_K."""
+    meta = read_json(_meta_path(state_dir))
+    if meta is None:
+        if k is None and _has_data(state_dir):
+            raise ValueError(_unpinned(state_dir))
+        # no state yet: the k only has to pass the spec check
+        return DEFAULT_K if k is None else k
+    if k not in (None, meta["k"]):
+        raise ValueError(
+            f"theta state {state_dir} was maintained with k={meta['k']}; "
+            f"reading at k={k} would mis-estimate (exact-mode flip)"
+        )
+    return meta["k"]
 
 
 def compact_theta(
     spark: SparkSession, state_dir: str, keep_last: int = 2
 ) -> None:
     """Fold all but the newest ``keep_last`` sketch contributions (plus the
-    old baseline) into one committed k-row baseline — the
-    ``_state.fold_verbatim`` scheme applied to sketches.
-
-    KMV union is hash-level distinct, so the fold is exact: the k smallest
-    distinct hashes of the folded inputs ARE the union's sketch.
-    """
-    meta = _read_meta(state_dir)
-    if meta is None and _batch_ids(state_dir):
-        raise ValueError(
-            f"theta state {state_dir} has contributions but no {_META}; "
-            f"backfill it before compacting"
-        )
-    # without meta there are no contributions, so the fold has nothing to
-    # reduce and never calls the agg
-    fold_verbatim(
-        spark,
-        _theta_root(state_dir),
-        keep_last,
-        agg=lambda df: df.select("h")
-        .distinct()
-        .orderBy("h")
-        .limit(meta["k"])
-        .coalesce(1),
-    )
-
-
-def _batch_ids(state_dir: str) -> list[int]:
-    return numbered_ids(_theta_root(state_dir))
-
-
-def _meta_path(state_dir: str) -> str:
-    return os.path.join(_theta_root(state_dir), _META)
-
-
-def _read_meta(state_dir: str) -> dict | None:
-    return read_json(_meta_path(state_dir))
-
-
-def _ensure_meta(state_dir: str, k: int, seed: str) -> None:
-    """Record (k, seed) in the state dir on first write; later writes must
-    match.  A sketch maintained at k is only valid read at THAT k: merging
-    k-row contributions then selecting k' > k smallest hashes silently
-    flips a big set into bogus 'exact mode' (fewer than k' distinct hashes
-    survive), and a different seed is a different hash family entirely."""
-    pin_layout(
-        _meta_path(state_dir),
-        {"k": k, "seed": seed},
-        has_data=lambda: bool(
-            _batch_ids(state_dir) or committed_fold(_theta_root(state_dir))
-        ),
-        unpinned=(
-            f"theta state {state_dir} has contributions but no {_META}; "
-            f"backfill it with the original maintenance k/seed before writing"
-        ),
-        mismatch=lambda meta: (
-            f"theta state {state_dir} was maintained with k={meta['k']} "
-            f"seed={meta['seed']!r}; refusing write with k={k} seed={seed!r}"
-        ),
-    )
+    old baseline) into one committed k-hash baseline
+    (:func:`agg_mv.compact_agg_mv`).  KMV union is hash-level distinct, so
+    the fold is exact."""
+    compact_agg_mv(spark, state_dir, [], _spec(_maintained_k(state_dir)), keep_last)
 
 
 def update_theta_batch(
@@ -125,37 +103,30 @@ def update_theta_batch(
     k: int = DEFAULT_K,
     seed: str = "theta",
 ) -> None:
-    """Fold one micro-batch's ``col`` into a k-row sketch contribution.
+    """Fold one micro-batch's ``col`` into a k-hash sketch contribution.
 
     NULL keys never enter the sketch (``theta_sketch`` drops them — a
     NULL hash would bias theta, and a NULL FK is an orphan by definition,
-    not a key to sample).
-
-    A batch id already folded into the committed baseline is REFUSED: a
-    contribution dir whose id the baseline has folded is unreadable by design
-    (read_theta must skip those ids so a crash mid-compaction — baseline
-    committed, GC incomplete — never double-counts), so writing one would
-    silently lose the batch.  Ids recycle only when a stream restarts
-    with a reset checkpoint; that caller needs a fresh state_dir or an
-    epoch offset, and this guard turns the silent loss into an error.
+    not a key to sample).  (k, seed) are recorded in the state dir on
+    first write and later writes must match: a different seed is a
+    different hash family entirely.  A batch id the committed baseline
+    already folded raises (:func:`agg_mv.merge_agg_mv_batch`).
     """
-    _ensure_meta(state_dir, k, seed)
-    base = committed_fold(_theta_root(state_dir))
-    if base is not None and batch_id in base[1]:
-        raise ValueError(
-            f"theta state {state_dir}: batch_id {batch_id} was already "
-            f"folded into baseline {base[0]} — a restarted stream with "
-            f"recycled batch ids must write to a fresh state_dir (or "
-            f"offset its epoch ids); writing here would be invisible to "
-            f"read_theta"
-        )
+    pin_layout(
+        _meta_path(state_dir),
+        {"k": k, "seed": seed},
+        has_data=lambda: _has_data(state_dir),
+        unpinned=_unpinned(state_dir),
+        mismatch=lambda meta: (
+            f"theta state {state_dir} was maintained with k={meta['k']} "
+            f"seed={meta['seed']!r}; refusing write with k={k} seed={seed!r}"
+        ),
+    )
     sk = theta_sketch(
         batch.select(F.lit("s").alias("_set"), F.col(col)),
         "_set", col, k=k, seed=seed,
     )
-    sk.select("h").coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(_theta_root(state_dir), f"batch={batch_id}")
-    )
+    merge_agg_mv_batch(spark, state_dir, sk.select("h"), [], _spec(k), batch_id)
 
 
 def read_theta(
@@ -164,37 +135,15 @@ def read_theta(
 ) -> DataFrame:
     """The merged sketch of everything ever ingested: (set=label, h, theta).
 
-    Contribution files store only the hashes; theta is recomputed by the
-    merge (it must be — per-chunk thetas are not the union's theta).
-    ``k`` defaults to the k the state was maintained with (recorded in the
-    state's ``_meta.json``); passing a different k raises rather than
-    silently mis-estimating.
+    Contributions store only the hashes; theta is recomputed by the merge
+    (it must be — per-chunk thetas are not the union's theta).  ``k``
+    defaults to the k the state was maintained with (:func:`_maintained_k`).
     """
-    parts = read_fold_paths(_theta_root(state_dir))
-    if not parts:
-        raise FileNotFoundError(f"no theta sketch state under {state_dir}")
-    meta = _read_meta(state_dir)
-    if meta is None:
-        # pre-metadata state: the maintenance k is unknown, and reading at
-        # the wrong k mis-estimates (exact-mode flip) — mirror the write
-        # path's _ensure_meta guard instead of assuming DEFAULT_K
-        if k is None:
-            raise ValueError(
-                f"theta state {state_dir} has contributions but no {_META}; "
-                f"pass the original maintenance k explicitly (or backfill "
-                f"{_META}) before reading"
-            )
-    else:
-        state_k = meta["k"]
-        if k is None:
-            k = state_k
-        elif k != state_k:
-            raise ValueError(
-                f"theta state {state_dir} was maintained with k={state_k}; "
-                f"reading at k={k} would mis-estimate (exact-mode flip)"
-            )
-    rows = spark.read.parquet(*parts)
-    return theta_merge(rows.select(F.lit(label).alias("_set"), "h"), "_set", k)
+    k = _maintained_k(state_dir, k)
+    hashes = read_agg_mv(spark, state_dir, [], _spec(k)).select(
+        F.lit(label).alias("_set"), F.explode("h").alias("h")
+    )
+    return theta_merge(hashes, "_set", k)
 
 
 def containment_between(
@@ -272,9 +221,11 @@ def start_theta_load(
     keep_last: int = 2,
 ):
     """Wire a stream into the sketch maintainer; caller owns lifecycle.
+    ``theta_sketch`` ranks hashes with a window, which a streaming source
+    cannot run, so each batch goes through :func:`update_theta_batch`.
 
     ``compact_every`` = retention hook: every Nth batch folds old sketch
-    contributions into the committed k-row baseline (:func:`compact_theta`)
+    contributions into the committed k-hash baseline (:func:`compact_theta`)
     so dir counts stay bounded over an unbounded run."""
     return start_maintainer(
         source,

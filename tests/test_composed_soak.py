@@ -301,8 +301,8 @@ def test_all_maintainers_composed_100_batch_soak(spark, tmp_path):
     # per-maintainer solo soaks' job; here both runs fold, on shifted offsets)
     bound = KEEP_LAST + CADENCE
     for sub in ("dedup/sigs", "dedup/pairs", "ann/index", "mix/counts",
-                "mix/kept", "phash/sigs", "phash/pairs", "hll/regs",
-                "cusum/scores", "aggmv/contrib", "theta/theta",
+                "mix/kept", "phash/sigs", "phash/pairs", "hll/contrib",
+                "cusum/scores", "aggmv/contrib", "theta/contrib",
                 "budget/counts", "budget/kept"):
         n_c = len(numbered_ids(os.path.join(comp, sub)))
         n_s = len(numbered_ids(os.path.join(solo, sub)))

@@ -284,6 +284,7 @@ def test_theta_auto_compaction_preserves_sketch(spark, tmp_path):
     """compact_theta folds contributions into a k-row baseline whose merged
     sketch is IDENTICAL to the uncompacted merge (KMV union is exact over
     hash-level distinct)."""
+    from mysql_cdc_debezium_starrocks_spark.streaming.agg_mv import _CONTRIB
     from mysql_cdc_debezium_starrocks_spark.streaming.theta_stats import (
         compact_theta,
         read_theta,
@@ -299,7 +300,7 @@ def test_theta_auto_compaction_preserves_sketch(spark, tmp_path):
         update_theta_batch(spark, state_a, batch, "k", b, k=64)
         update_theta_batch(spark, state_b, batch, "k", b, k=64)
     compact_theta(spark, state_a, keep_last=2)
-    dirs = [d for d in os.listdir(os.path.join(state_a, "theta"))
+    dirs = [d for d in os.listdir(os.path.join(state_a, _CONTRIB))
             if d.startswith("batch=")]
     assert len(dirs) == 2  # 3 of 5 folded
     ha = sorted(r.h for r in read_theta(spark, state_a).collect())
@@ -316,8 +317,8 @@ def test_theta_crash_mid_compaction_is_invisible(spark, tmp_path):
         _COMMITTED,
         _FOLDED,
     )
+    from mysql_cdc_debezium_starrocks_spark.streaming.agg_mv import _CONTRIB
     from mysql_cdc_debezium_starrocks_spark.streaming.theta_stats import (
-        _THETA,
         compact_theta,
         read_theta,
         update_theta_batch,
@@ -332,9 +333,11 @@ def test_theta_crash_mid_compaction_is_invisible(spark, tmp_path):
     before = sorted(r.h for r in read_theta(spark, state).collect())
 
     # simulate the crash: a full baseline WITHOUT its commit marker
-    crash_dir = os.path.join(state, _THETA, _BASELINE, "v=0")
+    crash_dir = os.path.join(state, _CONTRIB, _BASELINE, "v=0")
     os.makedirs(os.path.join(crash_dir, "data"))
-    spark.range(1).select(F.lit(123).cast("long").alias("h")).write.mode(
+    spark.range(1).select(
+        F.array(F.lit(123).cast("long")).alias("h__kmv")
+    ).write.mode(
         "overwrite"
     ).parquet(os.path.join(crash_dir, "data"))
     with open(os.path.join(crash_dir, _FOLDED), "w") as f:
@@ -345,7 +348,7 @@ def test_theta_crash_mid_compaction_is_invisible(spark, tmp_path):
     # crash sits exactly where a real fold writes its baseline
     control = str(tmp_path / "control")
     shutil.copytree(state, control)
-    open(os.path.join(control, _THETA, _BASELINE, "v=0", _COMMITTED), "w").close()
+    open(os.path.join(control, _CONTRIB, _BASELINE, "v=0", _COMMITTED), "w").close()
     assert sorted(r.h for r in read_theta(spark, control).collect()) != before
 
     compact_theta(spark, state, keep_last=1)
@@ -374,7 +377,7 @@ def test_theta_refuses_recycled_batch_id(spark, tmp_path):
     compact_theta(spark, state, keep_last=2)  # folds batches 0 and 1
 
     fresh = spark.range(9000, 9100).select(F.col("id").cast("string").alias("k"))
-    with pytest.raises(ValueError, match="already.*folded|folded.*already"):
+    with pytest.raises(RuntimeError, match="already.*folded|folded.*already"):
         update_theta_batch(spark, state, fresh, "k", 0, k=32)
     # non-recycled ids still write, and the sketch stays readable
     update_theta_batch(spark, state, fresh, "k", 4, k=32)

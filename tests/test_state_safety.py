@@ -3,8 +3,9 @@ lookups, bucket-layout metadata enforcement, gc-swap crash repair,
 partition-pruned join-MV dim propagation, z-order wide-range scaling,
 deterministic shard export; the pre-metadata guards (materializer state
 and theta sketches refuse to guess a layout, the secondary index infers
-its modulus); NaN-safe agg-MV histogram binning; and the SCD2 history
-reader skipping an uncommitted open snapshot.
+its modulus); NaN-safe agg-MV histogram binning; agg-MV refusing a write
+its baseline already folded; and the SCD2 history reader skipping an
+uncommitted open snapshot.
 """
 
 import json
@@ -265,7 +266,7 @@ def test_theta_premeta_read_refuses_default_k(spark, tmp_path):
     state = str(tmp_path / "theta")
     batch = spark.range(100).select(F.col("id").cast("string").alias("k"))
     update_theta_batch(spark, state, batch, "k", 0, k=64)
-    os.remove(os.path.join(state, "theta", "_meta.json"))  # legacy state
+    os.remove(os.path.join(state, "_meta.json"))  # legacy state
     with pytest.raises(ValueError, match="no _meta.json"):
         read_theta(spark, state)
     assert read_theta(spark, state, k=64).count() == 64
@@ -310,6 +311,33 @@ def test_hist_nan_counts_as_null(spark, tmp_path):
     out = read_agg_mv(spark, state, ["g"], spec).collect()[0]
     assert out.q.n == 10  # NaN and NULL both uncounted
     assert out.q.p50 == pytest.approx(105.0)  # bin [100,110) midpoint
+
+
+def test_agg_mv_refuses_folded_batch_id(spark, tmp_path):
+    """A write at a batch id the committed baseline already folded lands in
+    a dir every read skips: agg_mv refuses it instead of losing the rows."""
+    from mysql_cdc_debezium_starrocks_spark.streaming.agg_mv import (
+        compact_agg_mv,
+        merge_agg_mv_batch,
+        read_agg_mv,
+    )
+
+    state, keys, spec = str(tmp_path / "mv"), ["g"], {"n": ("count", None)}
+
+    def rows(n):
+        return spark.range(n).select(F.lit("g").alias("g"))
+
+    def total():
+        return read_agg_mv(spark, state, keys, spec).collect()[0].n
+
+    for b in range(4):
+        merge_agg_mv_batch(spark, state, rows(10), keys, spec, b)
+    compact_agg_mv(spark, state, keys, spec, keep_last=2)  # folds 0 and 1
+    with pytest.raises(RuntimeError, match="already folded"):
+        merge_agg_mv_batch(spark, state, rows(5), keys, spec, 0)
+    assert total() == 40
+    merge_agg_mv_batch(spark, state, rows(5), keys, spec, 4)  # a fresh id
+    assert total() == 45
 
 
 def test_scd2_view_skips_uncommitted_open_snapshot(spark, tmp_path):

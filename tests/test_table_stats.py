@@ -61,3 +61,43 @@ def test_broadcast_recommendation(spark, tmp_path):
     assert recommend_broadcast(spark, state)["broadcast"] is True
     tiny = recommend_broadcast(spark, state, threshold_bytes=10)
     assert tiny["broadcast"] is False and tiny["rows"] > 0
+
+
+def test_ndv_is_order_fixed_across_parallelism_and_compaction(spark, tmp_path):
+    """ndv partials merge as a left fold in batch-id order, so the estimate
+    is one number: the same at another shuffle parallelism and across
+    compactions (an unordered sketch union moves it by tens of counts)."""
+    from mysql_cdc_debezium_starrocks_spark.catalog import load
+    from mysql_cdc_debezium_starrocks_spark.streaming.agg_mv import (
+        compact_agg_mv,
+    )
+    from mysql_cdc_debezium_starrocks_spark.streaming.table_stats import (
+        _KEYS,
+        _SPEC,
+    )
+
+    cols = ["event_id", "value"]
+    state = str(tmp_path / "stats")
+    e = load(spark, SF, "events")
+    for i, part in enumerate(e.randomSplit([1.0] * 5, seed=3)):
+        update_stats_batch(spark, state, part, cols, i)
+
+    def ndv():
+        return {r["col"]: r["ndv_est"] for r in read_stats(spark, state).collect()}
+
+    plain = ndv()
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        narrow = ndv()
+    finally:
+        spark.conf.set(key, prev)
+    compact_agg_mv(spark, state, _KEYS, _SPEC, keep_last=2)
+    kept2 = ndv()
+    compact_agg_mv(spark, state, _KEYS, _SPEC, keep_last=1)
+    kept1 = ndv()
+    assert plain == narrow == kept2 == kept1, (plain, narrow, kept2, kept1)
+    for c in cols:
+        exact = e.select(c).distinct().count()
+        assert abs(plain[c] - exact) <= 0.05 * exact, (c, plain[c], exact)
